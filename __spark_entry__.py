@@ -115,7 +115,7 @@ def _fresh_managed(spark: SparkSession, *names: str) -> None:
     for name in names:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         loc = f"{db_loc}/{name.lower()}"
-        fs, _jvm, jpath = _hadoop_fs(spark, loc)
+        _HPath, jpath, fs = _hadoop_fs(spark, loc)
         if fs.exists(jpath):
             fs.delete(jpath, True)
 
@@ -1899,7 +1899,8 @@ def _op_tt_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays the surviving commit order (v0 create → v1
     delete → v2 rebased update → v3 injected update); the claims fold
     asserts the conflict fired and the history is exactly linear."""
-    import astro_spark.operators.timetravel as _tt
+    from astro_spark.exceptions import ConcurrentWriteError
+    from astro_spark.sources.tt_log import TableLog
 
     _views(spark, sf_dir)
     nation = read_table(spark, sf_dir, "nation").select(
@@ -1910,16 +1911,16 @@ def _op_tt_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     a.tt_create(spark, nation, d, partition_by=["r"])
 
     def _armed_publish(interleave):
-        orig = _tt._publish
+        orig = TableLog.publish_manifest
         armed = {"on": True}
 
-        def racing(spark_, fs, HPath, root, version, manifest):
+        def racing(log, version, manifest):
             if armed["on"] and manifest.get("op") != "create":
                 armed["on"] = False
                 interleave()
-            return orig(spark_, fs, HPath, root, version, manifest)
+            return orig(log, version, manifest)
 
-        _tt._publish = racing
+        TableLog.publish_manifest = racing
         return orig
 
     # round 1 — disjoint: B (delete r=3) steals A's (update r=0) slot
@@ -1927,7 +1928,7 @@ def _op_tt_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         a.tt_update_where(spark, d, {"k": "k + 1000"}, "r = 0")
     finally:
-        _tt._publish = orig
+        TableLog.publish_manifest = orig
     # round 2 — same partition: both rewrite r=1; loser must raise
     orig = _armed_publish(
         lambda: a.tt_update_where(spark, d, {"k": "k + 77"}, "r = 1")
@@ -1935,10 +1936,10 @@ def _op_tt_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     conflict_surfaced = False
     try:
         a.tt_update_where(spark, d, {"k": "k + 500000"}, "r = 1")
-    except _tt.ConcurrentWriteError:
+    except ConcurrentWriteError:
         conflict_surfaced = True
     finally:
-        _tt._publish = orig
+        TableLog.publish_manifest = orig
     versions = sorted(
         r.version for r in a.tt_history(spark, d).collect()
     )

@@ -31,3 +31,7 @@ class IllegalIdentifierError(AstroSparkError):
 class FileExistsConflictError(AstroSparkError):
     """Raised by export_to_file(if_exists='exception') when the target file
     already exists (reference: ``sql/operators/export_to_file.py``)."""
+
+
+class ConcurrentWriteError(AstroSparkError):
+    """Another writer committed the version this writer raced for."""

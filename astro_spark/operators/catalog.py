@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..sources.writers import _hadoop_fs
 from ..table import Table, validate_identifier
 
 
@@ -172,7 +173,6 @@ def auto_compact(
     table is left untouched — callers can schedule this after every
     CDC drain and pay only when it matters.
     """
-    from ..sources.writers import _hadoop_fs
     from ..table import Table as _Table
 
     t = table if isinstance(table, _Table) else _Table(str(table), temp=False)
@@ -184,7 +184,7 @@ def auto_compact(
     if not loc:
         return 0
     path = loc[0]["data_type"]
-    fs, _jvm, jpath = _hadoop_fs(spark, path)
+    _HPath, jpath, fs = _hadoop_fs(spark, path)
     it = fs.listFiles(jpath, True)
     small = 0
     while it.hasNext():
@@ -197,14 +197,6 @@ def auto_compact(
     if small < min_small_files:
         return 0
     return compact_table(spark, t, target_file_mb=target_file_mb)
-
-
-def _table_fs(spark: SparkSession, location: str):
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(location)
-    return HPath, root, root.getFileSystem(hconf)
 
 
 def vacuum_table(spark: SparkSession, table: Table | str) -> int:
@@ -226,7 +218,7 @@ def vacuum_table(spark: SparkSession, table: Table | str) -> int:
     location = _parquet_location(spark, t.qualified_name)
     if location is None:
         return 0
-    HPath, root, fs = _table_fs(spark, location)
+    _HPath, root, fs = _hadoop_fs(spark, location)
     protected = set()
     for st in fs.listStatus(root):
         name = st.getPath().getName()
@@ -291,7 +283,7 @@ def recover_table(spark: SparkSession, table: Table | str) -> int:
     location = _parquet_location(spark, t.qualified_name)
     if location is None:
         return 0
-    HPath, root, fs = _table_fs(spark, location)
+    HPath, root, fs = _hadoop_fs(spark, location)
     manifests = [
         st.getPath()
         for st in fs.listStatus(root)

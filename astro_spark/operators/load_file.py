@@ -95,13 +95,8 @@ def load_file(
                 "lists, not a Hive layout; use tt_optimize(zorder_by=) "
                 "for clustering after the load"
             )
-        from .timetravel import (
-            _fs,
-            _head,
-            _list_versions,
-            _partition_cols_of,
-            save_dataframe_versioned,
-        )
+        from ..sources.tt_log import TableLog, _partition_cols_of
+        from .timetravel import save_dataframe_versioned
 
         target = output_table
         if partition_by:
@@ -118,9 +113,9 @@ def load_file(
             # from the handle) — a silent partition_by mismatch would
             # otherwise commit files laid out by the OLD columns while
             # the caller believes the new ones apply
-            HPath, _p, fs = _fs(spark, output_table.root)
-            if _list_versions(fs, HPath, output_table.root):
-                _v, head = _head(spark, fs, HPath, output_table.root)
+            log = TableLog(output_table.root, spark)
+            if log.versions():
+                _v, head = log.head()
                 actual = _partition_cols_of(head)
                 if list(partition_by) != actual:
                     raise ValueError(

@@ -308,10 +308,9 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
         # SELECT, Delta's semantics).  PARTITIONED BY lays the table
         # out per partition value (timetravel partition_cols).
         from ..exceptions import AstroSparkError
+        from ..sources.tt_log import TableLog
         from ..table import validate_identifier
         from .timetravel import (
-            _fs,
-            _list_versions,
             tt_create,
             tt_overwrite,
             tt_register,
@@ -338,8 +337,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
                 for c in m.group(5).split(",")
             ]
         src_sql = m.group(7)
-        HPath, _p, fs = _fs(spark, root)
-        existing = _list_versions(fs, HPath, root)
+        existing = TableLog(root, spark).versions()
         if existing and if_not_exists:
             # IF NOT EXISTS no-op: keep the table, (re)register the
             # name, return the current head — the SELECT never runs
@@ -611,15 +609,15 @@ def _rewrite_timetravel_reads(
             r"('[^']*'|\d+(?:\.\d+)?)"
         )
 
-    from .timetravel import _fs, _list_versions, tt_read
+    from ..sources.tt_log import TableLog
+    from .timetravel import tt_read
 
     created: list[str] = []
 
     def _sub(m: "re.Match[str]") -> str:
         root, kind, val = m.group(1), m.group(2).lower(), m.group(3)
         try:
-            HPath, _p, fs = _fs(spark, root)
-            if not _list_versions(fs, HPath, root):
+            if not TableLog(root, spark).versions():
                 return m.group(0)  # not a versioned root: leave verbatim
         except Exception:
             return m.group(0)
@@ -651,8 +649,7 @@ def _rewrite_timetravel_reads(
 
     def _resolve_head(root: str) -> str | None:
         try:
-            HPath, _p, fs = _fs(spark, root)
-            if not _list_versions(fs, HPath, root):
+            if not TableLog(root, spark).versions():
                 return None
         except Exception:
             return None

@@ -6,15 +6,11 @@ implicitly by CTAS-ing ``USING DELTA`` (``databases/databricks/
 delta.py:168-187``) and letting the Delta log provide versions.  This
 engine runs on catalogs without Delta (delta-spark is uninstallable in
 this environment — COVERAGE.md), so the log protocol is re-expressed
-minimally on any Hadoop filesystem:
-
-Layout::
-
-    <root>/
-      _log/v00000000.json          # {"files": [...], "op", "ts", "schema"}
-      _log/v00000001.json          # or {"base": ckpt, "add": [...], "remove": [...]}
-      _log/ckpt-<uuid>.parquet     # checkpoint: complete (file, stats) snapshot
-      files/<commit-uuid>/part-*.parquet   # immutable data files
+minimally on any Hadoop filesystem.  The log format itself — layout,
+manifests, checkpoints, the atomic publish — lives in
+``sources/tt_log.py``, shared with the Spark-free ``versioned_parquet``
+data source; this module is the Spark half: it writes data files,
+checks and scans them, and decides what each commit publishes.
 
 Every commit writes its NEW data files under a fresh ``files/<uuid>/``
 directory (existing files are never touched — writers never conflict on
@@ -38,17 +34,18 @@ columnar checkpoint scan, and ``tt_history`` never parses a file list
 at all (``n_files`` rides in every manifest header).
 
 Concurrent-writer isolation is optimistic, Delta-style: the manifest is
-created with ``FileSystem.create(path, overwrite=False)`` — atomic
-put-if-absent on HDFS/local (object stores without atomic create need
-an external lock; same caveat Delta's S3 single-writer LogStore
-documents).  Two writers racing to commit version N: one wins, the
-loser gets ``ConcurrentWriteError`` and retries against the new state
-(``tt_append`` auto-retries — its file list is state-independent;
-delete/update/merge/OPTIMIZE-WHERE rebase with file-level conflict
-resolution via ``_publish_cow`` — Delta's WriteSerializable: writers
-on disjoint partitions both land, same-partition rewrites conflict;
-``tt_overwrite``/``tt_restore`` surface the conflict, because what they
-mean to replace has changed).
+published as a complete temp file moved into place with ``link(2)``
+(local/NFS roots) or ``FileSystem.rename`` (other Hadoop filesystems) —
+an atomic put-if-absent that refuses an existing version (object stores
+without atomic rename need an external lock; same caveat Delta's S3
+single-writer LogStore documents).  Two writers racing to commit
+version N: one wins, the loser gets ``ConcurrentWriteError`` and retries
+against the new state (``tt_append`` auto-retries — its file list is
+state-independent; delete/update/merge/OPTIMIZE-WHERE rebase with
+file-level conflict resolution via ``_publish_cow`` — Delta's
+WriteSerializable: writers on disjoint partitions both land,
+same-partition rewrites conflict; ``tt_overwrite``/``tt_restore``
+surface the conflict, because what they mean to replace has changed).
 
 Scale: a manifest is O(files-in-version) JSON read once per query
 plan — the same cost profile as Delta's checkpointed log.  Reads pass
@@ -65,19 +62,30 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
 
-from ..exceptions import AstroSparkError
-
-
-class ConcurrentWriteError(AstroSparkError):
-    """Another writer committed the version this writer raced for."""
+from ..exceptions import AstroSparkError, ConcurrentWriteError
+from ..sources.tt_log import (
+    _PART_PREFIX,
+    TableLog,
+    _abs,
+    _carry_constraints,
+    _carry_generated,
+    _carry_header,
+    _carry_partition,
+    _carry_props,
+    _carry_stats_cols,
+    _copy_body,
+    _generated_cols_of,
+    _is_external,
+    _keep_file,
+    _partition_cols_of,
+    _partition_values,
+    _stats_cols_of,
+)
+from ..sources.writers import _hadoop_fs
 
 
 class ConstraintViolationError(AstroSparkError):
     """A write carried rows that fail a table CHECK constraint."""
-
-
-_LOG = "_log"
-_PAD = 8
 
 
 def _named_root(spark: SparkSession, root: str) -> str:
@@ -92,140 +100,10 @@ def _named_root(spark: SparkSession, root: str) -> str:
     return root
 
 
-def _fs(spark: SparkSession, root: str):
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    p = HPath(root)
-    return HPath, p, p.getFileSystem(hconf)
-
-
-def _manifest_name(version: int) -> str:
-    return f"v{version:0{_PAD}d}.json"
-
-
-def _is_external(entry: str) -> bool:
-    """Manifest file entries are root-relative (``files/<uuid>/...``)
-    EXCEPT for shallow-clone references, which are absolute paths/URIs
-    into another table's root.  External entries are readable but never
-    vacuum-deleted (they belong to the source table)."""
-    return entry.startswith("/") or "://" in entry
-
-
-def _abs(root: str, entry: str) -> str:
-    return entry if _is_external(entry) else f"{root.rstrip('/')}/{entry}"
-
-
-def _list_versions(fs, HPath, root: str) -> list[int]:
-    log = HPath(f"{root}/{_LOG}")
-    if not fs.exists(log):
-        return []
-    out = []
-    for st in fs.listStatus(log):
-        name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                out.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _read_manifest(spark: SparkSession, fs, HPath, root: str, version: int) -> dict:
-    path = HPath(f"{root}/{_LOG}/{_manifest_name(version)}")
-    stream = fs.open(path)
-    try:
-        txt = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(txt)
-
-
-def _publish(
-    spark: SparkSession,
-    fs,
-    HPath,
-    root: str,
-    version: int,
-    manifest: dict,
-) -> None:
-    """Atomic put-if-absent of the version manifest — the commit point.
-
-    The manifest must appear atomically WITH its content (r14): the
-    former create(overwrite=False)-then-write claimed the slot
-    atomically but exposed a zero-length file to concurrent readers
-    until the JSON landed (a racing reader got JSONDecodeError — the
-    linearizability property test caught it), and a writer crash inside
-    the window would wedge the slot with an empty manifest.  Local
-    roots write a hidden temp file and ``os.link`` it into place
-    (link(2) fails EEXIST atomically; content is complete from the
-    first visible instant — same local/NFS scope as before).  Remote
-    filesystems write a temp and ``fs.rename`` (HDFS rename is atomic
-    and refuses an existing destination); object stores without atomic
-    rename need a coordination service, exactly Delta's contract."""
-    import os as _os
-    import uuid as _uuid
-
-    payload = json.dumps(manifest).encode("utf-8")
-    name = _manifest_name(version)
-    local = "://" not in root or root.startswith("file:")
-    if local:
-        lroot = root[5:] if root.startswith("file:") else root
-        lroot = lroot if lroot.startswith("/") else "/" + lroot
-        ldir = f"{lroot.rstrip('/')}/{_LOG}"
-        _os.makedirs(ldir, exist_ok=True)
-        tmp = f"{ldir}/.{name}.tmp-{_uuid.uuid4().hex}"
-        with open(tmp, "wb") as fh:
-            fh.write(payload)
-        try:
-            _os.link(tmp, f"{ldir}/{name}")
-        except FileExistsError as exc:
-            raise ConcurrentWriteError(
-                f"version {version} was committed by another writer"
-            ) from exc
-        except OSError:
-            # Mounts without hard-link support (SMB/FAT/some FUSE) raise
-            # EPERM/ENOTSUP from link(2) (ADVICE r14): fall back to the
-            # old O_CREAT|O_EXCL open — the empty-file exposure window
-            # is the prior status quo on exactly those filesystems.
-            try:
-                fd = _os.open(
-                    f"{ldir}/{name}", _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY
-                )
-            except FileExistsError as exc:
-                raise ConcurrentWriteError(
-                    f"version {version} was committed by another writer"
-                ) from exc
-            try:
-                _os.write(fd, payload)
-            finally:
-                _os.close(fd)
-        finally:
-            try:
-                _os.remove(tmp)
-            except OSError:
-                pass
-        return
-    log = HPath(f"{root}/{_LOG}")
-    fs.mkdirs(log)
-    tmp = HPath(f"{root}/{_LOG}/.{name}.tmp-{_uuid.uuid4().hex}")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(payload))
-    finally:
-        stream.close()
-    try:
-        renamed = fs.rename(tmp, HPath(f"{root}/{_LOG}/{name}"))
-    except Exception as exc:
-        fs.delete(tmp, False)
-        raise ConcurrentWriteError(
-            f"version {version} was committed by another writer"
-        ) from exc
-    if not renamed:
-        fs.delete(tmp, False)
-        raise ConcurrentWriteError(
-            f"version {version} was committed by another writer"
-        )
+def _open(spark: SparkSession, root: str) -> TableLog:
+    """The log of a root or registered name; callers use ``log.root``
+    (local roots made absolute) for every Spark path too."""
+    return TableLog(_named_root(spark, root), spark)
 
 
 def _tt_meta_of(m: dict) -> tuple:
@@ -254,19 +132,25 @@ def _cow_extra(manifest: dict) -> dict:
             if manifest.get("schema") is not None
             else {}
         ),
-        **_carry_constraints(manifest),
-        **_carry_stats_cols(manifest),
-        **_carry_partition(manifest),
-        **_carry_generated(manifest),
-        **_carry_props(manifest),
+        **_carry_header(manifest),
+    }
+
+
+def _header_copy(manifest: dict) -> dict:
+    """A version's table header verbatim — what RESTORE and CLONE
+    reinstate alongside its file list."""
+    return {
+        k: manifest[k]
+        for k in (
+            "schema", "constraints", "stats_cols", "partition_cols",
+            "generated_cols", "properties",
+        )
+        if manifest.get(k) is not None
     }
 
 
 def _publish_cow(
-    spark: SparkSession,
-    fs,
-    HPath,
-    root: str,
+    log: TableLog,
     head_v: int,
     manifest: dict,
     added: list[str],
@@ -282,7 +166,7 @@ def _publish_cow(
     serializable, ``databases/databricks/delta.py:357-442`` — Delta's
     default isolation resolves conflicts at FILE granularity).
 
-    A lost ``_publish`` race does NOT automatically fail: the
+    A lost publish race does NOT automatically fail: the
     transaction REBASES onto the new head and retries, succeeding iff
 
     - no interleaved commit removed/rewrote any of THIS transaction's
@@ -295,31 +179,30 @@ def _publish_cow(
       constraints, layout, generated columns, properties).
 
     Interleaved APPENDs always survive alongside this commit (their
-    files carry over through the rebased ``_body_delta``) — allowed
+    files carry over through the rebased ``body_delta``) — allowed
     under WriteSerializable: the rewrite operates on its snapshot, the
     append's rows were never in scope."""
     base_meta = _tt_meta_of(manifest)
+    root = log.root
     for _ in range(max_retries):
         new_manifest = {
-            **_body_delta(
-                spark, fs, HPath, root, manifest, added, removed, added_stats
-            ),
+            **log.body_delta(manifest, added, removed, added_stats),
             "op": op,
             "ts": time.time(),
             **extra,
         }
         try:
-            _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+            log.publish_manifest(head_v + 1, new_manifest)
             return head_v + 1
         except ConcurrentWriteError:
-            head_v, manifest = _head(spark, fs, HPath, root)
+            head_v, manifest = log.head()
             if _tt_meta_of(manifest) != base_meta:
                 raise ConcurrentWriteError(
                     f"{op} on {root}: a concurrent commit changed table "
                     "metadata (schema/constraints/layout/properties) — "
                     "re-run against the new snapshot"
                 )
-            live, _s = _resolve(spark, fs, HPath, root, manifest)
+            live, _s = log.resolve(manifest)
             live_set = set(live)
             gone = [f for f in removed if f not in live_set]
             if gone:
@@ -334,28 +217,17 @@ def _publish_cow(
     )
 
 
-# Hive-style layout prefix for engine-written partitioned commits: the
-# partition column is DUPLICATED into a `__p_<col>` path column before
-# partitionBy, so the real column stays physically in the data files
-# (reads remain plain explicit-file-list scans — no path inference, no
-# mixed-depth basePath conflicts) while files still split one-partition-
-# value-per-file, giving exact per-file [v, v] skipping bounds.
-_PART_PREFIX = "__p_"
-
-
 def _write_data_files(
     spark: SparkSession,
     df: DataFrame,
-    root: str,
-    fs,
-    HPath,
+    log: TableLog,
     partition_cols: list[str] | None = None,
 ) -> list[str]:
     """Write df's rows as immutable files under files/<uuid>/ and return
     their root-relative paths.  Nothing references them until a manifest
     is published, so a crash here leaves invisible garbage only.  With
     ``partition_cols`` the layout splits per partition value via
-    ``__p_``-prefixed path columns (see ``_PART_PREFIX``)."""
+    ``__p_``-prefixed path columns (see ``tt_log._PART_PREFIX``)."""
     from pyspark.sql import functions as F
 
     commit_dir = f"files/{uuid.uuid4().hex}"
@@ -378,19 +250,8 @@ def _write_data_files(
             .write.mode("overwrite")
             .partitionBy(*[f"{_PART_PREFIX}{c}" for c in partition_cols])
         )
-    writer.parquet(f"{root}/{commit_dir}")
-    out: list[str] = []
-
-    def _walk(path, rel_prefix: str) -> None:
-        for st in fs.listStatus(path):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                _walk(st.getPath(), f"{rel_prefix}{name}/")
-            elif name.endswith(".parquet"):
-                out.append(f"{rel_prefix}{name}")
-
-    _walk(HPath(f"{root}/{commit_dir}"), f"{commit_dir}/")
-    return sorted(out)
+    writer.parquet(f"{log.root}/{commit_dir}")
+    return log.parquet_files(commit_dir)
 
 
 _STATS_TYPES = (
@@ -471,178 +332,6 @@ def _file_stats(
     return out
 
 
-def _carry_stats(manifest: dict, files: list[str], new_stats: dict) -> dict:
-    """Stats for a new manifest: carried-over files keep their recorded
-    ranges, new files contribute theirs; files with no stats are simply
-    absent (the reader keeps them — absence is never evidence)."""
-    old = manifest.get("stats") or {}
-    kept = {f: old[f] for f in files if f in old}
-    kept.update(new_stats)
-    return kept
-
-
-def _inline_max(spark: SparkSession) -> int:
-    """File-count threshold above which the snapshot moves from inline
-    JSON into a parquet checkpoint — Delta's checkpoint cadence knob."""
-    try:
-        return int(spark.conf.get("spark.astro.tt.inlineFilesMax", "1000"))
-    except Exception:  # pragma: no cover - exotic conf backend
-        return 1000
-
-
-def _write_checkpoint(
-    spark: SparkSession, fs, HPath, root: str, files: list[str], stats: dict
-) -> str:
-    """Write the complete (file, stats) snapshot as a parquet checkpoint
-    under _log/ and return its root-relative ref.  Driver-side Arrow —
-    a log-maintenance write must not cost a Spark job.  The checkpoint
-    is invisible until a manifest referencing it publishes."""
-    import io
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rel = f"{_LOG}/ckpt-{uuid.uuid4().hex}.parquet"
-    table = pa.table(
-        {
-            "file": pa.array(files, type=pa.string()),
-            "stats": pa.array(
-                [json.dumps(stats[f]) if f in stats else None for f in files],
-                type=pa.string(),
-            ),
-        }
-    )
-    buf = io.BytesIO()
-    pq.write_table(table, buf)
-    fs.mkdirs(HPath(f"{root}/{_LOG}"))
-    stream = fs.create(HPath(f"{root}/{rel}"), False)
-    try:
-        stream.write(bytearray(buf.getvalue()))
-    finally:
-        stream.close()
-    return rel
-
-
-def _read_checkpoint(
-    spark: SparkSession, fs, HPath, root: str, rel: str
-) -> tuple[list[str], dict]:
-    import io
-
-    import pyarrow.parquet as pq
-
-    stream = fs.open(HPath(f"{root}/{rel}"))
-    try:
-        data = bytes(
-            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
-    t = pq.read_table(io.BytesIO(data))
-    files = t.column("file").to_pylist()
-    raw = t.column("stats").to_pylist()
-    stats = {f: json.loads(s) for f, s in zip(files, raw) if s is not None}
-    return files, stats
-
-
-def _resolve(
-    spark: SparkSession, fs, HPath, root: str, manifest: dict
-) -> tuple[list[str], dict]:
-    """(complete file list, per-file stats) of a manifest — inline form
-    verbatim; checkpoint form = base snapshot minus ``remove`` plus
-    ``add``.  One checkpoint read per plan, Delta's cost profile."""
-    if "base" not in manifest:
-        return manifest.get("files") or [], manifest.get("stats") or {}
-    files, stats = _read_checkpoint(spark, fs, HPath, root, manifest["base"])
-    rm = set(manifest.get("remove") or [])
-    if rm:
-        files = [f for f in files if f not in rm]
-        stats = {f: s for f, s in stats.items() if f not in rm}
-    files = files + (manifest.get("add") or [])
-    stats.update(manifest.get("add_stats") or {})
-    return files, stats
-
-
-def _body_full(
-    spark: SparkSession,
-    fs,
-    HPath,
-    root: str,
-    files: list[str],
-    stats: dict,
-) -> dict:
-    """File-list body for a commit whose COMPLETE snapshot is known
-    (create/overwrite/optimize, and compactions): inline while small,
-    checkpoint ref beyond the knob."""
-    if len(files) <= _inline_max(spark):
-        body: dict = {"files": files, "n_files": len(files)}
-        if stats:
-            body["stats"] = stats
-        return body
-    ref = _write_checkpoint(spark, fs, HPath, root, files, stats)
-    return {"base": ref, "add": [], "remove": [], "n_files": len(files)}
-
-
-def _body_delta(
-    spark: SparkSession,
-    fs,
-    HPath,
-    root: str,
-    prev: dict,
-    added: list[str],
-    removed: list[str],
-    added_stats: dict,
-) -> dict:
-    """File-list body for an incremental commit (append/merge/delete):
-    O(delta) JSON on a checkpointed table — prev's base carries over,
-    the delta tail grows by this commit's add/remove — compacting into
-    a fresh checkpoint only when the tail outgrows the knob."""
-    rm = set(removed)
-    if "base" in prev:
-        prev_add = prev.get("add") or []
-        add = [f for f in prev_add if f not in rm] + added
-        prev_add_set = set(prev_add)
-        remove = (prev.get("remove") or []) + [
-            f for f in removed if f not in prev_add_set
-        ]
-        n_files = int(prev["n_files"]) - len(removed) + len(added)
-        if len(add) + len(remove) <= _inline_max(spark):
-            add_set = set(add)
-            add_stats = {
-                f: s
-                for f, s in {**(prev.get("add_stats") or {}), **added_stats}.items()
-                if f in add_set
-            }
-            body: dict = {
-                "base": prev["base"],
-                "add": add,
-                "remove": remove,
-                "n_files": n_files,
-            }
-            if add_stats:
-                body["add_stats"] = add_stats
-            return body
-        files, stats = _resolve(spark, fs, HPath, root, prev)
-        files = [f for f in files if f not in rm] + added
-        stats = {f: s for f, s in stats.items() if f not in rm}
-        stats.update(added_stats)
-        return _body_full(spark, fs, HPath, root, files, stats)
-    kept = [f for f in (prev.get("files") or []) if f not in rm]
-    files = kept + added
-    stats = _carry_stats(prev, kept, added_stats)
-    return _body_full(spark, fs, HPath, root, files, stats)
-
-
-def _copy_body(manifest: dict) -> dict:
-    """The file-list body fields of an existing manifest, verbatim —
-    checkpoint refs are immutable, so RESTORE and metadata-only commits
-    may share them by reference."""
-    return {
-        k: manifest[k]
-        for k in ("files", "stats", "base", "add", "remove", "add_stats", "n_files")
-        if k in manifest
-    }
-
-
 def _schema_json(df: DataFrame) -> str:
     return json.dumps(df.schema.jsonValue())
 
@@ -719,8 +408,7 @@ def save_dataframe_versioned(
     ``tt_append``.  Returns the committed version."""
     if if_exists not in ("replace", "append"):
         raise ValueError(f"invalid if_exists: {if_exists!r}")
-    HPath, _p, fs = _fs(spark, target.root)
-    if not _list_versions(fs, HPath, target.root):
+    if not TableLog(target.root, spark).versions():
         return tt_create(
             spark,
             df,
@@ -763,9 +451,9 @@ def tt_create(
     "CAST(date_trunc('DAY', ts) AS DATE)"}`` — appends only carry
     ``ts``); a write that SUPPLIES the column must satisfy the
     expression or fails before publishing."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    if _list_versions(fs, HPath, root):
+    log = _open(spark, root)
+    root = log.root
+    if log.versions():
         raise AstroSparkError(f"versioned table already exists at {root}")
     partition_by = list(partition_by or [])
     header = {
@@ -784,20 +472,18 @@ def tt_create(
             raise AstroSparkError(
                 f"partition_by column {c!r} not in the DataFrame"
             )
-    files = _write_data_files(
-        spark, df, root, fs, HPath, partition_cols=partition_by
-    )
+    files = _write_data_files(spark, df, log, partition_cols=partition_by)
     stats = _new_file_stats(
         spark, root, files, header, df
     ) if (stats_cols or partition_by) else {}
     manifest = {
-        **_body_full(spark, fs, HPath, root, files, stats),
+        **log.body_full(files, stats),
         "op": "create",
         "ts": time.time(),
         "schema": _schema_json(df),
         **header,
     }
-    _publish(spark, fs, HPath, root, 0, manifest)
+    log.publish_manifest(0, manifest)
     return 0
 
 
@@ -818,16 +504,6 @@ def _check_constraints(df: DataFrame, manifest: dict, what: str) -> None:
             )
 
 
-def _carry_constraints(manifest: dict) -> dict:
-    c = manifest.get("constraints")
-    return {"constraints": c} if c else {}
-
-
-def _carry_props(manifest: dict) -> dict:
-    p = manifest.get("properties")
-    return {"properties": p} if p else {}
-
-
 def tt_add_constraint(
     spark: SparkSession, root: str, name: str, expr: str
 ) -> int:
@@ -836,9 +512,9 @@ def tt_add_constraint(
     then commits a metadata-only version carrying the constraint —
     every later append/merge/overwrite must satisfy it or fails before
     publishing."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    log = _open(spark, root)
+    root = log.root
+    head_v, manifest = log.head()
     if name in (manifest.get("constraints") or {}):
         raise AstroSparkError(f"constraint {name!r} already exists")
     trial = {**manifest, "constraints": {name: expr}}
@@ -849,15 +525,14 @@ def tt_add_constraint(
         "ts": time.time(),
         "constraints": {**(manifest.get("constraints") or {}), name: expr},
     }
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    log.publish_manifest(head_v + 1, new_manifest)
     return head_v + 1
 
 
 def tt_drop_constraint(spark: SparkSession, root: str, name: str) -> int:
     """Delta ``ALTER TABLE ... DROP CONSTRAINT``: metadata-only commit."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    log = _open(spark, root)
+    head_v, manifest = log.head()
     cons = dict(manifest.get("constraints") or {})
     if name not in cons:
         raise AstroSparkError(f"constraint {name!r} does not exist")
@@ -870,7 +545,7 @@ def tt_drop_constraint(spark: SparkSession, root: str, name: str) -> int:
     new_manifest.pop("constraints", None)
     if cons:
         new_manifest["constraints"] = cons
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    log.publish_manifest(head_v + 1, new_manifest)
     return head_v + 1
 
 
@@ -886,11 +561,10 @@ def tt_add_columns(
     from pyspark.sql.types import StructField, StructType
     from pyspark.sql.types import _parse_datatype_string
 
-    root = _named_root(spark, root)
     if not columns:
         raise ValueError("tt_add_columns: no columns given")
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    log = _open(spark, root)
+    head_v, manifest = log.head()
     if manifest.get("schema") is None:
         raise AstroSparkError(
             "tt_add_columns: pre-schema-log table — commit a write "
@@ -916,7 +590,7 @@ def tt_add_columns(
             StructType(prev.fields + new_fields).jsonValue()
         ),
     }
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    log.publish_manifest(head_v + 1, new_manifest)
     return head_v + 1
 
 
@@ -927,11 +601,10 @@ def tt_set_properties(
     the table's property map with a metadata-only commit (no data files
     touched); properties carry across every later commit and RESTORE
     restores the version's map."""
-    root = _named_root(spark, root)
     if not props:
         raise ValueError("tt_set_properties: empty property map")
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    log = _open(spark, root)
+    head_v, manifest = log.head()
     merged = {**(manifest.get("properties") or {})}
     merged.update({str(k): str(v) for k, v in props.items()})
     new_manifest = {
@@ -940,7 +613,7 @@ def tt_set_properties(
         "ts": time.time(),
         "properties": merged,
     }
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    log.publish_manifest(head_v + 1, new_manifest)
     return head_v + 1
 
 
@@ -950,9 +623,8 @@ def tt_unset_properties(
     """Delta ``ALTER TABLE ... UNSET TBLPROPERTIES``: metadata-only
     commit dropping the keys (missing keys are ignored, Delta's IF
     EXISTS behavior)."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    log = _open(spark, root)
+    head_v, manifest = log.head()
     props = {
         k: v
         for k, v in (manifest.get("properties") or {}).items()
@@ -966,81 +638,15 @@ def tt_unset_properties(
     new_manifest.pop("properties", None)
     if props:
         new_manifest["properties"] = props
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    log.publish_manifest(head_v + 1, new_manifest)
     return head_v + 1
 
 
 def tt_properties(spark: SparkSession, root: str) -> dict[str, str]:
     """The head version's table-property map (empty if none set)."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    _v, manifest = _head(spark, fs, HPath, root)
+    log = _open(spark, root)
+    _v, manifest = log.head()
     return dict(manifest.get("properties") or {})
-
-
-def _stats_cols_of(manifest: dict) -> list[str]:
-    """The column set this table records skipping stats for — the
-    ``stats_cols`` header when present (checkpointed logs never need a
-    file-list read to learn it), else inferred from inline stats for
-    pre-header manifests."""
-    cols = manifest.get("stats_cols")
-    if cols:
-        return list(cols)
-    old = manifest.get("stats") or {}
-    return sorted({c for st in old.values() for c in st})
-
-
-def _carry_stats_cols(manifest: dict) -> dict:
-    cols = _stats_cols_of(manifest)
-    return {"stats_cols": cols} if cols else {}
-
-
-def _partition_cols_of(manifest: dict) -> list[str]:
-    """The table's partition columns (empty for unpartitioned tables).
-    Partition values are first-class data everywhere EXCEPT adopted
-    (``tt_convert``) Hive files, where they live only in paths."""
-    return list(manifest.get("partition_cols") or [])
-
-
-def _carry_partition(manifest: dict) -> dict:
-    p = manifest.get("partition_cols")
-    return {"partition_cols": list(p)} if p else {}
-
-
-def _typed_partition_value(raw: str):
-    """A Hive path value parsed the way Spark's partition inference
-    would for the common types (int, float, else string); the Hive
-    null sentinel yields None (no skipping bound — absence is never
-    evidence)."""
-    from urllib.parse import unquote
-
-    v = unquote(raw)
-    if v == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    try:
-        return int(v)
-    except ValueError:
-        pass
-    try:
-        return float(v)
-    except ValueError:
-        return v
-
-
-def _partition_values(rel: str, partition_cols: list[str]) -> dict:
-    """{col: typed value} parsed from a file's ``key=value`` (adopted
-    Hive layout) or ``__p_key=value`` (engine layout) path segments."""
-    pset = set(partition_cols)
-    out: dict = {}
-    for seg in rel.split("/")[:-1]:
-        k, sep, v = seg.partition("=")
-        if not sep:
-            continue
-        if k.startswith(_PART_PREFIX):
-            k = k[len(_PART_PREFIX):]
-        if k in pset:
-            out[k] = _typed_partition_value(v)
-    return out
 
 
 def _partition_path_stats(files: list[str], partition_cols: list[str]) -> dict:
@@ -1070,19 +676,6 @@ def _path_valued(rel: str, partition_cols: list[str]) -> bool:
         if sep and k in pset:
             return True
     return False
-
-
-def _generated_cols_of(manifest: dict) -> dict:
-    """{col: spark-sql expr} of the table's GENERATED columns (Delta's
-    ``GENERATED ALWAYS AS``) — typically the partition column of a
-    time-partitioned table (``day = date_trunc('DAY', ts)``), so
-    ingest never has to pre-derive it."""
-    return dict(manifest.get("generated_cols") or {})
-
-
-def _carry_generated(manifest: dict) -> dict:
-    g = manifest.get("generated_cols")
-    return {"generated_cols": dict(g)} if g else {}
 
 
 def _require_generated_present(df: DataFrame, manifest: dict, what: str) -> None:
@@ -1178,26 +771,24 @@ def tt_append(
     re-runs).  ``merge_schema=True`` evolves the table schema with the
     df's new columns (old files read the new columns as NULL); without
     it, new columns are rejected — Delta's mergeSchema contract."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    log = _open(spark, root)
+    root = log.root
+    versions = log.versions()
     if not versions:
         raise AstroSparkError(f"no versioned table at {root}")
     # partition columns are immutable table metadata (no ALTER): one
     # head read decides the write layout, the retry loop re-reads only
     # the racing file-list state
-    head_m = _read_manifest(spark, fs, HPath, root, versions[-1])
+    head_m = log.manifest(versions[-1])
     pcols = _partition_cols_of(head_m)
     df = _apply_generated(df, head_m)
-    new_files = _write_data_files(
-        spark, df, root, fs, HPath, partition_cols=pcols
-    )
+    new_files = _write_data_files(spark, df, log, partition_cols=pcols)
     for _ in range(max_retries):
-        versions = _list_versions(fs, HPath, root)
+        versions = log.versions()
         if not versions:
             raise AstroSparkError(f"no versioned table at {root}")
         head = versions[-1]
-        prev = _read_manifest(spark, fs, HPath, root, head)
+        prev = log.manifest(head)
         evolved = _evolved_schema(prev.get("schema"), df, merge_schema)
         # validate the ACTUAL written rows (the tt_merge pattern), not the
         # caller's lazy df: a nondeterministic df (rand() sampling,
@@ -1216,18 +807,14 @@ def tt_append(
         # already treated as "keep" by the skip_by reader
         new_stats = _new_file_stats(spark, root, new_files, prev, df)
         manifest = {
-            **_body_delta(spark, fs, HPath, root, prev, new_files, [], new_stats),
+            **log.body_delta(prev, new_files, [], new_stats),
             "op": "append",
             "ts": time.time(),
             "schema": evolved,
-            **_carry_constraints(prev),
-            **_carry_stats_cols(prev),
-            **_carry_partition(prev),
-            **_carry_generated(prev),
-            **_carry_props(prev),
+            **_carry_header(prev),
         }
         try:
-            _publish(spark, fs, HPath, root, head + 1, manifest)
+            log.publish_manifest(head + 1, manifest)
             return head + 1
         except ConcurrentWriteError:
             continue
@@ -1254,44 +841,40 @@ def tt_commit_files(
     schema."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"tt_commit_files: invalid mode {mode!r}")
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
+    log = _open(spark, root)
+    root = log.root
     if not new_files:
         raise ValueError("tt_commit_files: no files to commit")
     df = spark.read.parquet(*[_abs(root, f) for f in new_files])
-    versions = _list_versions(fs, HPath, root)
+    versions = log.versions()
     if not versions:
         manifest = {
-            **_body_full(spark, fs, HPath, root, sorted(new_files), {}),
+            **log.body_full(sorted(new_files), {}),
             "op": "create",
             "ts": time.time(),
             "schema": _schema_json(df),
         }
-        _publish(spark, fs, HPath, root, 0, manifest)
+        log.publish_manifest(0, manifest)
         return 0
     if mode == "overwrite":
-        prev = _read_manifest(spark, fs, HPath, root, versions[-1])
+        prev = log.manifest(versions[-1])
         _require_generated_present(df, prev, "tt_commit_files")
         _check_constraints(df, prev, "overwrite")
         _check_generated(df, prev, "overwrite")
         stats = _new_file_stats(spark, root, sorted(new_files), prev, df)
         manifest = {
-            **_body_full(spark, fs, HPath, root, sorted(new_files), stats),
+            **log.body_full(sorted(new_files), stats),
             "op": "overwrite",
             "ts": time.time(),
             "schema": _schema_json(df),
-            **_carry_constraints(prev),
-            **_carry_stats_cols(prev),
-            **_carry_partition(prev),
-            **_carry_generated(prev),
-            **_carry_props(prev),
+            **_carry_header(prev),
         }
-        _publish(spark, fs, HPath, root, versions[-1] + 1, manifest)
+        log.publish_manifest(versions[-1] + 1, manifest)
         return versions[-1] + 1
     for _ in range(max_retries):
-        versions = _list_versions(fs, HPath, root)
+        versions = log.versions()
         head = versions[-1]
-        prev = _read_manifest(spark, fs, HPath, root, head)
+        prev = log.manifest(head)
         _require_generated_present(df, prev, "tt_commit_files")
         evolved = _evolved_schema(prev.get("schema"), df, False)
         committed = _read_files(
@@ -1301,20 +884,14 @@ def tt_commit_files(
         _check_generated(committed, prev, "append")
         new_stats = _new_file_stats(spark, root, sorted(new_files), prev, df)
         manifest = {
-            **_body_delta(
-                spark, fs, HPath, root, prev, sorted(new_files), [], new_stats
-            ),
+            **log.body_delta(prev, sorted(new_files), [], new_stats),
             "op": "append",
             "ts": time.time(),
             "schema": evolved,
-            **_carry_constraints(prev),
-            **_carry_stats_cols(prev),
-            **_carry_partition(prev),
-            **_carry_generated(prev),
-            **_carry_props(prev),
+            **_carry_header(prev),
         }
         try:
-            _publish(spark, fs, HPath, root, head + 1, manifest)
+            log.publish_manifest(head + 1, manifest)
             return head + 1
         except ConcurrentWriteError:
             continue
@@ -1334,17 +911,17 @@ def tt_overwrite(
     meant to replace is gone.  ``partition_by=None`` carries the
     table's existing partition layout; a list (possibly empty) replaces
     it — Delta's ``CREATE OR REPLACE ... PARTITIONED BY`` re-layout."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    log = _open(spark, root)
+    root = log.root
+    versions = log.versions()
     if not versions:
         raise AstroSparkError(f"no versioned table at {root}")
-    prev = _read_manifest(spark, fs, HPath, root, versions[-1])
+    prev = log.manifest(versions[-1])
     pcols = (
         _partition_cols_of(prev) if partition_by is None else list(partition_by)
     )
     df = _apply_generated(df, prev)
-    files = _write_data_files(spark, df, root, fs, HPath, partition_cols=pcols)
+    files = _write_data_files(spark, df, log, partition_cols=pcols)
     # validate the ACTUAL written rows (tt_merge pattern) — the files are
     # still invisible, so a rejected overwrite leaves garbage, never a
     # bad version, even for a nondeterministic df
@@ -1360,7 +937,7 @@ def tt_overwrite(
     }
     stats = _new_file_stats(spark, root, files, header, df)
     manifest = {
-        **_body_full(spark, fs, HPath, root, files, stats),
+        **log.body_full(files, stats),
         "op": "overwrite",
         "ts": time.time(),
         "schema": _schema_json(df),  # overwrite replaces the schema too
@@ -1368,7 +945,7 @@ def tt_overwrite(
         **header,
         **_carry_props(prev),
     }
-    _publish(spark, fs, HPath, root, versions[-1] + 1, manifest)
+    log.publish_manifest(versions[-1] + 1, manifest)
     return versions[-1] + 1
 
 
@@ -1489,57 +1066,6 @@ def _skip_bounds_from_predicate(where: str) -> dict:
     return {c: (lo, hi) for c, (lo, hi) in out.items()}
 
 
-def _parse_temporal(s):
-    """datetime for a canonical date/timestamp string, else None."""
-    from datetime import datetime
-
-    if not isinstance(s, str):
-        return None
-    try:
-        return datetime.fromisoformat(s)
-    except ValueError:
-        return None
-
-
-def _skip_provable(rng, lo, hi) -> bool:
-    """True iff a file's recorded [rng] provably cannot intersect
-    [lo, hi].  Temporal bounds (stats store date/timestamp ranges as
-    their canonical strings) compare in TIME space — a lexicographic
-    compare would mis-prune against shorter or non-canonical predicate
-    literals ('2024-03-01' vs '2024-03-01 00:00:00'); a predicate
-    literal that doesn't parse proves nothing on its side (the file is
-    kept — sound)."""
-    r0, r1 = rng[0], rng[1]
-    t0, t1 = _parse_temporal(r0), _parse_temporal(r1)
-    if t0 is not None and t1 is not None:
-        # offset-aware vs naive datetimes (e.g. a manifest written by
-        # an older Arrow commit that serialized '+00:00' bounds, read
-        # against a naive predicate literal) raise TypeError on <:
-        # proves nothing — keep the file (sound)
-        try:
-            if hi is not None:
-                th = _parse_temporal(hi)
-                if th is not None and t0 > th:
-                    return True
-            if lo is not None:
-                tl = _parse_temporal(lo)
-                if tl is not None and t1 < tl:
-                    return True
-        except TypeError:
-            return False
-        return False
-    try:
-        if hi is not None and r0 > hi:
-            return True
-        if lo is not None and r1 < lo:
-            return True
-    except TypeError:
-        # cross-type bound (e.g. a string literal against numeric
-        # stats, where SQL would cast): can't prove skippable
-        return False
-    return False
-
-
 def tt_read(
     spark: SparkSession,
     root: str,
@@ -1567,9 +1093,9 @@ def tt_read(
     derive manifest skip bounds (``_skip_bounds_from_predicate``) —
     Delta's stats-based skipping without hand-passing ``skip_by``.
     Explicit ``skip_by`` bounds intersect with the derived ones."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    log = _open(spark, root)
+    root = log.root
+    versions = log.versions()
     if not versions:
         raise AstroSparkError(f"no versioned table at {root}")
     if version is not None and as_of_ts is not None:
@@ -1580,7 +1106,7 @@ def tt_read(
         eligible = [
             v
             for v in versions
-            if _read_manifest(spark, fs, HPath, root, v)["ts"] <= as_of_ts
+            if log.manifest(v)["ts"] <= as_of_ts
         ]
         if not eligible:
             raise AstroSparkError(
@@ -1589,8 +1115,8 @@ def tt_read(
         version = eligible[-1]
     if version not in versions:
         raise AstroSparkError(f"version {version} not found in {root}")
-    manifest = _read_manifest(spark, fs, HPath, root, version)
-    files, stats = _resolve(spark, fs, HPath, root, manifest)
+    manifest = log.manifest(version)
+    files, stats = log.resolve(manifest)
     if where is not None:
         derived = _skip_bounds_from_predicate(where)
         merged = dict(skip_by or {})
@@ -1603,20 +1129,7 @@ def tt_read(
             merged[col] = (cur_lo, cur_hi)
         skip_by = merged or None
     if skip_by:
-
-        def _keep(f: str) -> bool:
-            st = stats.get(f)
-            if st is None:
-                return True
-            for col, (lo, hi) in skip_by.items():
-                rng = st.get(col)
-                if rng is None or rng[0] is None or rng[1] is None:
-                    continue  # no/NULL-only stats: can't prove skippable
-                if _skip_provable(rng, lo, hi):
-                    return False
-            return True
-
-        files = [f for f in files if _keep(f)]
+        files = [f for f in files if _keep_file(stats, f, skip_by)]
 
     def _finish(df: DataFrame) -> DataFrame:
         return df.where(where) if where is not None else df
@@ -1642,44 +1155,33 @@ def tt_restore(spark: SparkSession, root: str, version: int) -> int:
     """RESTORE: commit a NEW head version whose file list equals the
     given version's (Delta ``RESTORE TABLE ... TO VERSION AS OF``) —
     history is preserved, nothing is deleted."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    log = _open(spark, root)
+    root = log.root
+    versions = log.versions()
     if version not in versions:
         raise AstroSparkError(f"version {version} not found in {root}")
-    src = _read_manifest(spark, fs, HPath, root, version)
+    src = log.manifest(version)
     # the file-list body copies verbatim — checkpoint refs are immutable,
     # so restoring a checkpointed version shares its base by reference
     manifest = {
         **_copy_body(src),
         "op": f"restore(v{version})",
         "ts": time.time(),
+        **_header_copy(src),  # the version's schema, checks and layout too
     }
-    if src.get("schema") is not None:
-        manifest["schema"] = src["schema"]  # restore the schema too
-    if src.get("constraints") is not None:
-        manifest["constraints"] = src["constraints"]  # and the checks
-    if src.get("stats_cols") is not None:
-        manifest["stats_cols"] = src["stats_cols"]
-    if src.get("partition_cols") is not None:
-        manifest["partition_cols"] = src["partition_cols"]
-    if src.get("generated_cols") is not None:
-        manifest["generated_cols"] = src["generated_cols"]
-    if src.get("properties") is not None:
-        manifest["properties"] = src["properties"]
-    _publish(spark, fs, HPath, root, versions[-1] + 1, manifest)
+    log.publish_manifest(versions[-1] + 1, manifest)
     return versions[-1] + 1
 
 
 def tt_restore_to_ts(spark: SparkSession, root: str, as_of_ts: float) -> int:
     """RESTORE to the latest version committed at or before the given
     unix timestamp — Delta ``RESTORE TABLE ... TO TIMESTAMP AS OF``."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
+    log = _open(spark, root)
+    root = log.root
     eligible = [
         v
-        for v in _list_versions(fs, HPath, root)
-        if _read_manifest(spark, fs, HPath, root, v)["ts"] <= as_of_ts
+        for v in log.versions()
+        if log.manifest(v)["ts"] <= as_of_ts
     ]
     if not eligible:
         raise AstroSparkError(
@@ -1715,30 +1217,17 @@ def tt_convert(
 
     Refuses an already-versioned root, an empty directory, and a
     layout whose files disagree on the partition column set."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    if _list_versions(fs, HPath, root):
+    log = _open(spark, root)
+    root = log.root
+    if log.versions():
         raise AstroSparkError(
             f"tt_convert: {root} is already a versioned table"
         )
-    files: list[str] = []
-
-    def _walk(path, rel_prefix: str) -> None:
-        for st in fs.listStatus(path):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                if name == _LOG:
-                    continue
-                _walk(st.getPath(), f"{rel_prefix}{name}/")
-            elif name.endswith(".parquet"):
-                files.append(f"{rel_prefix}{name}")
-
-    if not fs.exists(HPath(root)):
+    if not log.fs.exists(""):
         raise AstroSparkError(f"tt_convert: no such directory {root}")
-    _walk(HPath(root), "")
+    files = log.parquet_files()
     if not files:
         raise AstroSparkError(f"tt_convert: no parquet files under {root}")
-    files = sorted(files)
 
     # detect the Hive layout: every file's FULL directory segment
     # sequence must be key=value dirs of equal depth — matching only
@@ -1787,13 +1276,13 @@ def tt_convert(
         df = spark.read.parquet(*abs_files)
     stats = _partition_path_stats(files, pcols) if pcols else {}
     manifest = {
-        **_body_full(spark, fs, HPath, root, files, stats),
+        **log.body_full(files, stats),
         "op": "convert",
         "ts": time.time(),
         "schema": _schema_json(df),
         **({"partition_cols": pcols} if pcols else {}),
     }
-    _publish(spark, fs, HPath, root, 0, manifest)
+    log.publish_manifest(0, manifest)
     return 0
 
 
@@ -1808,27 +1297,11 @@ def tt_detail(spark: SparkSession, root: str) -> DataFrame:
     stress run measured that loop at ~0.37 ms/file — fine at 10³
     files, 37 s at 10⁵; a remote 10⁵-file table should read
     ``num_files`` from tt_history's free header instead)."""
-    import os as _os
-
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
-    files, _stats = _resolve(spark, fs, HPath, root, manifest)
-    size = 0
-    local = "://" not in root or root.startswith("file:")
-    for f in files:
-        ab = _abs(root, f)
-        if local:
-            p = ab[5:].lstrip("/") if ab.startswith("file:") else ab
-            p = p if p.startswith("/") else "/" + p
-            try:
-                size += _os.stat(p).st_size
-            except OSError:
-                pass  # vacuumed/external path: counts zero, like exists()
-        else:
-            jp = HPath(ab)
-            if fs.exists(jp):
-                size += int(fs.getFileStatus(jp).getLen())
+    log = _open(spark, root)
+    root = log.root
+    head_v, manifest = log.head()
+    files, _stats = log.resolve(manifest)
+    size = sum(log.fs.size(f) for f in files)
     return _literal_rows_df(
         spark,
         [
@@ -1906,19 +1379,18 @@ def _literal_rows_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
 def tt_history(spark: SparkSession, root: str) -> DataFrame:
     """(version, op, ts, n_files) per committed version — Delta
     ``DESCRIBE HISTORY``."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
+    log = _open(spark, root)
     rows = [
         (
             v,
-            (m := _read_manifest(spark, fs, HPath, root, v))["op"],
+            (m := log.manifest(v))["op"],
             float(m["ts"]),
             # header-only: n_files rides in every manifest, so history
             # never parses (or fetches) a file list — O(versions) tiny
             # JSON reads even on a checkpointed million-file table
             int(m.get("n_files", len(m.get("files") or []))),
         )
-        for v in _list_versions(fs, HPath, root)
+        for v in log.versions()
     ]
     return _literal_rows_df(
         spark, rows, "version long, op string, ts double, n_files long"
@@ -1952,7 +1424,6 @@ def _compact_paths(
     basePath is the dir itself); callers that want path-derived
     partition columns pass ``basePath`` explicitly and get the same
     inference for dirs as for files."""
-    import os as _os
     from collections import defaultdict
 
     by_dir: dict[str, list[str]] = defaultdict(list)
@@ -1960,39 +1431,17 @@ def _compact_paths(
         d = f.rsplit("/", 1)[0] if "/" in f else ""
         by_dir[d].append(f)
 
-    def _local(p: str) -> str | None:
-        # local paths list via ONE os.listdir syscall — the py4j loop
-        # over FileStatus objects costs 2 round-trips per FILE (18 s at
-        # 40k files, measured), defeating the point of compaction
-        if "://" not in p:
-            return p
-        if p.startswith("file:"):
-            rest = p[5:]
-            while rest.startswith("//"):
-                rest = rest[1:]
-            return rest if rest.startswith("/") else "/" + rest
-        return None
-
-    fs_tuple = None  # lazily opened only if a non-local dir appears
+    # local roots list through ONE os.scandir per dir — the py4j loop
+    # over FileStatus objects costs 2 round-trips per FILE (18 s at
+    # 40k files, measured), defeating the point of compaction
+    log = TableLog(root, spark)
     out: list[str] = []
     for d, members in by_dir.items():
         if not d or len(members) < 2:
             out.extend(members)
             continue
-        ab = _abs(root, d)
-        loc = _local(ab)
         try:
-            if loc is not None:
-                listed = _os.listdir(loc)
-            else:
-                if fs_tuple is None:
-                    fs_tuple = _fs(spark, root)
-                HPath, _p, fs = fs_tuple
-                listed = [
-                    st.getPath().getName()
-                    for st in fs.listStatus(HPath(ab))
-                    if not st.isDirectory()
-                ]
+            listed = [name for name, _is_dir in log.fs.list(d)]
         except Exception:
             out.extend(members)
             continue
@@ -2082,8 +1531,7 @@ def _read_files(spark: SparkSession, root: str, manifest: dict) -> DataFrame:
     for PARTITIONED tables must carry ``partition_cols`` so adopted
     files materialize their path values)."""
     if "base" in manifest:
-        HPath, _p, fs = _fs(spark, root)
-        files, _stats = _resolve(spark, fs, HPath, root, manifest)
+        files, _stats = TableLog(root, spark).resolve(manifest)
     else:
         files = manifest.get("files") or []
     return _read_file_lists(
@@ -2093,13 +1541,6 @@ def _read_files(spark: SparkSession, root: str, manifest: dict) -> DataFrame:
         manifest.get("schema"),
         _partition_cols_of(manifest),
     )
-
-
-def _head(spark: SparkSession, fs, HPath, root: str) -> tuple[int, dict]:
-    versions = _list_versions(fs, HPath, root)
-    if not versions:
-        raise AstroSparkError(f"no versioned table at {root}")
-    return versions[-1], _read_manifest(spark, fs, HPath, root, versions[-1])
 
 
 def _touched_relative(
@@ -2130,10 +1571,10 @@ def tt_delete_where(spark: SparkSession, root: str, predicate: str) -> int:
     to find them."""
     from pyspark.sql import functions as F
 
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
-    files, _stats = _resolve(spark, fs, HPath, root, manifest)
+    log = _open(spark, root)
+    root = log.root
+    head_v, manifest = log.head()
+    files, _stats = log.resolve(manifest)
     full = _read_files(spark, root, manifest)
     flagged = (
         full.where(predicate)
@@ -2153,12 +1594,10 @@ def tt_delete_where(spark: SparkSession, root: str, predicate: str) -> int:
             **({"partition_cols": pcols} if pcols else {}),
         },
     ).where(f"NOT ({predicate})")
-    new_files = _write_data_files(
-        spark, kept, root, fs, HPath, partition_cols=pcols
-    )
+    new_files = _write_data_files(spark, kept, log, partition_cols=pcols)
     new_stats = _new_file_stats(spark, root, new_files, manifest, kept)
     return _publish_cow(
-        spark, fs, HPath, root, head_v, manifest,
+        log, head_v, manifest,
         new_files, touched, new_stats, "delete", _cow_extra(manifest),
     )
 
@@ -2179,10 +1618,10 @@ def tt_update_where(
     publishes."""
     from pyspark.sql import functions as F
 
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
-    files, _stats = _resolve(spark, fs, HPath, root, manifest)
+    log = _open(spark, root)
+    root = log.root
+    head_v, manifest = log.head()
+    files, _stats = log.resolve(manifest)
     full = _read_files(spark, root, manifest)
     for c in set_map:
         if c not in full.columns:
@@ -2232,9 +1671,7 @@ def tt_update_where(
     # partition value too
     for g_name, g_expr in _generated_cols_of(manifest).items():
         rewritten = rewritten.withColumn(g_name, F.expr(g_expr))
-    new_files = _write_data_files(
-        spark, rewritten, root, fs, HPath, partition_cols=pcols
-    )
+    new_files = _write_data_files(spark, rewritten, log, partition_cols=pcols)
     _check_constraints(
         _read_files(
             spark, root, {"files": new_files, "schema": manifest.get("schema")}
@@ -2244,7 +1681,7 @@ def tt_update_where(
     )
     new_stats = _new_file_stats(spark, root, new_files, manifest, rewritten)
     return _publish_cow(
-        spark, fs, HPath, root, head_v, manifest,
+        log, head_v, manifest,
         new_files, touched, new_stats, "update", _cow_extra(manifest),
     )
 
@@ -2267,10 +1704,10 @@ def tt_merge(
 
     from .merge import _upsert
 
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
-    files, _stats = _resolve(spark, fs, HPath, root, manifest)
+    log = _open(spark, root)
+    root = log.root
+    head_v, manifest = log.head()
+    files, _stats = log.resolve(manifest)
     target = _read_files(spark, root, manifest)
     source = _apply_generated(source, manifest)
     source = source.select(*target.columns)  # align column order
@@ -2304,9 +1741,7 @@ def tt_merge(
         else target.limit(0)
     )
     merged = _upsert(base, source, keys)
-    new_files = _write_data_files(
-        spark, merged, root, fs, HPath, partition_cols=pcols
-    )
+    new_files = _write_data_files(spark, merged, log, partition_cols=pcols)
     # validate the rewrite's ACTUAL rows (updates included) against the
     # CHECK constraints before anything publishes — one read-back of
     # the just-written files, which are still invisible
@@ -2317,7 +1752,7 @@ def tt_merge(
     _check_generated(merged_back, manifest, "merge")
     new_stats = _new_file_stats(spark, root, new_files, manifest, merged)
     return _publish_cow(
-        spark, fs, HPath, root, head_v, manifest,
+        log, head_v, manifest,
         new_files, touched, new_stats, "merge", _cow_extra(manifest),
     )
 
@@ -2347,9 +1782,9 @@ def tt_optimize(
     O(selected partition), never O(table)."""
     from ..plans.zorder import with_zorder_key
 
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    log = _open(spark, root)
+    root = log.root
+    head_v, manifest = log.head()
     pcols = _partition_cols_of(manifest)
     selected: list[str] | None = None
     if where is not None:
@@ -2365,7 +1800,7 @@ def tt_optimize(
                 f"conjunction over partition columns {pcols}, got "
                 f"{where!r}"
             )
-        files, stats = _resolve(spark, fs, HPath, root, manifest)
+        files, stats = log.resolve(manifest)
         # a file is selected iff its RECORDED partition value provably
         # satisfies every bound (degenerate [v, v] stats — partition
         # values are always recorded, so no file is ambiguous)
@@ -2426,9 +1861,7 @@ def tt_optimize(
         df = df.repartition(target_files, *[F_col(c) for c in pcols])
     else:
         df = df.coalesce(target_files)
-    new_files = _write_data_files(
-        spark, df, root, fs, HPath, partition_cols=pcols
-    )
+    new_files = _write_data_files(spark, df, log, partition_cols=pcols)
     # zorder makes files cover COMPACT ranges — exactly when skipping
     # stats pay off; recompute them over the new layout
     stats = _new_file_stats(spark, root, new_files, manifest, df)
@@ -2436,12 +1869,12 @@ def tt_optimize(
         # partition-scoped: unselected files carry over by reference —
         # an O(delta) commit exactly like DML's copy-on-write
         return _publish_cow(
-            spark, fs, HPath, root, head_v, manifest,
+            log, head_v, manifest,
             new_files, selected, stats,
             f"optimize(where={where})", _cow_extra(manifest),
         )
     new_manifest = {
-        **_body_full(spark, fs, HPath, root, new_files, stats),
+        **log.body_full(new_files, stats),
         "op": (
             f"optimize(zorder={','.join(zorder_by)})"
             if zorder_by
@@ -2453,13 +1886,9 @@ def tt_optimize(
             if manifest.get("schema") is not None
             else {}
         ),
-        **_carry_constraints(manifest),  # rows identical; carry
-        **_carry_stats_cols(manifest),
-        **_carry_partition(manifest),
-        **_carry_generated(manifest),
-        **_carry_props(manifest),
+        **_carry_header(manifest),  # rows identical; carry
     }
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    log.publish_manifest(head_v + 1, new_manifest)
     return head_v + 1
 
 
@@ -2516,15 +1945,15 @@ def tt_clone(
             f"tt_clone: src_root must be an absolute path or URI (or a "
             f"tt_register'd name), got {src_root!r}"
         )
-    HPath, _p, fs = _fs(spark, src_root)
-    versions = _list_versions(fs, HPath, src_root)
+    src = TableLog(src_root, spark)
+    versions = src.versions()
     if not versions:
         raise AstroSparkError(f"no versioned table at {src_root}")
     version = versions[-1] if version is None else version
     if version not in versions:
         raise AstroSparkError(f"version {version} not found in {src_root}")
-    m = _read_manifest(spark, fs, HPath, src_root, version)
-    files, stats = _resolve(spark, fs, HPath, src_root, m)
+    m = src.manifest(version)
+    files, stats = src.resolve(m)
     src_pcols = _partition_cols_of(m)
     if src_pcols and any(_path_valued(f, src_pcols) for f in files):
         raise AstroSparkError(
@@ -2536,28 +1965,16 @@ def tt_clone(
         )
     abs_files = [_abs(src_root, f) for f in files]
     abs_stats = {_abs(src_root, f): s for f, s in stats.items()}
-    dst_root = _named_root(spark, dst_root)
-    dHPath, _dp, dfs = _fs(spark, dst_root)
-    if _list_versions(dfs, dHPath, dst_root):
-        raise AstroSparkError(f"versioned table already exists at {dst_root}")
+    dst = _open(spark, dst_root)
+    if dst.versions():
+        raise AstroSparkError(f"versioned table already exists at {dst.root}")
     manifest = {
-        **_body_full(spark, dfs, dHPath, dst_root, abs_files, abs_stats),
+        **dst.body_full(abs_files, abs_stats),
         "op": f"clone({src_root}@v{version})",
         "ts": time.time(),
+        **_header_copy(m),
     }
-    if m.get("schema") is not None:
-        manifest["schema"] = m["schema"]
-    if m.get("constraints") is not None:
-        manifest["constraints"] = m["constraints"]
-    if m.get("stats_cols") is not None:
-        manifest["stats_cols"] = m["stats_cols"]
-    if m.get("partition_cols") is not None:
-        manifest["partition_cols"] = m["partition_cols"]
-    if m.get("generated_cols") is not None:
-        manifest["generated_cols"] = m["generated_cols"]
-    if m.get("properties") is not None:
-        manifest["properties"] = m["properties"]
-    _publish(spark, dfs, dHPath, dst_root, 0, manifest)
+    dst.publish_manifest(0, manifest)
     return 0
 
 
@@ -2581,9 +1998,9 @@ def tt_changes(
     added/removed/changed per key between two arbitrary snapshots."""
     from pyspark.sql import functions as F
 
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    log = _open(spark, root)
+    root = log.root
+    versions = log.versions()
     if from_version not in versions:
         raise AstroSparkError(
             f"version {from_version} not found in {root} (vacuumed?)"
@@ -2592,11 +2009,11 @@ def tt_changes(
     if to_version not in versions:
         raise AstroSparkError(f"version {to_version} not found in {root}")
     out = None
-    prev_m = _read_manifest(spark, fs, HPath, root, from_version)
-    prev_files, _ = _resolve(spark, fs, HPath, root, prev_m)
+    prev_m = log.manifest(from_version)
+    prev_files, _ = log.resolve(prev_m)
     for v in [x for x in versions if from_version < x <= to_version]:
-        cur_m = _read_manifest(spark, fs, HPath, root, v)
-        cur_files, _ = _resolve(spark, fs, HPath, root, cur_m)
+        cur_m = log.manifest(v)
+        cur_files, _ = log.resolve(cur_m)
         prev_set, cur_set = set(prev_files), set(cur_files)
         added = [f for f in cur_files if f not in prev_set]
         removed = [f for f in prev_files if f not in cur_set]
@@ -2663,14 +2080,13 @@ def tt_changes_drain(
     inserts... of version > 0; seed state with ``-1`` semantics by
     passing a table whose v0 matters through fn yourself, or start the
     feed after tt_create).  Returns the versions consumed."""
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    log = _open(spark, root)
+    root = log.root
+    versions = log.versions()
     if not versions:
         raise AstroSparkError(f"no versioned table at {root}")
     head = versions[-1]
-    sp = HPath(state_path)
-    state_fs = sp.getFileSystem(spark._jsc.hadoopConfiguration())
+    _HPath, sp, state_fs = _hadoop_fs(spark, state_path)
     last = versions[0]
     if state_fs.exists(sp):
         stream = state_fs.open(sp)
@@ -2707,15 +2123,14 @@ def tt_vacuum(
     files that WOULD be reclaimed and changes nothing."""
     if keep_last < 1:
         raise ValueError("tt_vacuum: keep_last must be >= 1")
-    root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    log = _open(spark, root)
+    versions = log.versions()
     keep, drop = versions[-keep_last:], versions[:-keep_last]
     live: set[str] = set()
     live_refs: set[str] = set()
     for v in keep:
-        m = _read_manifest(spark, fs, HPath, root, v)
-        fl, _st = _resolve(spark, fs, HPath, root, m)
+        m = log.manifest(v)
+        fl, _st = log.resolve(m)
         live |= set(fl)
         if "base" in m:
             live_refs.add(m["base"])
@@ -2725,90 +2140,39 @@ def tt_vacuum(
     # local roots check/delete through the OS (one syscall each) — the
     # gateway pays 2 round-trips per file (~0.7 ms), which turns a
     # 10⁵-file reclaim into minutes for no reason
-    import os as _os
-
-    local = "://" not in root or root.startswith("file:")
-
-    def _lpath(f: str) -> str:
-        ab = f"{root}/{f}"
-        if ab.startswith("file:"):
-            ab = ab[5:].lstrip("/")
-            ab = ab if ab.startswith("/") else "/" + ab
-        return ab
-
     for v in drop:
-        m = _read_manifest(spark, fs, HPath, root, v)
-        fl, _st = _resolve(spark, fs, HPath, root, m)
+        m = log.manifest(v)
+        fl, _st = log.resolve(m)
         for f in fl:
             if _is_external(f):
                 continue  # shallow-clone ref: the SOURCE table owns it
             if f in live or f in reclaimed:  # shared across versions
                 continue
-            if local:
-                if not _os.path.exists(_lpath(f)):
-                    continue
-                if not dry_run:
-                    try:
-                        _os.remove(_lpath(f))
-                    except OSError:
-                        continue
-            else:
-                if not fs.exists(HPath(f"{root}/{f}")):
-                    continue
-                if not dry_run:
-                    fs.delete(HPath(f"{root}/{f}"), False)
+            if not log.fs.exists(f):
+                continue
+            if not dry_run and not log.fs.delete(f):
+                continue
             reclaimed.add(f)
             deleted += 1
         if "base" in m and m["base"] not in live_refs:
             dead_refs.add(m["base"])
-        if not dry_run:
-            fs.delete(HPath(f"{root}/{_LOG}/{_manifest_name(v)}"), False)
     if dry_run:
         return deleted  # nothing touched: no manifest drops, no sweeps
-    # checkpoints referenced only by vacuumed manifests are log garbage
-    for ref in dead_refs:
-        if fs.exists(HPath(f"{root}/{ref}")):
-            fs.delete(HPath(f"{root}/{ref}"), False)
-    # ORPHANED checkpoints: a commit retry that lost its optimistic-
-    # concurrency race (or an abandoned tail compaction) writes a
-    # _log/ckpt-*.parquet that no manifest ever references — on
-    # contended tables those full-snapshot files leak indefinitely.
-    # After this vacuum only `keep` manifests survive, so any ckpt not
-    # in their base refs is dead.  A brief grace window protects a
-    # checkpoint written by an IN-FLIGHT commit whose manifest hasn't
-    # published yet (Delta's VACUUM retention serves the same purpose);
-    # tests may set spark.astro.tt.vacuumCkptGraceSec=0.
+    # After this vacuum only `keep` manifests survive, so any checkpoint
+    # not in their base refs is dead: those of the dropped versions at
+    # once, orphans (a commit that lost its race, an abandoned tail
+    # compaction — on contended tables those full-snapshot files would
+    # leak indefinitely) after a grace window that protects an
+    # IN-FLIGHT commit's checkpoint (Delta's VACUUM retention serves
+    # the same purpose); tests may set
+    # spark.astro.tt.vacuumCkptGraceSec=0.
     try:
         grace_s = float(
             spark.conf.get("spark.astro.tt.vacuumCkptGraceSec", "600")
         )
     except Exception:  # pragma: no cover - exotic conf backend
         grace_s = 600.0
-    # derive "now" from the FILESYSTEM's clock, not the driver JVM's:
-    # touch a probe file under _log and read back its mtime, so
-    # driver/storage clock skew beyond the grace window can never make
-    # an in-flight commit's checkpoint look old enough to delete.
-    # Fall back to the JVM clock only if the FS won't stamp the probe.
-    try:
-        probe = HPath(f"{root}/{_LOG}/.clock-probe-{uuid.uuid4().hex}")
-        stream = fs.create(probe, True)
-        stream.close()
-        now_ms = fs.getFileStatus(probe).getModificationTime()
-        fs.delete(probe, False)
-    except Exception:  # pragma: no cover - read-only or exotic FS
-        now_ms = spark._jvm.java.lang.System.currentTimeMillis()
-    log = HPath(f"{root}/{_LOG}")
-    if fs.exists(log):
-        for st in fs.listStatus(log):
-            name = st.getPath().getName()
-            if not (name.startswith("ckpt-") and name.endswith(".parquet")):
-                continue
-            ref = f"{_LOG}/{name}"
-            if ref in live_refs:
-                continue
-            if now_ms - st.getModificationTime() < grace_s * 1000.0:
-                continue  # possibly an in-flight commit's checkpoint
-            fs.delete(st.getPath(), False)
+    log.drop_versions(drop, live_refs, dead_refs, grace_s)
     return deleted
 
 

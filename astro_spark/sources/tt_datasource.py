@@ -35,14 +35,16 @@ carries ``_commit_version``.
 The Arrow-decode path costs more CPU per byte than the JVM scan — for
 engine-internal work prefer ``tt_read``/``tt_changes_drain``; this
 source exists so everything else on a cluster can read the format.
-Filesystem access is ``pyarrow.fs.FileSystem.from_uri`` (local paths
-always; object stores wherever pyarrow's bundled filesystems reach).
+The log format itself (manifests, checkpoints, the atomic publish) is
+``sources/tt_log.py``'s, the same code ``timetravel`` commits through.
+Filesystem access is ``os``/``pyarrow`` for local roots and
+``pyarrow.fs.FileSystem.from_uri`` elsewhere (object stores wherever
+pyarrow's bundled filesystems reach).
 """
 
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -56,128 +58,24 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-_LOG = "_log"
-_PAD = 8
+from ..exceptions import ConcurrentWriteError
+from .tt_log import (
+    _INLINE_MAX,
+    TableLog,
+    _abs,
+    _arrow_fs,
+    _ArrowCommitUnsupported,
+    _carry_header,
+    _keep_file,
+    _partition_cols_of,
+    _partition_values,
+    _stats_cols_of,
+)
 
 
-def _abs_entry(path: str, rel: str) -> str:
-    """Shallow-clone manifest entries are absolute paths/URIs into the
-    source table's root; everything else is root-relative."""
-    return rel if (rel.startswith("/") or "://" in rel) else f"{path}/{rel}"
-
-
-def _fs_of(root: str):
-    from pyarrow import fs as pafs
-
-    if "://" in root:
-        f, path = pafs.FileSystem.from_uri(root)
-        return f, path
-    return pafs.LocalFileSystem(), os.path.abspath(root)
-
-
-def _list_versions(root: str) -> list[int]:
-    from pyarrow import fs as pafs
-
-    f, path = _fs_of(root)
-    sel = pafs.FileSelector(f"{path}/{_LOG}", allow_not_found=True)
-    out = []
-    for info in f.get_file_info(sel):
-        name = info.base_name
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                out.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _read_manifest(root: str, version: int) -> dict:
-    f, path = _fs_of(root)
-    with f.open_input_stream(
-        f"{path}/{_LOG}/v{version:0{_PAD}d}.json"
-    ) as stream:
-        return json.loads(stream.read().decode("utf-8"))
-
-
-def _resolve_files(root: str, manifest: dict) -> list[str]:
-    """Complete file list — inline form verbatim, checkpoint form =
-    parquet base snapshot minus remove plus add (mirrors
-    ``timetravel._resolve`` without a SparkSession)."""
-    return _resolve_files_stats(root, manifest)[0]
-
-
-def _resolve_files_stats(
-    root: str, manifest: dict
-) -> tuple[list[str], dict]:
-    """(complete file list, per-file stats) resolved pyarrow-side."""
-    if "base" not in manifest:
-        return (
-            manifest.get("files") or [],
-            manifest.get("stats") or {},
-        )
-    import pyarrow.parquet as pq
-
-    f, path = _fs_of(root)
-    with f.open_input_file(f"{path}/{manifest['base']}") as fh:
-        t = pq.read_table(fh)
-    files = t.column("file").to_pylist()
-    raw = t.column("stats").to_pylist()
-    stats = {x: json.loads(s) for x, s in zip(files, raw) if s is not None}
-    rm = set(manifest.get("remove") or [])
-    if rm:
-        files = [x for x in files if x not in rm]
-        stats = {x: s for x, s in stats.items() if x not in rm}
-    files = files + (manifest.get("add") or [])
-    stats.update(manifest.get("add_stats") or {})
-    return files, stats
-
-
-def _parse_temporal_ds(v):
-    """datetime for a canonical date/timestamp string, else None —
-    mirrors ``timetravel._parse_temporal`` without a SparkSession."""
-    from datetime import datetime
-
-    if not isinstance(v, str):
-        return None
-    try:
-        return datetime.fromisoformat(v)
-    except ValueError:
-        return None
-
-
-def _skip_provable_ds(rng, lo, hi) -> bool:
-    """``timetravel._skip_provable``'s exact logic: temporal string
-    bounds compare in time space, cross-type proves nothing."""
-    r0, r1 = rng[0], rng[1]
-    t0, t1 = _parse_temporal_ds(r0), _parse_temporal_ds(r1)
-    if t0 is not None and t1 is not None:
-        # offset-aware vs naive datetimes (e.g. a pre-fix manifest
-        # serialized '+00:00' bounds) raise TypeError on <: proves
-        # nothing — keep the file (sound)
-        try:
-            if hi is not None:
-                th = _parse_temporal_ds(hi)
-                if th is not None and t0 > th:
-                    return True
-            if lo is not None:
-                tl = _parse_temporal_ds(lo)
-                if tl is not None and t1 < tl:
-                    return True
-        except TypeError:
-            return False
-        return False
-    try:
-        if hi is not None and r0 > hi:
-            return True
-        if lo is not None and r1 < lo:
-            return True
-    except TypeError:
-        return False
-    return False
-
-
-def _pick_version(root: str, options: dict) -> int:
-    versions = _list_versions(root)
+def _pick_version(log: TableLog, options: dict) -> int:
+    root = log.root
+    versions = log.versions()
     if not versions:
         raise ValueError(f"no versioned table at {root}")
     v = options.get("versionasof")
@@ -191,9 +89,7 @@ def _pick_version(root: str, options: dict) -> int:
         return v
     if ts is not None:
         ts = float(ts)
-        eligible = [
-            x for x in versions if _read_manifest(root, x)["ts"] <= ts
-        ]
+        eligible = [x for x in versions if log.manifest(x)["ts"] <= ts]
         if not eligible:
             raise ValueError(f"no version at or before ts={ts} in {root}")
         return eligible[-1]
@@ -220,43 +116,12 @@ class _FilePartition(InputPartition):
     part_json: str = ""
 
 
-def _partition_path_values(rel: str, partition_cols: list[str]) -> dict:
-    """{col: typed value} parsed from ``key=value`` path segments —
-    mirrors ``timetravel._partition_values`` without a SparkSession.
-    Only ADOPTED files need this (engine layout uses ``__p_`` segments
-    AND keeps the column in the data)."""
-    from urllib.parse import unquote
-
-    pset = set(partition_cols)
-    out: dict = {}
-    for seg in rel.split("/")[:-1]:
-        k, sep, v = seg.partition("=")
-        if not sep:
-            continue
-        if k.startswith("__p_"):
-            k = k[len("__p_"):]
-        if k not in pset:
-            continue
-        v = unquote(v)
-        if v == "__HIVE_DEFAULT_PARTITION__":
-            out[k] = None
-            continue
-        try:
-            out[k] = int(v)
-        except ValueError:
-            try:
-                out[k] = float(v)
-            except ValueError:
-                out[k] = v
-    return out
-
-
 def _part_json_for(rel: str, partition_cols: list[str]) -> str:
     """Serialized path values for a manifest entry, or '' when the
     file carries its partition columns physically."""
     if not partition_cols or rel.startswith("files/"):
         return ""
-    vals = _partition_path_values(rel, partition_cols)
+    vals = _partition_values(rel, partition_cols)
     return json.dumps(vals) if vals else ""
 
 
@@ -277,7 +142,7 @@ def _arrow_batches(
 
     part_vals = json.loads(part_json) if part_json else {}
     want = to_arrow_schema(schema)
-    f, path = _fs_of(abs_path)
+    f, path = _arrow_fs(abs_path)
     with f.open_input_file(path) as fh:
         table = pq.read_table(fh)
     cols = []
@@ -304,7 +169,7 @@ class _TTBatchReader(DataSourceReader):
     def __init__(self, root: str, schema: StructType, options: dict):
         self._root = root
         self._schema = schema
-        self._version = _pick_version(root, options)
+        self._version = _pick_version(TableLog(root), options)
         self._bounds: dict[str, list] = {}
 
     def pushFilters(self, filters):
@@ -346,28 +211,15 @@ class _TTBatchReader(DataSourceReader):
             yield flt  # Spark always re-applies — pruning is partial
 
     def partitions(self):
-        manifest = _read_manifest(self._root, self._version)
-        files, stats = _resolve_files_stats(self._root, manifest)
+        log = TableLog(self._root)
+        manifest = log.manifest(self._version)
+        files, stats = log.resolve(manifest)
         if self._bounds:
-
-            def _keep(rel: str) -> bool:
-                st = stats.get(rel)
-                if st is None:
-                    return True  # absence is never evidence
-                for col, (lo, hi) in self._bounds.items():
-                    rng = st.get(col)
-                    if rng is None or rng[0] is None or rng[1] is None:
-                        continue
-                    if _skip_provable_ds(rng, lo, hi):
-                        return False
-                return True
-
-            files = [rel for rel in files if _keep(rel)]
-        _f, path = _fs_of(self._root)
-        pcols = list(manifest.get("partition_cols") or [])
+            files = [f for f in files if _keep_file(stats, f, self._bounds)]
+        pcols = _partition_cols_of(manifest)
         return [
             _FilePartition(
-                _abs_entry(path, rel),
+                _abs(log.root, rel),
                 self._version,
                 _part_json_for(rel, pcols),
             )
@@ -412,7 +264,8 @@ class _TTStreamReader(DataSourceStreamReader):
             # the timestamp-string form Delta's option takes
             # ('2026-08-16 00:00:00' — session-local, like the RESTORE
             # route).
-            versions = _list_versions(root)
+            log = TableLog(root)
+            versions = log.versions()
             if not versions:
                 raise ValueError(f"no versioned table at {root}")
             try:
@@ -422,7 +275,7 @@ class _TTStreamReader(DataSourceStreamReader):
 
                 ts = datetime.fromisoformat(str(start_ts)).timestamp()
             later = [
-                v for v in versions if _read_manifest(root, v)["ts"] >= ts
+                v for v in versions if log.manifest(v)["ts"] >= ts
             ]
             if later and later[0] - 1 >= 0 and (later[0] - 1) not in versions:
                 # the version preceding the first qualifying commit was
@@ -434,7 +287,7 @@ class _TTStreamReader(DataSourceStreamReader):
             else:
                 self._start = (later[0] - 1) if later else versions[-1]
         elif start is None:
-            versions = _list_versions(root)
+            versions = TableLog(root).versions()
             if not versions:
                 raise ValueError(f"no versioned table at {root}")
             # Delta's default: start from the current snapshot — only
@@ -450,16 +303,16 @@ class _TTStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        versions = _list_versions(self._root)
+        versions = TableLog(self._root).versions()
         return {"version": versions[-1] if versions else self._start}
 
     def partitions(self, start: dict, end: dict):
         lo, hi = int(start["version"]), int(end["version"])
         if hi <= lo:
             return [_FilePartition("")]
-        _f, path = _fs_of(self._root)
+        log = TableLog(self._root)
         out: list[_FilePartition] = []
-        all_versions = _list_versions(self._root)
+        all_versions = log.versions()
         # seed the prev file set AT the start offset (one manifest read),
         # then walk only (lo, hi] — a micro-batch costs O(batch versions)
         # manifest reads, not O(table lifetime)
@@ -480,18 +333,12 @@ class _TTStreamReader(DataSourceStreamReader):
                 "re-raises this error"
             )
         prev: set[str] | None = (
-            set(
-                _resolve_files(
-                    self._root, _read_manifest(self._root, base[-1])
-                )
-            )
-            if base
-            else None
+            set(log.resolve(log.manifest(base[-1]))[0]) if base else None
         )
         for v in [v for v in all_versions if lo < v <= hi]:
-            manifest = _read_manifest(self._root, v)
-            files = _resolve_files(self._root, manifest)
-            pcols = list(manifest.get("partition_cols") or [])
+            manifest = log.manifest(v)
+            files, _stats = log.resolve(manifest)
+            pcols = _partition_cols_of(manifest)
             fset = set(files)
             added = [f for f in files if prev is None or f not in prev]
             removed = prev is not None and not prev <= fset
@@ -518,7 +365,7 @@ class _TTStreamReader(DataSourceStreamReader):
                 )
             out.extend(
                 _FilePartition(
-                    _abs_entry(path, rel), v, _part_json_for(rel, pcols)
+                    _abs(log.root, rel), v, _part_json_for(rel, pcols)
                 )
                 for rel in added
             )
@@ -546,91 +393,17 @@ class _TTWriteMessage(WriterCommitMessage):
 
 # -- Spark-free log commit ---------------------------------------------------
 #
-# Spark runs a Python STREAMING sink's commit() in a detached runner
-# process with no JVM gateway: `SparkSession.builder.getOrCreate()`
+# Spark runs a Python data source writer's commit() in a detached
+# runner process with no JVM gateway: `SparkSession.builder.getOrCreate()`
 # there boots an ENTIRE fresh local JVM (~7-9 s per stream start,
-# measured) just to publish one manifest.  The rest of this data source
-# is already Spark-free (pyarrow manifests + Arrow decode), so the
-# commit gets the same treatment: validate + build + atomically publish
-# the manifest with pyarrow/os only, mirroring
-# ``timetravel.tt_commit_files`` field-for-field.  Conditions the
-# Arrow path can't honor (non-local root — no O_EXCL put-if-absent;
-# CHECK constraints — Spark SQL expressions; exotic stats types) raise
-# ``_ArrowCommitUnsupported`` BEFORE anything publishes and fall back
-# to the session path, so semantics never fork.
-
-_INLINE_MAX_DEFAULT = 1000  # timetravel's spark.astro.tt.inlineFilesMax
-
-
-class _ArrowCommitUnsupported(Exception):
-    """The Spark-free commit can't honor this table/root — fall back."""
-
-
-class _ArrowCommitRace(Exception):
-    """Another writer published the raced version (retry the head)."""
-
-
-def _local_root(root: str) -> str:
-    """Absolute local path of ``root``, or raise (the Arrow commit's
-    isolation story is os.O_EXCL put-if-absent — local/NFS only; other
-    filesystems take the session path)."""
-    if root.startswith("file://"):
-        root = root[len("file://"):]
-    if "://" in root:
-        raise _ArrowCommitUnsupported(f"non-local root {root!r}")
-    return os.path.abspath(root)
-
-
-def _atomic_publish_arrow(path: str, version: int, manifest: dict) -> None:
-    """Put-if-absent of the manifest WITH its content (r14): the former
-    O_CREAT|O_EXCL-then-write claimed the slot atomically but exposed a
-    zero-length file to concurrent readers until the write landed (a
-    reader racing the commit got JSONDecodeError — caught by the
-    linearizability property test), and a writer crash in the window
-    would wedge the version slot.  Write the full JSON to a hidden temp
-    name first, then ``os.link`` it into place: link(2) fails EEXIST
-    atomically and the manifest carries complete content from its first
-    visible instant (works on local and NFS, the same scope as the old
-    O_EXCL story)."""
-    import uuid as _uuid
-
-    log_dir = f"{path}/{_LOG}"
-    os.makedirs(log_dir, exist_ok=True)
-    name = f"v{version:0{_PAD}d}.json"
-    tmp = f"{log_dir}/.{name}.tmp-{_uuid.uuid4().hex}"
-    payload = json.dumps(manifest).encode("utf-8")
-    with open(tmp, "wb") as fh:
-        fh.write(payload)
-    try:
-        os.link(tmp, f"{log_dir}/{name}")
-    except FileExistsError as exc:
-        raise _ArrowCommitRace(
-            f"version {version} was committed by another writer"
-        ) from exc
-    except OSError:
-        # Mounts without hard-link support (SMB/FAT/some FUSE) raise
-        # EPERM/ENOTSUP from link(2) (ADVICE r14): fall back to the old
-        # O_CREAT|O_EXCL open — the empty-file exposure window is the
-        # prior status quo on exactly those filesystems.
-        _excl_publish(f"{log_dir}/{name}", payload, version)
-    finally:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-
-
-def _excl_publish(target: str, payload: bytes, version: int) -> None:
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise _ArrowCommitRace(
-            f"version {version} was committed by another writer"
-        ) from exc
-    try:
-        os.write(fd, payload)
-    finally:
-        os.close(fd)
+# measured) just to publish one manifest.  So the commit is Spark-free:
+# the footer schema and the skipping stats come from Arrow here, the
+# manifest body and its atomic publish from ``tt_log`` — the code the
+# session path's ``timetravel.tt_commit_files`` publishes through too.
+# Conditions this path can't honor (non-local root; CHECK constraints
+# and GENERATED columns — Spark SQL expressions; schema drift; exotic
+# stats types) raise ``_ArrowCommitUnsupported`` BEFORE anything
+# publishes and fall back to the session path, so semantics never fork.
 
 
 def _files_schema_arrow(path: str, files: list[str]):
@@ -678,8 +451,9 @@ def _file_stats_arrow(
 ) -> dict:
     """Per-file [min, max] of the stats columns — exact, computed from
     a column-pruned Arrow read of the just-written (micro-batch-sized)
-    files; int/float/string only, mirroring ``timetravel._STATS_TYPES``
-    minus decimal (whose outward float-widening stays JVM-side)."""
+    files; integer, float, string, date and timestamp columns — the
+    session path's stats types minus decimal, whose outward
+    float-widening stays JVM-side."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -740,189 +514,80 @@ def _file_stats_arrow(
         raise _ArrowCommitUnsupported(f"stats scan: {exc}") from exc
 
 
-def _write_checkpoint_arrow(path: str, files: list[str], stats: dict) -> str:
-    """``timetravel._write_checkpoint``'s exact layout, local-fs."""
-    import uuid as _uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rel = f"{_LOG}/ckpt-{_uuid.uuid4().hex}.parquet"
-    table = pa.table(
-        {
-            "file": pa.array(files, type=pa.string()),
-            "stats": pa.array(
-                [json.dumps(stats[f]) if f in stats else None for f in files],
-                type=pa.string(),
-            ),
-        }
-    )
-    os.makedirs(f"{path}/{_LOG}", exist_ok=True)
-    pq.write_table(table, f"{path}/{rel}")
-    return rel
-
-
-def _body_full_arrow(
-    path: str, files: list[str], stats: dict, inline_max: int
-) -> dict:
-    if len(files) <= inline_max:
-        body: dict = {"files": files, "n_files": len(files)}
-        if stats:
-            body["stats"] = stats
-        return body
-    ref = _write_checkpoint_arrow(path, files, stats)
-    return {"base": ref, "add": [], "remove": [], "n_files": len(files)}
-
-
-def _body_delta_arrow(
-    path: str,
-    root: str,
-    prev: dict,
-    added: list[str],
-    added_stats: dict,
-    inline_max: int,
-) -> dict:
-    """``timetravel._body_delta`` for the append-only (removed=[]) case."""
-    if "base" in prev:
-        add = (prev.get("add") or []) + added
-        remove = prev.get("remove") or []
-        n_files = int(prev["n_files"]) + len(added)
-        if len(add) + len(remove) <= inline_max:
-            add_stats = {**(prev.get("add_stats") or {}), **added_stats}
-            body: dict = {
-                "base": prev["base"],
-                "add": add,
-                "remove": remove,
-                "n_files": n_files,
-            }
-            if add_stats:
-                body["add_stats"] = add_stats
-            return body
-        files, stats = _resolve_files_stats(root, prev)
-        files = files + added
-        stats = dict(stats)
-        stats.update(added_stats)
-        return _body_full_arrow(path, files, stats, inline_max)
-    kept = prev.get("files") or []
-    files = kept + added
-    old = prev.get("stats") or {}
-    stats = {f: old[f] for f in kept if f in old}
-    stats.update(added_stats)
-    return _body_full_arrow(path, files, stats, inline_max)
-
-
 def _commit_files_arrow(
     root: str,
     new_files: list[str],
     mode: str,
-    inline_max: int = _INLINE_MAX_DEFAULT,
+    inline_max: int = _INLINE_MAX,
     max_retries: int = 10,
 ) -> int:
-    """Spark-free twin of ``timetravel.tt_commit_files``: same manifest
-    fields, same append-race retry, same log layout — raises
-    ``_ArrowCommitUnsupported`` (caller falls back to the session path)
-    for non-local roots, constrained tables, schema drift, or exotic
-    stats types.  Nothing publishes before every check passes."""
+    """Spark-free ``timetravel.tt_commit_files``: same manifest fields,
+    same append-race retry — raises ``_ArrowCommitUnsupported`` (caller
+    falls back to the session path) for non-local roots, constrained
+    tables, schema drift, or exotic stats types.  Nothing publishes
+    before every check passes."""
     import time as _time
 
-    path = _local_root(root)
-    file_schema = _files_schema_arrow(path, sorted(new_files))
-    versions = _list_versions(root)
-    if not versions:
-        body = _body_full_arrow(path, sorted(new_files), {}, inline_max)
+    log = TableLog(root, inline_max=inline_max)
+    path = log.fs.local_dir()
+    files = sorted(new_files)
+    file_schema = _files_schema_arrow(path, files)
+    file_schema_json = json.dumps(file_schema.jsonValue())
+    if not log.versions():
         manifest = {
-            **body,
+            **log.body_full(files, {}),
             "op": "create",
             "ts": _time.time(),
-            "schema": json.dumps(file_schema.jsonValue()),
+            "schema": file_schema_json,
         }
         try:
-            _atomic_publish_arrow(path, 0, manifest)
+            log.publish_manifest(0, manifest)
             return 0
-        except _ArrowCommitRace:
-            versions = _list_versions(root)  # lost create: append below
-    def _scan_cols(prev: dict) -> tuple[list[str], list[str], list[str]]:
-        """(stats_cols header, partition_cols header, columns to scan):
-        partition columns join the stats scan — stream-written files
-        carry them physically, and their bounds drive partition
-        pruning exactly like the session path's ``_new_file_stats``."""
-        carry = _manifest_stats_cols(prev)
-        pcarry = list(prev.get("partition_cols") or [])
-        present = {f.name for f in file_schema.fields}
-        cols = [c for c in carry if c in present]
-        cols += [c for c in pcarry if c in present and c not in cols]
-        return carry, pcarry, cols
-
-    if mode == "overwrite":
-        prev = _read_manifest(root, versions[-1])
+        except ConcurrentWriteError:
+            pass  # lost the create: append below
+    for _ in range(max_retries):
+        head, prev = log.head()
         if prev.get("constraints"):
             raise _ArrowCommitUnsupported("table has CHECK constraints")
         if prev.get("generated_cols"):
             # GENERATED ALWAYS AS expressions are Spark SQL — the
             # session path derives/validates them
             raise _ArrowCommitUnsupported("table has GENERATED columns")
-        carry, pcarry, cols = _scan_cols(prev)
-        stats = _file_stats_arrow(path, sorted(new_files), cols) if cols else {}
-        manifest = {
-            **_body_full_arrow(path, sorted(new_files), stats, inline_max),
-            "op": "overwrite",
-            "ts": _time.time(),
-            "schema": json.dumps(file_schema.jsonValue()),
-            **({"stats_cols": carry} if carry else {}),
-            **({"partition_cols": pcarry} if pcarry else {}),
-            **(
-                {"properties": prev["properties"]}
-                if prev.get("properties")
-                else {}
-            ),
-        }
-        _atomic_publish_arrow(path, versions[-1] + 1, manifest)
-        return versions[-1] + 1
-    for _ in range(max_retries):
-        versions = _list_versions(root)
-        head = versions[-1]
-        prev = _read_manifest(root, head)
-        if prev.get("constraints"):
-            raise _ArrowCommitUnsupported("table has CHECK constraints")
-        if prev.get("generated_cols"):
-            raise _ArrowCommitUnsupported("table has GENERATED columns")
-        evolved = _evolved_schema_arrow(prev.get("schema"), file_schema)
-        carry, pcarry, cols = _scan_cols(prev)
-        new_stats = (
-            _file_stats_arrow(path, sorted(new_files), cols) if cols else {}
+        if mode == "overwrite":
+            schema = file_schema_json
+        else:
+            schema = _evolved_schema_arrow(prev.get("schema"), file_schema)
+        # partition columns join the stats scan — stream-written files
+        # carry them physically, and their bounds drive partition
+        # pruning exactly like the session path's ``_new_file_stats``
+        present = {f.name for f in file_schema.fields}
+        cols = [
+            c
+            for c in dict.fromkeys(_stats_cols_of(prev) + _partition_cols_of(prev))
+            if c in present
+        ]
+        stats = _file_stats_arrow(path, files, cols) if cols else {}
+        body = (
+            log.body_full(files, stats)
+            if mode == "overwrite"
+            else log.body_delta(prev, files, [], stats)
         )
         manifest = {
-            **_body_delta_arrow(
-                path, root, prev, sorted(new_files), new_stats, inline_max
-            ),
-            "op": "append",
+            **body,
+            "op": mode,
             "ts": _time.time(),
-            "schema": evolved,
-            **({"stats_cols": carry} if carry else {}),
-            **({"partition_cols": pcarry} if pcarry else {}),
-            **(
-                {"properties": prev["properties"]}
-                if prev.get("properties")
-                else {}
-            ),
+            "schema": schema,
+            **_carry_header(prev),
         }
         try:
-            _atomic_publish_arrow(path, head + 1, manifest)
+            log.publish_manifest(head + 1, manifest)
             return head + 1
-        except _ArrowCommitRace:
-            continue
-    raise RuntimeError(
-        f"lost the append race {max_retries} times at {root}"
+        except ConcurrentWriteError:
+            if mode == "overwrite":
+                raise  # what the overwrite meant to replace has changed
+    raise ConcurrentWriteError(
+        f"commit to {root} lost {max_retries} commit races"
     )
-
-
-def _manifest_stats_cols(manifest: dict) -> list[str]:
-    """``timetravel._stats_cols_of`` without a SparkSession."""
-    cols = manifest.get("stats_cols")
-    if cols:
-        return list(cols)
-    old = manifest.get("stats") or {}
-    return sorted({c for st in old.values() for c in st})
 
 
 class _TTArrowWriter(DataSourceArrowWriter):
@@ -953,15 +618,7 @@ class _TTArrowWriter(DataSourceArrowWriter):
         # table stays manifest-prunable.  Driver-side lookup; absent
         # table (create) or unpartitioned → no splitting.
         try:
-            versions = _list_versions(root)
-            self._pcols = (
-                list(
-                    _read_manifest(root, versions[-1]).get("partition_cols")
-                    or []
-                )
-                if versions
-                else []
-            )
+            self._pcols = _partition_cols_of(TableLog(root).head()[1])
         except Exception:
             self._pcols = []
 
@@ -1001,7 +658,7 @@ class _TTArrowWriter(DataSourceArrowWriter):
         if not batches:
             return _TTWriteMessage([])
         table = pa.Table.from_batches(batches)
-        f, path = _fs_of(self._root)
+        f, path = _arrow_fs(self._root)
         f.create_dir(f"{path}/{self._commit_dir}", recursive=True)
         rels = []
         for part in self._split_tables(table):
@@ -1054,7 +711,7 @@ class _TTArrowWriter(DataSourceArrowWriter):
         )
 
     def abort(self, messages):
-        f, path = _fs_of(self._root)
+        f, path = _arrow_fs(self._root)
         try:  # best-effort: unpublished files are invisible anyway
             f.delete_dir(f"{path}/{self._commit_dir}")
         except Exception:
@@ -1072,19 +729,9 @@ class _TTStreamWriter(DataSourceStreamWriter, _TTArrowWriter):
     whole fresh local JVM per stream (~7-9 s measured).  The commit is
     therefore Arrow-first (``_commit_files_arrow`` — identical manifest
     semantics, pure pyarrow/os), falling back to the session path only
-    for what the Spark-free twin can't honor: non-local roots, tables
+    for what the Spark-free commit can't honor: non-local roots, tables
     with CHECK constraints (Spark SQL expressions), schema drift, or
     decimal stats."""
-
-    def __init__(self, root: str, overwrite: bool, options: dict | None = None):
-        _TTArrowWriter.__init__(self, root, overwrite)
-        opts = options or {}
-        try:
-            self._inline_max = int(
-                opts.get("inlinefilesmax", _INLINE_MAX_DEFAULT)
-            )
-        except (TypeError, ValueError):
-            self._inline_max = _INLINE_MAX_DEFAULT
 
     def write(self, iterator):
         import uuid as _uuid
@@ -1103,7 +750,6 @@ class _TTStreamWriter(DataSourceStreamWriter, _TTArrowWriter):
                 self._root,
                 files,
                 mode="overwrite" if self._overwrite else "append",
-                inline_max=self._inline_max,
             )
         except _ArrowCommitUnsupported:
             _TTArrowWriter.commit(self, messages)
@@ -1129,8 +775,8 @@ class VersionedParquetDataSource(DataSource):
         return root
 
     def schema(self) -> StructType:
-        root = self._root()
-        manifest = _read_manifest(root, _pick_version(root, self.options))
+        log = TableLog(self._root())
+        manifest = log.manifest(_pick_version(log, self.options))
         st = _spark_schema(manifest)
         # the change-tracking column is part of the DECLARED schema when
         # asked for (Spark resolves the plan from schema(), which cannot
@@ -1156,7 +802,7 @@ class VersionedParquetDataSource(DataSource):
     def streamWriter(
         self, schema: StructType, overwrite: bool
     ) -> _TTStreamWriter:
-        return _TTStreamWriter(self._root(), overwrite, dict(self.options))
+        return _TTStreamWriter(self._root(), overwrite)
 
     def streamReader(self, schema: StructType) -> _TTStreamReader:
         return self._reader_with(schema, _TTStreamReader)

@@ -133,20 +133,21 @@ def _plain(v):
 
 
 def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(hconf), jvm, jpath
+    """(Hadoop ``Path`` class, ``path`` as a Hadoop Path, its
+    FileSystem) — the one gateway helper for Hadoop-FS calls."""
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
+    jpath = HPath(path)
+    return HPath, jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def _path_exists(spark, path: str) -> bool:
-    fs, _jvm, jpath = _hadoop_fs(spark, path)
+    _HPath, jpath, fs = _hadoop_fs(spark, path)
     return bool(fs.exists(jpath))
 
 
 def _rename_part_file(spark, tmp_dir: str, dest: str, ext: str) -> None:
-    fs, jvm, jtmp = _hadoop_fs(spark, tmp_dir)
-    jdest = jvm.org.apache.hadoop.fs.Path(dest)
+    HPath, jtmp, fs = _hadoop_fs(spark, tmp_dir)
+    jdest = HPath(dest)
     part = None
     for status in fs.listStatus(jtmp):
         name = status.getPath().getName()

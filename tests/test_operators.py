@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 import astro_spark as a
 from astro_spark.exceptions import MergeConflictError, NonExistentTableError
+from astro_spark.sources.tt_log import TableLog, _copy_body
 from astro_spark.testdata import read_table
 
 
@@ -1833,8 +1834,7 @@ class TestApplyChanges:
         apply_changes(spark, t, changes, ["k"], seq_col="seq", track_seq=True)
         side = _seq_sidecar(t)
         loc = _parquet_location(spark, side.qualified_name)
-        fs, jvm, root = _hadoop_fs(spark, loc)
-        HPath = jvm.org.apache.hadoop.fs.Path
+        HPath, root, fs = _hadoop_fs(spark, loc)
         # simulate an interrupted rewrite: stage + manifest left behind
         spark.createDataFrame([(1, 10)], "k long, __seq long").coalesce(
             1
@@ -2127,9 +2127,9 @@ class TestCowRecovery:
         return tgt
 
     def _fs(self, spark, location):
-        from astro_spark.operators.catalog import _table_fs
+        from astro_spark.sources.writers import _hadoop_fs
 
-        return _table_fs(spark, location)
+        return _hadoop_fs(spark, location)
 
     def test_recover_completes_interrupted_commit(self, spark):
         """Simulate a crash HALFWAY through the rename/delete window:
@@ -2513,63 +2513,101 @@ class TestTimeTravel:
         """A manifest racing into the same version number loses with
         ConcurrentWriteError (overwrite path) or retries transparently
         (append path, whose intent is state-independent)."""
-        from astro_spark.operators import timetravel as tt
-
         root = self._seed(spark, tmp_path)
         # simulate a racing writer: pre-commit version 1 behind our back
-        HPath, _p, fs = tt._fs(spark, root)
-        tt._publish(
-            spark, fs, HPath, root, 1,
-            {"files": [], "op": "rival", "ts": 0.0},
-        )
+        log = TableLog(root)
+        log.publish_manifest(1, {"files": [], "op": "rival", "ts": 0.0})
         with pytest.raises(a.exceptions.AstroSparkError):
             # overwrite races for v1 -> surfaced conflict
-            tt._publish(
-                spark, fs, HPath, root, 1,
-                {"files": [], "op": "loser", "ts": 0.0},
-            )
+            log.publish_manifest(1, {"files": [], "op": "loser", "ts": 0.0})
         # append retries onto v2 and succeeds
         v = a.tt_append(
             spark, spark.createDataFrame([(3, "c")], "k long, v string"), root
         )
         assert v == 2
 
-    def test_publish_falls_back_without_hardlinks(self, spark, tmp_path, monkeypatch):
+    @pytest.mark.parametrize("err", ["EPERM", "ENOTSUP", "ENOSPC", "EIO"])
+    def test_publish_falls_back_without_hardlinks(
+        self, spark, tmp_path, monkeypatch, err
+    ):
         """ADVICE r15: on mounts without hard-link support, link(2)
-        raises EPERM/ENOTSUP — both publish paths must fall back to the
-        old O_CREAT|O_EXCL write (full content, losing race surfaced)."""
-        import json as _json
+        raises EPERM/ENOTSUP — the publish falls back to the old
+        O_CREAT|O_EXCL write (full content, losing race surfaced).  Any
+        other link(2) failure surfaces with its own errno, leaves no
+        version and no temp file, and the next commit lands at that
+        same version."""
+        import errno
         import os as _os
 
-        from astro_spark.operators import timetravel as tt
-        from astro_spark.sources import tt_datasource as ds
+        root = self._seed(spark, tmp_path)
+        code = getattr(errno, err)
+        real_link = _os.link
+
+        def failing_link(src, dst, *args, **kwargs):
+            raise OSError(code, _os.strerror(code))
+
+        monkeypatch.setattr(_os, "link", failing_link)
+        log = TableLog(root)
+        entry = {"files": [], "op": "nolink", "ts": 0.0}
+        if err in ("EPERM", "ENOTSUP"):
+            log.publish_manifest(1, entry)
+            assert log.manifest(1)["op"] == "nolink"
+            with pytest.raises(a.exceptions.ConcurrentWriteError):
+                log.publish_manifest(1, {**entry, "op": "loser"})
+        else:
+            with pytest.raises(OSError) as raised:
+                log.publish_manifest(1, entry)
+            assert raised.value.errno == code
+            assert log.versions() == [0]
+            monkeypatch.setattr(_os, "link", real_link)
+            assert a.tt_append(
+                spark, spark.createDataFrame([(3, "c")], "k long, v string"), root
+            ) == 1
+        assert not [n for n in _os.listdir(f"{root}/_log") if n.startswith(".")]
+
+    def test_relative_root_resolves_against_cwd(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A relative root names ONE directory — the cwd's — for data
+        files and log alike, on every tt_* call (the log used to land
+        under '/' while the data files followed the cwd)."""
+        monkeypatch.chdir(tmp_path)
+        df = spark.createDataFrame([(1, "a")], "k long, v string")
+        assert a.tt_create(spark, df, "relt/t1") == 0
+        assert (tmp_path / "relt" / "t1" / "_log" / "v00000000.json").exists()
+        assert a.tt_append(spark, df, "relt/t1") == 1
+        assert a.tt_read(spark, "relt/t1").count() == 2
+        assert a.tt_read(spark, "relt/t1", version=0).count() == 1
+        assert a.tt_history(spark, "relt/t1").count() == 2
+
+    def test_hadoop_log_io_reads_and_writes_the_same_log(self, spark, tmp_path):
+        """Non-local roots on the session path take the Hadoop-FileSystem
+        I/O, the only code that reaches s3a:// and friends.  Driven here
+        over the local Hadoop filesystem, it reads, publishes,
+        checkpoints, lists and vacuums the same log the os path sees.
+        (Put-if-absent is the filesystem's rename contract — HDFS
+        refuses an existing target, the local Hadoop filesystem
+        replaces it — so local roots never take this path.)"""
+        from astro_spark.sources.tt_log import _HadoopFS
 
         root = self._seed(spark, tmp_path)
-
-        def no_link(src, dst, *args, **kwargs):
-            raise PermissionError("Operation not permitted")
-
-        monkeypatch.setattr(_os, "link", no_link)
-        HPath, _p, fs = tt._fs(spark, root)
-        tt._publish(
-            spark, fs, HPath, root, 1, {"files": [], "op": "nolink", "ts": 0.0}
-        )
-        man = _json.load(
-            open(f"{root}/{tt._LOG}/{tt._manifest_name(1)}")
-        )
-        assert man["op"] == "nolink"
-        with pytest.raises(a.exceptions.AstroSparkError):
-            tt._publish(
-                spark, fs, HPath, root, 1, {"files": [], "op": "loser", "ts": 0.0}
-            )
-        # the Arrow (datasource commit-runner) twin
-        ds._atomic_publish_arrow(root, 2, {"files": [], "op": "arrow", "ts": 0.0})
-        man2 = _json.load(open(f"{root}/{tt._LOG}/{tt._manifest_name(2)}"))
-        assert man2["op"] == "arrow"
-        with pytest.raises(ds._ArrowCommitRace):
-            ds._atomic_publish_arrow(
-                root, 2, {"files": [], "op": "loser", "ts": 0.0}
-            )
+        local = TableLog(root)
+        log = TableLog(root, spark, inline_max=1)
+        log.fs = _HadoopFS(spark, f"file://{root}")
+        v0 = log.manifest(0)
+        assert log.versions() == [0] and v0 == local.manifest(0)
+        files, _stats = log.resolve(v0)
+        assert log.parquet_files("files") == sorted(files)
+        assert log.fs.size(files[0]) == os.path.getsize(f"{root}/{files[0]}")
+        listed = files + ["files/synthetic/part-0.parquet"]
+        body = log.body_full(listed, {})  # past inline_max: a checkpoint
+        log.publish_manifest(1, {**body, "op": "ckpt", "ts": 0.0})
+        assert local.versions() == [0, 1]
+        assert local.resolve(local.manifest(1))[0] == listed
+        orphan = log.write_checkpoint(files, {})
+        log.drop_versions([0], {body["base"]}, set(), grace_s=0.0)
+        assert log.versions() == [1]
+        assert not log.fs.exists(orphan) and log.fs.exists(body["base"])
 
     def test_vacuum_reclaims_only_dead_files(self, spark, tmp_path):
         root = self._seed(spark, tmp_path)
@@ -2593,12 +2631,12 @@ class TestTimeTravel:
         root = self._seed(spark, tmp_path)
         from astro_spark.operators import timetravel as tt
 
-        HPath, _p, fs = tt._fs(spark, root)
+        log = TableLog(root)
         # orphan files = a writer that died before publishing
         tt._write_data_files(
             spark,
             spark.createDataFrame([(666, "ghost")], "k long, v string"),
-            root, fs, HPath,
+            log,
         )
         got = {(r.k, r.v) for r in a.tt_read(spark, root).collect()}
         assert got == {(1, "a"), (2, "b")}
@@ -2617,8 +2655,6 @@ class TestTimeTravel:
         insert, files without matched keys carry over by manifest
         reference (their part-files are byte-identical paths), and the
         pre-merge version stays readable."""
-        from astro_spark.operators import timetravel as tt
-
         root = str(tmp_path / "ttm")
         # two files: k=1..2 in one, k=3..4 in the other
         f1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
@@ -2626,8 +2662,8 @@ class TestTimeTravel:
         a.tt_append(
             spark, spark.createDataFrame([(3, "c"), (4, "d")], "k long, v string"), root
         )
-        HPath, _p, fs = tt._fs(spark, root)
-        before = set(tt._read_manifest(spark, fs, HPath, root, 1)["files"])
+        log = TableLog(root)
+        before = set(log.manifest(1)["files"])
 
         src = spark.createDataFrame(
             [(2, "B2"), (2, "ZZZ"), (5, "e")], "k long, v string"
@@ -2640,12 +2676,10 @@ class TestTimeTravel:
         pre = {(r.k, r.v) for r in a.tt_read(spark, root, 1).collect()}
         assert pre == {(1, "a"), (2, "b"), (3, "c"), (4, "d")}
         # the k=3..4 file was NOT rewritten: its manifest entry carries over
-        after = set(tt._read_manifest(spark, fs, HPath, root, 2)["files"])
+        after = set(log.manifest(2)["files"])
         assert before & after, "untouched file should carry over by reference"
 
     def test_delete_where_rewrites_only_touched_files(self, spark, tmp_path):
-        from astro_spark.operators import timetravel as tt
-
         root = str(tmp_path / "ttd")
         a.tt_create(
             spark, spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), root
@@ -2653,8 +2687,8 @@ class TestTimeTravel:
         a.tt_append(
             spark, spark.createDataFrame([(3, "c"), (4, "d")], "k long, v string"), root
         )
-        HPath, _p, fs = tt._fs(spark, root)
-        before = set(tt._read_manifest(spark, fs, HPath, root, 1)["files"])
+        log = TableLog(root)
+        before = set(log.manifest(1)["files"])
         v = a.tt_delete_where(spark, root, "k = 2")
         assert v == 2
         got = {(r.k, r.v) for r in a.tt_read(spark, root).collect()}
@@ -2663,7 +2697,7 @@ class TestTimeTravel:
         assert (2, "b") in {
             (r.k, r.v) for r in a.tt_read(spark, root, 1).collect()
         }
-        after = set(tt._read_manifest(spark, fs, HPath, root, 2)["files"])
+        after = set(log.manifest(2)["files"])
         assert before & after, "file without matches should carry over"
         # no-match predicate: NO new version
         assert a.tt_delete_where(spark, root, "k = 999") == 2
@@ -2674,8 +2708,6 @@ class TestTimeTravel:
         """tt_optimize rewrites the head layout (fewer files /
         Morton-clustered) as a NEW version with identical rows; the
         pre-optimize version still reads its old file list."""
-        from astro_spark.operators import timetravel as tt
-
         root = str(tmp_path / "tto")
         rows = [(i, i % 7) for i in range(200)]
         a.tt_create(
@@ -2687,9 +2719,9 @@ class TestTimeTravel:
         assert v == 1
         got = sorted((r.k, r.g) for r in a.tt_read(spark, root).collect())
         assert got == sorted(rows)
-        HPath, _p, fs = tt._fs(spark, root)
-        m0 = tt._read_manifest(spark, fs, HPath, root, 0)
-        m1 = tt._read_manifest(spark, fs, HPath, root, 1)
+        log = TableLog(root)
+        m0 = log.manifest(0)
+        m1 = log.manifest(1)
         assert len(m1["files"]) <= 2 < len(m0["files"])
         assert m1["op"] == "optimize(zorder=k,g)"
         # plain compaction too
@@ -2777,16 +2809,14 @@ class TestTimeTravel:
         stats survive append/merge/optimize commits."""
         from pyspark.sql import functions as F
 
-        from astro_spark.operators import timetravel as tt
-
         root = str(tmp_path / "ttskip")
         # 4 range-partitioned files: k in [0,25), [25,50), ...
         df = spark.range(100).select(
             F.col("id").alias("k"), (F.col("id") % 7).alias("g")
         ).repartitionByRange(4, "k")
         a.tt_create(spark, df, root, stats_cols=["k"])
-        HPath, _p, fs = tt._fs(spark, root)
-        m0 = tt._read_manifest(spark, fs, HPath, root, 0)
+        log = TableLog(root)
+        m0 = log.manifest(0)
         assert len(m0["stats"]) == len(m0["files"]) == 4
 
         full = a.tt_read(spark, root)
@@ -2815,9 +2845,7 @@ class TestTimeTravel:
             root, ["k"],
         )
         a.tt_optimize(spark, root, target_files=3, zorder_by=["k"])
-        head = tt._read_manifest(
-            spark, fs, HPath, root, tt._list_versions(fs, HPath, root)[-1]
-        )
+        _v, head = log.head()
         assert set(head["stats"]) == set(head["files"])
         got = a.tt_read(spark, root, skip_by={"k": (1000, None)})
         assert {r.k for r in got.collect()} >= {1000, 1001}
@@ -3830,8 +3858,6 @@ class TestDmlSql:
         in-flight commit)."""
         import os
 
-        from astro_spark.operators import timetravel as tt
-
         root = str(tmp_path / "ttorph")
         spark.conf.set("spark.astro.tt.inlineFilesMax", "1")
         try:
@@ -3845,12 +3871,12 @@ class TestDmlSql:
             a.tt_append(
                 spark, spark.createDataFrame([(9, 9)], "k long, v long"), root
             )  # >1 files -> checkpointed manifest
-            HPath, _p, fs = tt._fs(spark, root)
-            head_v, head_m = tt._head(spark, fs, HPath, root)
+            log = TableLog(root)
+            head_v, head_m = log.head()
             assert "base" in head_m  # the live checkpoint exists
-            files, stats = tt._resolve(spark, fs, HPath, root, head_m)
-            orphan = tt._write_checkpoint(
-                spark, fs, HPath, root, files, stats
+            files, stats = log.resolve(head_m)
+            orphan = log.write_checkpoint(
+                files, stats
             )  # simulates a commit retry that lost the publish race
             names = lambda: {
                 f for f in os.listdir(f"{root}/_log") if f.startswith("ckpt-")
@@ -4076,8 +4102,6 @@ class TestDmlSql:
         the delta tail (and compacting if needed) against the rival's
         state, not just bumping a number.  The rival's rows and ours
         must both survive."""
-        from astro_spark.operators import timetravel as tt
-
         spark.conf.set("spark.astro.tt.inlineFilesMax", "1")
         try:
             root = str(tmp_path / "ttrace")
@@ -4093,16 +4117,16 @@ class TestDmlSql:
             a.tt_append(
                 spark, spark.createDataFrame([(3, 30)], "k long, v long"), root
             )
-            HPath, _p, fs = tt._fs(spark, root)
-            head, m1 = tt._head(spark, fs, HPath, root)
+            log = TableLog(root)
+            head, m1 = log.head()
             assert head == 1 and "base" in m1  # checkpoint form active
             # now simulate OUR append losing the race for version 2:
             # pre-publish a rival v2, then append — the retry loop must
             # land on v3 with a body built against v2's state
-            rival_files, _ = tt._resolve(spark, fs, HPath, root, m1)
-            tt._publish(
-                spark, fs, HPath, root, 2,
-                {**tt._copy_body(m1), "op": "rival", "ts": 0.0,
+            rival_files, _ = log.resolve(m1)
+            log.publish_manifest(
+                2,
+                {**_copy_body(m1), "op": "rival", "ts": 0.0,
                  "schema": m1.get("schema")},
             )
             v = a.tt_append(
@@ -4666,10 +4690,9 @@ class TestPartitionedVersioned:
             p.name for p in (tmp_path / "ow" / "_log").glob("v*.json")
         )
         m1 = _json.load(open(root + f"/_log/{heads[-1]}"))
-        from astro_spark.operators.timetravel import _fs, _resolve
 
-        HPath, _p, fs = _fs(spark, root)
-        files1, stats1 = _resolve(spark, fs, HPath, root, m1)
+        log = TableLog(root)
+        files1, stats1 = log.resolve(m1)
         # r=1 compacted into fewer files; every other file untouched
         r1_after = [f for f in files1 if stats1[f]["r"] == [1, 1]]
         assert len(r1_after) < len(r1_before)
@@ -4814,11 +4837,10 @@ class TestPartitionedVersioned:
             results_format="list",
         )[0].committed_version
         assert v == 1
-        from astro_spark.operators.timetravel import _fs, _head, _resolve
 
-        HPath, _p, fs = _fs(spark, root)
-        _v, m1 = _head(spark, fs, HPath, root)
-        files1, stats1 = _resolve(spark, fs, HPath, root, m1)
+        log = TableLog(root)
+        _v, m1 = log.head()
+        files1, stats1 = log.resolve(m1)
         assert set(untouched) <= set(files1)
         assert a.tt_read(spark, root).count() == 400
         assert sorted(
@@ -5004,17 +5026,13 @@ class TestRound14AdviceFixes:
         """Offset-aware stat strings (old Arrow-commit manifests) vs
         naive predicate literals must KEEP the file, never raise
         (ADVICE r13 #1)."""
-        from astro_spark.operators.timetravel import _skip_provable
-        from astro_spark.sources.tt_datasource import _skip_provable_ds
+        from astro_spark.sources.tt_log import _skip_provable
 
         rng = ["2024-03-01 10:00:00+00:00", "2024-03-02 10:00:00+00:00"]
-        for fn in (_skip_provable, _skip_provable_ds):
-            assert fn(rng, None, "2024-01-01 00:00:00") is False
-            assert fn(rng, "2024-12-01 00:00:00", None) is False
-            # aware-vs-aware still prunes in time space
-            assert (
-                fn(rng, "2024-06-01 00:00:00+00:00", None) is True
-            )
+        assert _skip_provable(rng, None, "2024-01-01 00:00:00") is False
+        assert _skip_provable(rng, "2024-12-01 00:00:00", None) is False
+        # aware-vs-aware still prunes in time space
+        assert _skip_provable(rng, "2024-06-01 00:00:00+00:00", None) is True
 
     def test_arrow_stats_serialize_naive_local(self, tmp_path):
         """_file_stats_arrow must store tz-aware timestamp bounds as
@@ -5103,14 +5121,10 @@ class TestRound14AdviceFixes:
             f"CREATE OR REPLACE TABLE '{root}' USING DELTA AS "
             "SELECT id AS k, id % 2 AS r FROM range(8)",
         )
-        from astro_spark.operators.timetravel import (
-            _fs,
-            _head,
-            _partition_cols_of,
-        )
+        from astro_spark.sources.tt_log import _partition_cols_of
 
-        HPath, _p, fs = _fs(spark, root)
-        _v, head = _head(spark, fs, HPath, root)
+        log = TableLog(root)
+        _v, head = log.head()
         assert _partition_cols_of(head) == []
         assert a.tt_read(spark, root).count() == 8
 
@@ -5151,7 +5165,7 @@ class TestRound14AdviceFixes:
 class TestConcurrentWriters:
     """Round-14: Delta-style WriteSerializable conflict resolution for
     copy-on-write commits (_publish_cow).  The interleaved commit is
-    INJECTED at the loser's publish point (monkeypatched _publish), so
+    INJECTED at the loser's publish point (monkeypatched publish), so
     every schedule is deterministic — the threaded linearizability
     property lives in test_properties.py."""
 
@@ -5166,21 +5180,19 @@ class TestConcurrentWriters:
         return root
 
     def _race(self, monkeypatch, interleave):
-        """Patch timetravel._publish so the FIRST publish of a COW op
-        runs ``interleave()`` first — the injected commit takes the
-        version slot, forcing the outer writer through the rebase."""
-        import astro_spark.operators.timetravel as tt
-
-        orig = tt._publish
+        """Patch TableLog.publish_manifest so the FIRST publish of a
+        COW op runs ``interleave()`` first — the injected commit takes
+        the version slot, forcing the outer writer through the rebase."""
+        orig = TableLog.publish_manifest
         state = {"armed": True}
 
-        def racing(spark, fs, HPath, root, version, manifest):
+        def racing(log, version, manifest):
             if state["armed"] and manifest.get("op") not in (None, "create"):
                 state["armed"] = False
                 interleave()
-            return orig(spark, fs, HPath, root, version, manifest)
+            return orig(log, version, manifest)
 
-        monkeypatch.setattr(tt, "_publish", racing)
+        monkeypatch.setattr(TableLog, "publish_manifest", racing)
 
     def test_disjoint_partitions_both_land(self, spark, tmp_path, monkeypatch):
         root = self._seed(spark, tmp_path)

@@ -1206,6 +1206,7 @@ class TestArrowCommitEquivalence:
         import astro_spark as a
         from astro_spark.operators import timetravel as tt
         from astro_spark.sources.tt_datasource import _commit_files_arrow
+        from astro_spark.sources.tt_log import TableLog
 
         base = tmp_path_factory.mktemp("arroweq") / _uuid.uuid4().hex
         r_jvm, r_arw = str(base / "jvm"), str(base / "arw")
@@ -1239,13 +1240,12 @@ class TestArrowCommitEquivalence:
                 )
                 assert gj == ga, f"version {ver} diverged"
             # identical resolved file lists + skipping stats at head
-            HPj, _pj, fsj = tt._fs(spark, r_jvm)
-            HPa, _pa, fsa = tt._fs(spark, r_arw)
-            vj, mj = tt._head(spark, fsj, HPj, r_jvm)
-            va, ma = tt._head(spark, fsa, HPa, r_arw)
+            lj, la = TableLog(r_jvm), TableLog(r_arw)
+            vj, mj = lj.head()
+            va, ma = la.head()
             assert vj == va
-            fj, sj = tt._resolve(spark, fsj, HPj, r_jvm, mj)
-            fa, sa = tt._resolve(spark, fsa, HPa, r_arw, ma)
+            fj, sj = lj.resolve(mj)
+            fa, sa = la.resolve(ma)
             # v0's seed files carry per-table UUID (hex) names; the BATCH
             # files use a non-hex prefix and identical relative paths —
             # those must match exactly, and the overall count too
@@ -1290,7 +1290,7 @@ class TestConcurrentCommitLinearizability:
         import uuid as _uuid
 
         import astro_spark as a
-        from astro_spark.operators.timetravel import ConcurrentWriteError
+        from astro_spark.exceptions import ConcurrentWriteError
 
         root = str(
             tmp_path_factory.mktemp("ttconc") / _uuid.uuid4().hex

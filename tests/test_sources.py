@@ -507,6 +507,27 @@ class TestVersionedParquetDataSource:
     versionAsOf/timestampAsOf, and a streaming source with Delta's
     append-commit contract."""
 
+    def test_worker_import_stays_light(self):
+        """Every versioned_parquet plan, commit and micro-batch spawns a
+        Python worker that imports this module: it must not pull in the
+        operator layer or pandas (~0.7 s per spawn when it did)."""
+        import subprocess
+        import sys
+
+        code = (
+            "import sys, astro_spark.sources.tt_datasource; "
+            "print([m for m in ('astro_spark.operators', 'pandas') "
+            "if m in sys.modules])"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code],
+            capture_output=True,
+            text=True,
+            check=True,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
+        assert out.stdout.strip() == "[]"
+
     def _seed(self, spark, tmp_path):
         import astro_spark as a
         from astro_spark.sources.tt_datasource import register

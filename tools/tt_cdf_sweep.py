@@ -40,22 +40,19 @@ def build(spark, root: str, n_entries: int, churn: int) -> int:
     the version the change feed should start from."""
     import astro_spark as a
     from astro_spark.operators import timetravel as tt
+    from astro_spark.sources.tt_log import TableLog
 
     a.tt_create(
         spark, spark.createDataFrame([(0, 0)], "k long, v long"), root
     )
-    HPath, _p, fs = tt._fs(spark, root)
-    m0 = tt._read_manifest(spark, fs, HPath, root, 0)
+    log = TableLog(root, spark)
+    m0 = log.manifest(0)
     real = list(m0["files"])
     fakes = [
         f"files/synthetic/part-{i:07d}.parquet" for i in range(n_entries)
     ]
-    ckpt = tt._write_checkpoint(spark, fs, HPath, root, fakes + real, {})
-    tt._publish(
-        spark,
-        fs,
-        HPath,
-        root,
+    ckpt = log.write_checkpoint(fakes + real, {})
+    log.publish_manifest(
         1,
         {
             "base": ckpt,
@@ -73,19 +70,11 @@ def build(spark, root: str, n_entries: int, churn: int) -> int:
             spark,
             spark.createDataFrame([(i + 1, i + 1)], "k long, v long")
             .coalesce(1),
-            root,
-            fs,
-            HPath,
+            log,
         )
-        m_prev = tt._read_manifest(spark, fs, HPath, root, 1 + i)
-        body = tt._body_delta(
-            spark, fs, HPath, root, m_prev, new, [prev_real], {}
-        )
-        tt._publish(
-            spark,
-            fs,
-            HPath,
-            root,
+        m_prev = log.manifest(1 + i)
+        body = log.body_delta(m_prev, new, [prev_real], {})
+        log.publish_manifest(
             2 + i,
             {**body, "op": "churn", "ts": time.time(), "schema": m0["schema"]},
         )
