@@ -25,10 +25,11 @@ Semantics and scale notes:
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .drain import drain_to_memory, source
 
 #: watermark delay used in deterministic mode: nothing is ever late,
 #: state is never evicted (test/backfill only — unbounded state).
@@ -59,22 +60,16 @@ def interval_join_stream(
     mode; see module docstring for the production trade-off.
     """
     delay = watermark_delay or _DETERMINISTIC_DELAY
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
+    left = source(spark, input_path, schema, max_files_per_trigger)
+    # the right side reads the same files through its own source, with
+    # the schema the left one resolved
+    right = source(spark, input_path, left.schema, max_files_per_trigger)
 
-    def _side(filter_sql: str, alias: str) -> DataFrame:
-        reader = spark.readStream.schema(schema)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        return (
-            reader.parquet(input_path)
-            .where(filter_sql)
-            .withWatermark(ts_col, delay)
-            .alias(alias)
-        )
+    def _side(stream: DataFrame, filter_sql: str, alias: str) -> DataFrame:
+        return stream.where(filter_sql).withWatermark(ts_col, delay).alias(alias)
 
-    left = _side(left_filter, "l")
-    right = _side(right_filter, "r")
+    left = _side(left, left_filter, "l")
+    right = _side(right, right_filter, "r")
     pairs = left.join(
         right,
         F.expr(
@@ -87,16 +82,7 @@ def interval_join_stream(
         F.col("r.event_id").alias("right_event_id"),
     )
 
-    name = f"st_ij_{uuid.uuid4().hex[:8]}"
-    query = (
-        pairs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(pairs)
 
 
 def stream_static_join(
@@ -124,24 +110,10 @@ def stream_static_join(
     Drains the backlog with ``availableNow``; returns the enriched rows
     (or a per-``agg_by`` count/sum aggregate) as a batch DataFrame.
     """
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-    enriched = stream.join(dim, on=on, how="inner").select(*select_cols)
-
-    name = f"st_ss_{uuid.uuid4().hex[:8]}"
-    query = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    stream = source(spark, input_path, schema, max_files_per_trigger)
+    out = drain_to_memory(
+        stream.join(dim, on=on, how="inner").select(*select_cols)
     )
-    query.awaitTermination()
-    out = spark.table(name)
     if agg_by:
         out = (
             out.groupBy(agg_by)

@@ -7,11 +7,11 @@ COPY INTO for single files).  The reference is otherwise batch-only
 (SURVEY §1.4); this module is the Spark-native extension that gives
 ``load_file`` an incremental mode:
 
-- ``readStream`` on a file-source directory discovers NEW files only
+- a file-source stream over a directory discovers NEW files only
   (checkpointed), exactly Autoloader's contract;
-- ``trigger(availableNow=True)`` processes the current backlog and stops —
-  the "COPY INTO"-like batch-incremental mode;
-- leaving ``available_now=False`` runs continuous micro-batches.
+- the ``availableNow`` trigger processes the current backlog and stops —
+  the "COPY INTO"-like batch-incremental mode.  Every drain in this
+  package runs that way, through ``drain.py``.
 
 At scale: file listing is incremental via the checkpoint log;
 ``maxFilesPerTrigger`` bounds micro-batch size; the sink appends to a
@@ -29,8 +29,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..file import File, FileType
+from ..file import File
 from ..table import Table
+from .drain import drain, source
 
 
 def load_file_stream(
@@ -39,51 +40,20 @@ def load_file_stream(
     output_table: Table,
     schema: StructType | None = None,
     checkpoint_dir: str | None = None,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    await_termination: bool = True,
 ):
     """Incrementally load new files under a directory into a table.
 
-    Returns the StreamingQuery (already finished when ``available_now``
-    and ``await_termination``).
+    Returns the finished StreamingQuery; the sink directory is
+    registered as the view ``output_table.name``.
     """
-    if isinstance(input_file, str):
-        input_file = File(path=input_file)
-    ftype = input_file.filetype or FileType.PARQUET
-    if schema is None:
-        # file-source streams require a schema: infer from current files
-        # (Autoloader's schema-inference step)
-        schema = spark.read.format(ftype.value if ftype != FileType.NDJSON else "json").load(
-            input_file.path
-        ).schema
-
-    fmt = "json" if ftype == FileType.NDJSON else ftype.value
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_file.path)
-
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="astro_ckpt_")
+    stream = source(spark, input_file, schema, max_files_per_trigger)
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     table_path = os.path.join(warehouse, f"{output_table.name}_stream")
-
-    writer = (
-        stream.writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", table_path)
-        .outputMode("append")
+    query = drain(stream, path=table_path, checkpoint_dir=checkpoint_dir)
+    spark.read.schema(stream.schema).parquet(table_path).createOrReplaceTempView(
+        output_table.name
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-        # surface the sink directory as the output table
-        df = spark.read.schema(schema).parquet(table_path)
-        df.createOrReplaceTempView(output_table.name)
     return query
 
 
@@ -130,20 +100,6 @@ def load_file_stream_merge(
     """
     from ..operators.merge import merge
 
-    if isinstance(input_file, str):
-        input_file = File(path=input_file)
-    ftype = input_file.filetype or FileType.PARQUET
-    fmt = "json" if ftype == FileType.NDJSON else ftype.value
-    if schema is None:
-        schema = spark.read.format(fmt).load(input_file.path).schema
-
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_file.path)
-
     n_merged = 0
 
     def _merge_batch(batch_df, batch_id: int) -> None:
@@ -172,21 +128,12 @@ def load_file_stream_merge(
             sess.catalog.refreshTable(target_table.qualified_name)
             auto_compact(sess, target_table, **(auto_compact_opts or {}))
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="astro_ckpt_")
-    query = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        source(spark, input_file, schema, max_files_per_trigger),
+        _merge_batch,
+        checkpoint_dir=checkpoint_dir,
+        refresh=target_table,
     )
-    query.awaitTermination()
-    # foreachBatch runs the merge on a cloned session; invalidate this
-    # session's file-listing cache so the swapped table reads cleanly.
-    try:
-        spark.catalog.refreshTable(target_table.qualified_name)
-    except Exception:
-        pass
-    return query
 
 
 def load_file_stream_changes(
@@ -244,20 +191,6 @@ def load_file_stream_changes(
             "applied-seq sidecar to expire otherwise)"
         )
 
-    if isinstance(input_file, str):
-        input_file = File(path=input_file)
-    ftype = input_file.filetype or FileType.PARQUET
-    fmt = "json" if ftype == FileType.NDJSON else ftype.value
-    if schema is None:
-        schema = spark.read.format(fmt).load(input_file.path).schema
-
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_file.path)
-
     def _apply_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -271,18 +204,12 @@ def load_file_stream_changes(
             track_seq=enforce_order,
         )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="astro_cdcch_ckpt_")
-    query = (
-        stream.writeStream.foreachBatch(_apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    query = drain(
+        source(spark, input_file, schema, max_files_per_trigger),
+        _apply_batch,
+        checkpoint_dir=checkpoint_dir,
+        refresh=target_table,
     )
-    query.awaitTermination()
-    try:
-        spark.catalog.refreshTable(target_table.qualified_name)
-    except Exception:
-        pass
     if expire_seq_older_than is not None:
         expire_applied_seq(
             spark, target_table, key_cols, expire_seq_older_than
@@ -325,20 +252,6 @@ def load_file_stream_scd2(
     """
     from ..operators.scd import scd2_merge
 
-    if isinstance(input_file, str):
-        input_file = File(path=input_file)
-    ftype = input_file.filetype or FileType.PARQUET
-    fmt = "json" if ftype == FileType.NDJSON else ftype.value
-    if schema is None:
-        schema = spark.read.format(fmt).load(input_file.path).schema
-
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_file.path)
-
     def _apply_batch(batch_df, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
@@ -375,19 +288,12 @@ def load_file_stream_scd2(
                 effective_date=str(d),
             )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="astro_scd2_ckpt_")
-    query = (
-        stream.writeStream.foreachBatch(_apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        source(spark, input_file, schema, max_files_per_trigger),
+        _apply_batch,
+        checkpoint_dir=checkpoint_dir,
+        refresh=target_table,
     )
-    query.awaitTermination()
-    try:
-        spark.catalog.refreshTable(target_table.qualified_name)
-    except Exception:
-        pass
-    return query
 
 
 def fan_out_stream(
@@ -420,13 +326,6 @@ def fan_out_stream(
     """
     import uuid as _uuid
 
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
     out_tables = {
         name: Table(f"fan_{name}_{_uuid.uuid4().hex[:8]}") for name in sinks
     }
@@ -441,14 +340,11 @@ def fan_out_stream(
         finally:
             cached.unpersist()
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="astro_fan_ckpt_")
-    query = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        source(spark, input_path, schema, max_files_per_trigger),
+        _apply,
+        checkpoint_dir=checkpoint_dir,
     )
-    query.awaitTermination()
     for name, t in out_tables.items():
         spark.table(f"{t.name}_t").drop("__batch_id").createOrReplaceTempView(t.name)
     return out_tables
@@ -564,12 +460,7 @@ def aggregate_mv_stream(
 
     Registers the MV as a temp view ``mv_name`` and returns its frame.
     """
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
+    stream = source(spark, input_path, schema, max_files_per_trigger)
     phys = f"{mv_name}_partials"
     if checkpoint_dir is None and spark.catalog.tableExists(phys):
         # fresh (auto-created) checkpoint: partials under the same
@@ -581,21 +472,14 @@ def aggregate_mv_stream(
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         _write_sink_batch(agg_fn(batch_df), phys, batch_id)
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="astro_mv_ckpt_")
-    query = (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(stream, _commit, checkpoint_dir=checkpoint_dir)
 
     from pyspark.sql import functions as F
 
     if not spark.catalog.tableExists(phys):
         # zero files matched → no batch ever fired → empty MV with the
         # aggregated schema (agg_fn over an empty batch defines it)
-        mv = agg_fn(spark.createDataFrame([], schema))
+        mv = agg_fn(spark.createDataFrame([], stream.schema))
         mv.createOrReplaceTempView(mv_name)
         return mv
 
@@ -641,13 +525,6 @@ def ivf_index_stream(
     from ..functions.similarity import ivf_assign, ivf_read_centroids
 
     centroids = ivf_read_centroids(spark, index_path)
-    checkpoint = tempfile.mkdtemp(prefix="astro_ivfstream_ckpt_")
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
     n_batches = 0
 
     def _append(batch_df, batch_id: int) -> None:
@@ -656,13 +533,7 @@ def ivf_index_stream(
         assigned = ivf_assign(batch_df, centroids, vec_col=vec_col)
         assigned.write.mode("append").partitionBy("cell").parquet(index_path)
 
-    query = (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(source(spark, input_path, schema, max_files_per_trigger), _append)
     return n_batches
 
 
@@ -696,20 +567,6 @@ def load_file_stream_versioned(
     """
     from ..operators.timetravel import tt_append, tt_merge
 
-    if isinstance(input_file, str):
-        input_file = File(path=input_file)
-    ftype = input_file.filetype or FileType.PARQUET
-    fmt = "json" if ftype == FileType.NDJSON else ftype.value
-    if schema is None:
-        schema = spark.read.format(fmt).load(input_file.path).schema
-
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_file.path)
-
     def _commit(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -719,12 +576,8 @@ def load_file_stream_versioned(
         else:
             tt_append(sess, batch_df, root)
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="astro_ckpt_")
-    query = (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        source(spark, input_file, schema, max_files_per_trigger),
+        _commit,
+        checkpoint_dir=checkpoint_dir,
     )
-    query.awaitTermination()
-    return query

@@ -33,14 +33,13 @@ tolerates lateness up to the watermark delay but cannot express the
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (re-exported pattern)
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
+
+from .drain import BatchDirs, Held, drain, drain_to_memory, source
 
 OUTPUT_SCHEMA = (
     "user_id bigint, session_start bigint, session_end bigint, n_events bigint"
@@ -55,28 +54,15 @@ def _make_session_fn(gap_seconds: int):
         # vectorized (r14, guide §4.2): the former per-EVENT Python loop
         # ran once per (user × micro-batch) call — with thousands of keys
         # per batch the interpreter loop plus pandas sort dominated the
-        # drain.  Same semantics, in numpy: sort by (ts, event_id),
-        # flag session starts where the floor-second gap to the previous
-        # event (or the carried open session) exceeds the threshold,
-        # emit every segment but the last, carry the last.
+        # drain.  Same semantics, in numpy: sort by ts, flag session
+        # starts where the floor-second gap to the previous event (or
+        # the carried open session) exceeds the threshold, emit every
+        # segment but the last, carry the last.
         chunks = list(pdf_iter)
         pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        ts = pdf["ts"].to_numpy("datetime64[ns]").astype("int64")
-        eid = pdf["event_id"].to_numpy()
-        try:
-            order = np.lexsort((eid, ts))  # primary ts, tie-break event_id
-        except TypeError:
-            # null or mixed-type event_id: object-dtype lexsort raises
-            # (ADVICE r14).  Fall back to the pre-r14 pandas sort, which
-            # tolerates nulls (sorted last within each ts tie) — the
-            # tie-break never changes output (segments read only ts).
-            order = (
-                pdf.reset_index(drop=True)
-                .sort_values(["ts", "event_id"])
-                .index.to_numpy()
-            )
+        ts = np.sort(pdf["ts"].to_numpy("datetime64[ns]").astype("int64"))
         # floor-second epochs (portable: DuckDB floor(epoch(ts)))
-        secs = ts[order] // 1_000_000_000
+        secs = ts // 1_000_000_000
         if state.exists:
             c_start, c_last, c_n = state.get
         else:
@@ -134,12 +120,9 @@ def sessionize_stream(
     and is not emitted — the oracle twin must exclude each user's last
     session.
     """
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    stream = spark.readStream.schema(schema).parquet(input_path)
-
     sessions = (
-        stream.select(F.col(user_col).alias("user_id"), "ts", "event_id")
+        source(spark, input_path, schema)
+        .select(F.col(user_col).alias("user_id"), "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
             _make_session_fn(gap_seconds),
@@ -150,7 +133,6 @@ def sessionize_stream(
         )
     )
 
-    name = f"st_sess_{uuid.uuid4().hex[:8]}"
     # stateful cost scales with partition count (one Python worker + one
     # state-store instance per partition per batch) — size to the key
     # cardinality, not the session default (32 is far too many for small
@@ -159,20 +141,10 @@ def sessionize_stream(
     if shuffle_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        query = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+        return drain_to_memory(sessions)
     finally:
         if shuffle_partitions:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(
-        f"SELECT user_id, session_start, session_end, n_events FROM {name}"
-    )
 
 
 def dedup_stream(
@@ -195,10 +167,7 @@ def dedup_stream(
     """
     from ..functions.text import fingerprint62
 
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    stream = spark.readStream.schema(schema).parquet(input_path)
-    fp = stream.select(
+    fp = source(spark, input_path, schema).select(
         F.col(id_col), fingerprint62(text_col).alias("fp"),
         *( [F.col(ts_col)] if ts_col else [] ),
     )
@@ -209,16 +178,7 @@ def dedup_stream(
         distinct = fp.dropDuplicates(["fp"])
     counted = distinct.groupBy().agg(F.count(F.lit(1)).alias("n_unique_docs"))
 
-    name = f"st_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        counted.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.sql(f"SELECT n_unique_docs FROM {name}")
+    return drain_to_memory(counted, "complete")
 
 
 def bloom_screen_stream(
@@ -319,16 +279,9 @@ def bloom_screen_stream(
             + ")"
         )
 
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    id_type = schema[id_col].dataType.simpleString()
-    text_type = schema[text_col].dataType.simpleString()
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(input_path)
+    stream = source(spark, input_path, schema, max_files_per_trigger)
+    id_type = stream.schema[id_col].dataType.simpleString()
+    text_type = stream.schema[text_col].dataType.simpleString()
     pos = bloom_bit_positions(fingerprint62(text_col), m, k)
 
     def _flag_literal(df):
@@ -349,14 +302,15 @@ def bloom_screen_stream(
             ).alias("maybe_dup"),
         )
 
-    def _flag_broadcast(df, sess):
+    def _flag_broadcast(df, held):
         # mask snapshot ships ONCE per executor; the probe is a single
         # vectorized numpy gather+shift over each Arrow batch — same
         # map-only shape as the literal path, no shuffle, no state
         import numpy as np
 
-        bc = sess.sparkContext.broadcast(
-            np.array([w & ((1 << 64) - 1) for w in words], dtype=np.uint64)
+        bc = held.broadcast(
+            df.sparkSession,
+            np.array([w & ((1 << 64) - 1) for w in words], dtype=np.uint64),
         )
 
         def _probe(batches):
@@ -379,7 +333,7 @@ def bloom_screen_stream(
                     }
                 )
 
-        out = df.select(
+        return df.select(
             F.col(id_col), F.col(text_col), pos.alias("__pos")
         ).mapInPandas(
             _probe,
@@ -388,120 +342,64 @@ def bloom_screen_stream(
                 "maybe_dup boolean"
             ),
         )
-        return out, bc
+
+    def _flag(df, held):
+        return _flag_broadcast(df, held) if use_broadcast else _flag_literal(df)
 
     if not self_screen:
-        bc = None
-        if use_broadcast:
-            flagged, bc = _flag_broadcast(stream, spark)
-        else:
-            flagged = _flag_literal(stream)
-        name = f"st_bloom_{uuid.uuid4().hex[:8]}"
-        query = (
-            flagged.select(id_col, "maybe_dup")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        if bc is not None:
-            # drain is done and the memory sink holds plain rows: the
-            # executor-side mask copies can go
-            bc.unpersist()
-        return spark.sql(f"SELECT {id_col}, maybe_dup FROM {name}")
+        # the memory sink holds plain rows once drained: the
+        # executor-side mask copies go with the drain
+        with Held() as held:
+            return drain_to_memory(_flag(stream, held).select(id_col, "maybe_dup"))
 
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="astro_bloom_self_")
+    out = BatchDirs("bloom_self")
 
     def _screen(batch_df, batch_id: int) -> None:
         # snapshot the CURRENT mask into this batch's probe (the mask
         # mutates between batches, so the broadcast path re-broadcasts
         # the m/8-byte snapshot per batch — still executor-memory
         # scale, never plan scale)
-        bc = None
-        if use_broadcast:
-            flagged, bc = _flag_broadcast(batch_df, batch_df.sparkSession)
-        else:
-            flagged = _flag_literal(batch_df)
-        if within_batch:
-            # keep-first-by-id: an identical fingerprint at a lower id
-            # in THIS batch also flags (and only first occurrences of
-            # novel fingerprints fold into the mask below)
-            from pyspark.sql.window import Window as _W
+        with Held() as held:
+            flagged = _flag(batch_df, held)
+            if within_batch:
+                # keep-first-by-id: an identical fingerprint at a lower id
+                # in THIS batch also flags (and only first occurrences of
+                # novel fingerprints fold into the mask below)
+                from pyspark.sql.window import Window as _W
 
-            wfp = _W.partitionBy("__fp").orderBy(F.col(id_col).asc())
-            flagged = (
-                flagged.withColumn(
-                    "__fp", fingerprint62(text_col)
-                )
-                .withColumn("__rn", F.row_number().over(wfp))
-                .withColumn(
-                    "maybe_dup",
-                    F.col("maybe_dup") | (F.col("__rn") > 1),
-                )
-                .drop("__rn", "__fp")
-            )
-        flagged = flagged.persist()
-        flagged.select(id_col, "maybe_dup").write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}"
-        )
-        accepted_bits = (
-            flagged.where(~F.col("maybe_dup"))
-            .select(
-                F.explode(
-                    bloom_bit_positions(
-                        fingerprint62(text_col), m, k
+                wfp = _W.partitionBy("__fp").orderBy(F.col(id_col).asc())
+                flagged = (
+                    flagged.withColumn(
+                        "__fp", fingerprint62(text_col)
                     )
-                ).alias("bit")
+                    .withColumn("__rn", F.row_number().over(wfp))
+                    .withColumn(
+                        "maybe_dup",
+                        F.col("maybe_dup") | (F.col("__rn") > 1),
+                    )
+                    .drop("__rn", "__fp")
+                )
+            flagged = held.persist(flagged)
+            out.write(flagged.select(id_col, "maybe_dup"), batch_id)
+            accepted_bits = (
+                flagged.where(~F.col("maybe_dup"))
+                .select(
+                    F.explode(
+                        bloom_bit_positions(
+                            fingerprint62(text_col), m, k
+                        )
+                    ).alias("bit")
+                )
+                .distinct()
+                .collect()  # <= m tiny rows, bounded regardless of batch size
             )
-            .distinct()
-            .collect()  # <= m tiny rows, bounded regardless of batch size
-        )
-        flagged.unpersist()
-        if bc is not None:
-            bc.unpersist()
         for r in accepted_bits:
             words[r.bit >> 6] |= 1 << (r.bit & 63)
 
-    query = (
-        stream.writeStream.foreachBatch(_screen)
-        .trigger(availableNow=True)
-        .start()
+    drain(stream, _screen)
+    return out.read(spark, f"{id_col} {id_type}, maybe_dup boolean").select(
+        id_col, "maybe_dup"
     )
-    query.awaitTermination()
-    out = read_batch_dirs(
-        spark, out_dir, f"{id_col} {id_type}, maybe_dup boolean"
-    )
-    return out.select(id_col, "maybe_dup")
-
-
-def read_batch_dirs(spark: SparkSession, out_dir: str, empty_schema: str):
-    """Read back a drain's per-batch result dirs (``batch=*`` layout).
-
-    A drain over an input path whose files were all consumed by ZERO
-    micro-batches (empty dir, already-checkpointed files) writes no
-    ``batch=*`` subdirs, and a bare ``spark.read.parquet`` on the glob
-    raises path-not-found — return an empty frame with the screen's
-    schema instead (ADVICE r7).  ``empty_schema`` is a DDL string; the
-    ``batch_id`` partition column comes back as LONG either way.
-
-    The matched dirs are passed as CONCRETE paths, never the glob
-    string: ``FileStreamSink.hasMetadata`` stats each input path
-    verbatim, and a literal ``batch=*`` path does not exist — Spark
-    logs the resulting FileNotFoundException with a ~40-frame stack at
-    WARN on every drain read, polluting any capture window watching
-    the driver (VERDICT r8 #3).  Real dirs stat cleanly.
-    """
-    import glob as _glob
-    import os as _os
-
-    dirs = sorted(_glob.glob(_os.path.join(out_dir, "batch=*")))
-    if not dirs:
-        return spark.createDataFrame([], empty_schema)
-    return spark.read.option("basePath", out_dir).parquet(*dirs)
 
 
 def minhash_screen_stream(
@@ -544,8 +442,6 @@ def minhash_screen_stream(
     its banding rows twice; duplicate rows only duplicate candidates,
     which the verifier deduplicates — emitted pairs are unchanged.
     """
-    import tempfile
-
     from ..functions.constants import MINHASH_JACCARD_THRESHOLD
     from ..functions.dedup import (
         _banded,
@@ -564,64 +460,52 @@ def minhash_screen_stream(
             "batches to the index and needs index_path"
         )
     threshold = threshold or MINHASH_JACCARD_THRESHOLD
-    idx_schema = None
-    if index_path is not None:
-        # schema captured once: self_screen re-lists the index every
-        # batch and the pinned schema skips per-batch footer reads
-        idx_schema = spark.read.parquet(index_path).schema
-        banded = spark.read.schema(idx_schema).parquet(index_path)
-        id_type = banded.schema["id"].dataType.simpleString()
-    else:
-        banded = _banded(corpus_df, text_col, id_col).persist()
-        banded.count()  # materialize once, not per micro-batch
-        id_type = corpus_df.schema[id_col].dataType.simpleString()
+    out = BatchDirs("mh_screen")
+    with Held() as drain_held:
+        idx_schema = None
+        if index_path is not None:
+            # schema captured once: self_screen re-lists the index every
+            # batch and the pinned schema skips per-batch footer reads
+            idx_schema = spark.read.parquet(index_path).schema
+            banded = spark.read.schema(idx_schema).parquet(index_path)
+            id_type = banded.schema["id"].dataType.simpleString()
+        else:
+            banded = drain_held.persist(_banded(corpus_df, text_col, id_col))
+            banded.count()  # materialize once, not per micro-batch
+            id_type = corpus_df.schema[id_col].dataType.simpleString()
 
-    out_dir = tempfile.mkdtemp(prefix="astro_mh_screen_")
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
+        def _screen(batch_df, batch_id: int) -> None:
+            corpus_banded = (
+                # fresh file listing per batch: prior accepted batches'
+                # banding rows are new index files invisible to the
+                # drain-start plan (pinned schema: skip the footer re-read)
+                batch_df.sparkSession.read.schema(idx_schema).parquet(index_path)
+                if self_screen
+                else banded
+            )
+            pairs = minhash_incremental_pairs(
+                batch_df, corpus_df, text_col, id_col, threshold,
+                corpus_banded=corpus_banded,
+            )
+            with Held() as held:
+                if self_screen:
+                    pairs = held.persist(pairs)
+                out.write(pairs, batch_id)
+                if self_screen:
+                    # the write above materialized the persisted pairs:
+                    # deriving the flagged ids from the cache replaces the
+                    # former read-back of the just-written parquet
+                    # (listing + scan per batch for identical rows, r15)
+                    flagged = pairs.select(
+                        F.col("batch_id").alias(id_col)
+                    ).distinct()
+                    accepted = batch_df.join(flagged, on=id_col, how="left_anti")
+                    update_minhash_index(accepted, index_path, text_col, id_col)
 
-    def _screen(batch_df, batch_id: int) -> None:
-        corpus_banded = (
-            # fresh file listing per batch: prior accepted batches'
-            # banding rows are new index files invisible to the
-            # drain-start plan (pinned schema: skip the footer re-read)
-            batch_df.sparkSession.read.schema(idx_schema).parquet(index_path)
-            if self_screen
-            else banded
-        )
-        pairs = minhash_incremental_pairs(
-            batch_df, corpus_df, text_col, id_col, threshold,
-            corpus_banded=corpus_banded,
-        )
-        if self_screen:
-            pairs = pairs.persist()
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        if self_screen:
-            # the write above materialized the persisted pairs: deriving
-            # the flagged ids from the cache replaces the former
-            # read-back of the just-written parquet (listing + scan per
-            # batch for identical rows, r15)
-            flagged = pairs.select(F.col("batch_id").alias(id_col)).distinct()
-            accepted = batch_df.join(flagged, on=id_col, how="left_anti")
-            update_minhash_index(accepted, index_path, text_col, id_col)
-            pairs.unpersist()
-
-    query = (
-        stream.writeStream.foreachBatch(_screen)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    if index_path is None:
-        banded.unpersist()
-    out = read_batch_dirs(
-        spark, out_dir, f"batch_id long, corpus_id {id_type}, jaccard double"
-    )
-    return out.select("batch_id", "corpus_id", "jaccard")
+        drain(source(spark, input_path, schema, max_files_per_trigger), _screen)
+    return out.read(
+        spark, f"batch_id long, corpus_id {id_type}, jaccard double"
+    ).select("batch_id", "corpus_id", "jaccard")
 
 
 def kmv_stream(
@@ -651,13 +535,6 @@ def kmv_stream(
     """
     from ..functions.sketches import kmv_estimate, shingle_fingerprints
 
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
     state: set[int] = set()
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -673,16 +550,7 @@ def kmv_stream(
             for h in sorted(state)[k:]:
                 state.discard(h)
 
-    query = (
-        stream.writeStream.foreachBatch(_merge)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="astro_kmv_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(source(spark, input_path, schema, max_files_per_trigger), _merge)
 
     agg = spark.createDataFrame(
         [(len(state), max(state) if state else None)],
@@ -725,8 +593,9 @@ def weighted_sample_stream(
 
     from ..functions.text import char_poly_hash
 
+    stream = source(spark, input_path, schema, max_files_per_trigger)
     if schema is None:
-        schema = spark.read.parquet(input_path).schema
+        schema = stream.schema
     cols = cols or [f.name for f in schema.fields]
     if id_col not in cols:
         raise ValueError(
@@ -736,10 +605,6 @@ def weighted_sample_stream(
     missing = [c for c in cols if c not in {f.name for f in schema.fields}]
     if missing:
         raise ValueError(f"weighted_sample_stream: unknown cols {missing}")
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
 
     state: dict = {}  # id -> (priority_key, row tuple)
 
@@ -764,16 +629,7 @@ def weighted_sample_stream(
             state[r[id_col]] = (r["__k"], tuple(r[c] for c in cols))
         _prune()
 
-    query = (
-        stream.writeStream.foreachBatch(_merge)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="astro_wsample_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(stream, _merge)
 
     ordered = sorted(state.items(), key=lambda kv: (kv[1][0], kv[0]))
     data = [kv[1][1] + (i + 1,) for i, kv in enumerate(ordered)]
@@ -831,20 +687,11 @@ def signature_screen_stream(
     twice; duplicate index rows cost re-screen work but never change
     which pairs are emitted (hamming pairs are per-id, deduplicated).
     """
-    import tempfile
-
     from ..functions.dedup import hash_hamming_incremental_pairs
 
     idx_schema = spark.read.parquet(index_path).schema
     inv = spark.read.schema(idx_schema).parquet(index_path).select("id", sig_col)
-
-    out_dir = tempfile.mkdtemp(prefix="astro_sig_screen_")
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
+    out = BatchDirs("sig_screen")
 
     def _screen(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -858,39 +705,32 @@ def signature_screen_stream(
             if self_screen
             else inv
         )
-        # persist: sigs feeds BOTH the pair write and (self_screen) the
-        # accepted-append anti-join — without it sig_fn re-decodes every
-        # payload a second time per micro-batch (ADVICE r9)
-        sigs = sig_fn(batch_df).select("id", sig_col).persist()
-        pairs = hash_hamming_incremental_pairs(
-            sigs, corpus_sigs, id_col="id", hash_col=sig_col,
-            max_hamming=max_hamming,
-        )
-        if self_screen:
-            pairs = pairs.persist()
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        if self_screen:
-            # the write above materialized the persisted pairs: deriving
-            # the flagged ids from the cache replaces the former
-            # read-back of the just-written parquet (listing + scan per
-            # batch for identical rows, r15)
-            flagged = pairs.select(F.col("batch_id").alias("id")).distinct()
-            sigs.join(flagged, on="id", how="left_anti").write.mode(
-                "append"
-            ).parquet(index_path)
-            pairs.unpersist()
-        sigs.unpersist()
+        with Held() as held:
+            # persist: sigs feeds BOTH the pair write and (self_screen) the
+            # accepted-append anti-join — without it sig_fn re-decodes
+            # every payload a second time per micro-batch (ADVICE r9)
+            sigs = held.persist(sig_fn(batch_df).select("id", sig_col))
+            pairs = hash_hamming_incremental_pairs(
+                sigs, corpus_sigs, id_col="id", hash_col=sig_col,
+                max_hamming=max_hamming,
+            )
+            if self_screen:
+                pairs = held.persist(pairs)
+            out.write(pairs, batch_id)
+            if self_screen:
+                # the write above materialized the persisted pairs:
+                # deriving the flagged ids from the cache replaces the
+                # former read-back of the just-written parquet (listing
+                # + scan per batch for identical rows, r15)
+                flagged = pairs.select(F.col("batch_id").alias("id")).distinct()
+                sigs.join(flagged, on="id", how="left_anti").write.mode(
+                    "append"
+                ).parquet(index_path)
 
-    query = (
-        stream.writeStream.foreachBatch(_screen)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    out = read_batch_dirs(
-        spark, out_dir, "batch_id long, corpus_id long, hamming long"
-    )
-    return out.select("batch_id", "corpus_id", "hamming")
+    drain(source(spark, input_path, schema, max_files_per_trigger), _screen)
+    return out.read(
+        spark, "batch_id long, corpus_id long, hamming long"
+    ).select("batch_id", "corpus_id", "hamming")
 
 
 def containment_screen_stream(
@@ -941,10 +781,6 @@ def containment_screen_stream(
     are per-doc independent, so the drained union provably equals the
     one-shot batch screen.
     """
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..functions.constants import CONTAINMENT_THRESHOLD
     from ..functions.dedup import (
         containment_incremental_pairs,
@@ -963,76 +799,62 @@ def containment_screen_stream(
             "accepted batches to the index and needs index_path"
         )
     threshold = threshold if threshold is not None else CONTAINMENT_THRESHOLD
-    idx_schema = None
-    if index_path is not None:
-        # corpus-scale relation: leave it on disk (column-pruned scan
-        # per batch), don't pin it in executor storage.  Capture the
-        # file schema ONCE: self_screen re-lists the index every batch,
-        # and passing the schema skips a per-batch footer read (the
-        # index appends never change its columns).
-        idx_schema = spark.read.parquet(index_path).schema
-        inv = (
-            spark.read.schema(idx_schema)
-            .parquet(index_path)
-            .select("cid", "h")
-        )
-        id_type = inv.schema["cid"].dataType.simpleString()
-    else:
-        inv = corpus_df.select(
-            F.col(id_col).alias("cid"),
-            F.explode(shingle_hash_array(text_col)).alias("h"),
-        ).persist()
-        inv.count()  # materialize once, not per micro-batch
-        id_type = corpus_df.schema[id_col].dataType.simpleString()
+    out = BatchDirs("cont_screen")
+    with Held() as held:
+        idx_schema = None
+        if index_path is not None:
+            # corpus-scale relation: leave it on disk (column-pruned scan
+            # per batch), don't pin it in executor storage.  Capture the
+            # file schema ONCE: self_screen re-lists the index every
+            # batch, and passing the schema skips a per-batch footer read
+            # (the index appends never change its columns).
+            idx_schema = spark.read.parquet(index_path).schema
+            inv = (
+                spark.read.schema(idx_schema)
+                .parquet(index_path)
+                .select("cid", "h")
+            )
+            id_type = inv.schema["cid"].dataType.simpleString()
+        else:
+            inv = held.persist(
+                corpus_df.select(
+                    F.col(id_col).alias("cid"),
+                    F.explode(shingle_hash_array(text_col)).alias("h"),
+                )
+            )
+            inv.count()  # materialize once, not per micro-batch
+            id_type = corpus_df.schema[id_col].dataType.simpleString()
 
-    out_dir = tempfile.mkdtemp(prefix="astro_cont_screen_")
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
+        def _screen(batch_df, batch_id: int) -> None:
+            corpus_inv = (
+                # fresh file listing per batch: prior accepted batches'
+                # shingles are new index files invisible to the
+                # drain-start plan (pinned schema: skip the footer re-read)
+                batch_df.sparkSession.read.schema(idx_schema)
+                .parquet(index_path)
+                .select("cid", "h")
+                if self_screen
+                else inv
+            )
+            pairs = containment_incremental_pairs(
+                batch_df, corpus_df, text_col, id_col, threshold,
+                corpus_inverted=corpus_inv,
+            )
+            out.write(pairs, batch_id)
+            if self_screen:
+                # pairs is already eagerly materialized (localCheckpoint
+                # inside containment_incremental_pairs): deriving the
+                # flagged ids from it reads the checkpoint blocks — the
+                # former read-back of the just-written parquet paid a
+                # listing + scan per batch for identical rows (r15)
+                flagged = pairs.select(F.col("batch_id").alias(id_col)).distinct()
+                accepted = batch_df.join(flagged, on=id_col, how="left_anti")
+                update_containment_index(accepted, index_path, text_col, id_col)
 
-    def _screen(batch_df, batch_id: int) -> None:
-        corpus_inv = (
-            # fresh file listing per batch: prior accepted batches'
-            # shingles are new index files invisible to the
-            # drain-start plan (pinned schema: skip the footer re-read)
-            batch_df.sparkSession.read.schema(idx_schema)
-            .parquet(index_path)
-            .select("cid", "h")
-            if self_screen
-            else inv
-        )
-        pairs = containment_incremental_pairs(
-            batch_df, corpus_df, text_col, id_col, threshold,
-            corpus_inverted=corpus_inv,
-        )
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        if self_screen:
-            # pairs is already eagerly materialized (localCheckpoint
-            # inside containment_incremental_pairs): deriving the
-            # flagged ids from it reads the checkpoint blocks — the
-            # former read-back of the just-written parquet paid a
-            # listing + scan per batch for identical rows (r15)
-            flagged = pairs.select(F.col("batch_id").alias(id_col)).distinct()
-            accepted = batch_df.join(flagged, on=id_col, how="left_anti")
-            update_containment_index(accepted, index_path, text_col, id_col)
-
-    query = (
-        stream.writeStream.foreachBatch(_screen)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    if index_path is None:
-        inv.unpersist()
-    out = read_batch_dirs(
-        spark,
-        out_dir,
-        f"batch_id long, corpus_id {id_type}, containment double",
-    )
-    return out.select("batch_id", "corpus_id", "containment")
+        drain(source(spark, input_path, schema, max_files_per_trigger), _screen)
+    return out.read(
+        spark, f"batch_id long, corpus_id {id_type}, containment double"
+    ).select("batch_id", "corpus_id", "containment")
 
 
 def build_semantic_index(
@@ -1104,10 +926,6 @@ def semantic_screen_stream(
     (batch_id, corpus_id, cos_sim) across the whole drain —
     ``batch_id`` is the batch ITEM's id (the screen-family convention).
     """
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..functions.constants import SEMDEDUP_CENTROIDS, SEMDEDUP_THRESHOLD
     from ..functions.similarity import as_double, dot, ivf_assign, norm
 
@@ -1120,13 +938,7 @@ def semantic_screen_stream(
         F.col("id").alias("corpus_id"), "cell", F.col("u").alias("cu")
     )
 
-    out_dir = tempfile.mkdtemp(prefix="astro_sem_screen_")
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
+    out = BatchDirs("sem_screen")
 
     def _screen(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -1147,42 +959,37 @@ def semantic_screen_stream(
             F.col(id_col).alias("id"),
             as_double(F.col(vec_col)).alias("v"),
         ).withColumn("nrm", norm(F.col("v")))
-        unit = base.select(
-            "cell",
-            "id",
-            F.transform("v", lambda x: x / F.col("nrm")).alias("u"),
-        ).persist()
-        pairs = (
-            unit.join(corpus, on="cell")
-            .select(
-                F.col("id").alias("batch_id"),
-                "corpus_id",
-                F.round(dot(F.col("u"), F.col("cu")), 4).alias("cos_sim"),
+        with Held() as held:
+            unit = held.persist(
+                base.select(
+                    "cell",
+                    "id",
+                    F.transform("v", lambda x: x / F.col("nrm")).alias("u"),
+                )
             )
-            .where(F.col("cos_sim") >= F.lit(threshold))
-        )
-        if self_screen:
-            pairs = pairs.persist()
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        if self_screen:
-            # the write above materialized the persisted pairs: deriving
-            # the flagged ids from the cache replaces the former
-            # read-back of the just-written parquet (listing + scan per
-            # batch for identical rows, r15)
-            flagged = pairs.select(F.col("batch_id").alias("id")).distinct()
-            unit.join(flagged, on="id", how="left_anti").select(
-                "cell", "id", "u"
-            ).write.mode("append").partitionBy("cell").parquet(index_path)
-            pairs.unpersist()
-        unit.unpersist()
+            pairs = (
+                unit.join(corpus, on="cell")
+                .select(
+                    F.col("id").alias("batch_id"),
+                    "corpus_id",
+                    F.round(dot(F.col("u"), F.col("cu")), 4).alias("cos_sim"),
+                )
+                .where(F.col("cos_sim") >= F.lit(threshold))
+            )
+            if self_screen:
+                pairs = held.persist(pairs)
+            out.write(pairs, batch_id)
+            if self_screen:
+                # the write above materialized the persisted pairs:
+                # deriving the flagged ids from the cache replaces the
+                # former read-back of the just-written parquet (listing
+                # + scan per batch for identical rows, r15)
+                flagged = pairs.select(F.col("batch_id").alias("id")).distinct()
+                unit.join(flagged, on="id", how="left_anti").select(
+                    "cell", "id", "u"
+                ).write.mode("append").partitionBy("cell").parquet(index_path)
 
-    query = (
-        stream.writeStream.foreachBatch(_screen)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    out = read_batch_dirs(
-        spark, out_dir, "batch_id long, corpus_id long, cos_sim double"
-    )
-    return out.select("batch_id", "corpus_id", "cos_sim")
+    drain(source(spark, input_path, schema, max_files_per_trigger), _screen)
+    return out.read(
+        spark, "batch_id long, corpus_id long, cos_sim double"
+    ).select("batch_id", "corpus_id", "cos_sim")

@@ -20,10 +20,11 @@ Semantics and scale notes:
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .drain import BatchDirs, Held, drain, drain_to_memory, source
 
 
 def windowed_counts_stream(
@@ -43,15 +44,9 @@ def windowed_counts_stream(
     Returns columns (hour, n_events) where ``hour`` is the window start
     formatted ``yyyy-MM-dd HH`` (epoch-aligned tumbling windows).
     """
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
     agg = (
-        stream.withWatermark(ts_col, watermark_delay)
+        source(spark, input_path, schema, max_files_per_trigger)
+        .withWatermark(ts_col, watermark_delay)
         .groupBy(F.window(ts_col, window_duration).alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -60,16 +55,7 @@ def windowed_counts_stream(
         )
     )
 
-    name = f"st_win_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.sql(f"SELECT hour, n_events FROM {name}")
+    return drain_to_memory(agg, output_mode)
 
 
 def late_data_windowed_counts(
@@ -127,48 +113,29 @@ def drift_screen_stream(
     across the whole drain: contrib localizes WHERE the batch moved away
     from the reference; sum it per batch for an alarm threshold.
     """
-    import tempfile
-
     from ..functions.sampling import distribution_drift
 
-    ref_counts = (
-        ref_df.select(F.expr(bin_expr).alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n_ref"))
-        .persist()
-    )
-    ref_counts.count()  # materialize once, not per micro-batch
-
-    out_dir = tempfile.mkdtemp(prefix="astro_drift_screen_")
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
-    def _screen(batch_df, batch_id: int) -> None:
-        drift = distribution_drift(
-            None, batch_df, F.expr(bin_expr), ref_counts=ref_counts
+    out = BatchDirs("drift_screen")
+    with Held() as held:
+        ref_counts = held.persist(
+            ref_df.select(F.expr(bin_expr).alias("bin"))
+            .groupBy("bin")
+            .agg(F.count(F.lit(1)).alias("n_ref"))
         )
-        drift.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        ref_counts.count()  # materialize once, not per micro-batch
 
-    query = (
-        stream.writeStream.foreachBatch(_screen)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    ref_counts.unpersist()
-    from .sessions import read_batch_dirs
+        def _screen(batch_df, batch_id: int) -> None:
+            drift = distribution_drift(
+                None, batch_df, F.expr(bin_expr), ref_counts=ref_counts
+            )
+            out.write(drift, batch_id)
 
-    out = read_batch_dirs(
+        drain(source(spark, input_path, schema, max_files_per_trigger), _screen)
+    return out.read(
         spark,
-        out_dir,
         "batch long, bin string, n_ref long, n_cand long, "
         "p_ref_e6 long, p_cand_e6 long, contrib long",
-    )
-    return out.select(
+    ).select(
         F.col("batch").cast("long").alias("batch_id"),
         "bin",
         "n_ref",

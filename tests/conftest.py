@@ -22,3 +22,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def _no_stranded_streams(request):
+    """Fail any test that uses ``spark`` and leaves a streaming query
+    running; the stranded queries are stopped so later tests start
+    clean."""
+    spark = request.getfixturevalue("spark") if "spark" in request.fixturenames else None
+    yield
+    if spark is None:
+        return
+    stranded = spark.streams.active
+    for q in stranded:
+        q.stop()
+    assert stranded == [], f"test left {len(stranded)} active stream(s): {[q.name for q in stranded]}"

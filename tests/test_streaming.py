@@ -184,7 +184,7 @@ class TestSessionize:
         # batch 3: 300 closes the carried 3-event session, stays open
         assert drain(batch([(4, 300)])) == [(7, 200, 205, 2)]
         assert state.get == (300, 300, 1)
-        # same-second tie: event_id breaks order deterministically
+        # same-second tie: order within a second cannot change output
         assert drain(batch([(6, 300), (5, 300)])) == []
         assert state.get == (300, 300, 3)
         # empty batch: state carried unchanged, nothing emitted
@@ -1846,7 +1846,7 @@ class TestContainmentScreenStream:
         """A drain that fired ZERO micro-batches leaves no batch=* dirs;
         the read-back must return an empty frame with the screen schema
         instead of raising path-not-found (ADVICE r8)."""
-        from astro_spark.streaming.sessions import read_batch_dirs
+        from astro_spark.streaming.drain import read_batch_dirs
 
         out = read_batch_dirs(
             spark,
@@ -2096,3 +2096,135 @@ class TestSemanticScreenStream:
                 if cs >= 0.9:
                     exp.add((bid, cid, cs))
         assert drained == exp
+
+
+class TestDrain:
+    """The shared drain (``streaming/drain.py``): CSV sources keep their
+    header, a failing batch strands neither a stream nor a persisted
+    frame, and a drain without a checkpoint dir leaves none behind."""
+
+    @pytest.mark.parametrize("drain_fn", ["load_file_stream", "load_file_stream_merge"])
+    def test_csv_drain_reads_header_like_load_file(self, spark, tmp_path, drain_fn):
+        import astro_spark as a
+        from astro_spark import streaming
+        from astro_spark.operators.load_file import save_dataframe_as_table
+        from astro_spark.sources.readers import read_file
+
+        src = tmp_path / "csv_in"
+        src.mkdir()
+        (src / "part-0.csv").write_text("id,name\n1,a\n2,b\n")
+        f = a.File(str(src), filetype=a.FileType.CSV)
+        batch_dtypes = read_file(spark, f).dtypes
+        assert batch_dtypes == [("id", "int"), ("name", "string")]
+
+        if drain_fn == "load_file_stream":
+            out = a.Table(f"csv_s_{tmp_path.name}")
+            streaming.load_file_stream(spark, f, out, checkpoint_dir=str(tmp_path / "ck"))
+        else:
+            out = a.Table(f"csv_m_{tmp_path.name}", temp=False)
+            save_dataframe_as_table(
+                spark.createDataFrame([(1, "old"), (3, "c")], "id int, name string"), out
+            )
+            streaming.load_file_stream_merge(spark, f, out, ["id"])
+        got = spark.table(out.qualified_name)
+        assert got.dtypes == batch_dtypes
+        rows = {r.id: r.name for r in got.collect()}
+        if drain_fn == "load_file_stream":
+            assert rows == {1: "a", 2: "b"}
+        else:
+            assert rows == {1: "a", 2: "b", 3: "c"}
+            a.drop_table(spark, out)
+
+    @pytest.mark.parametrize(
+        "case", ["drift_ref", "minhash_corpus", "containment_corpus", "signature_batch"]
+    )
+    def test_failing_batch_releases_stream_and_persisted_frames(
+        self, spark, tmp_path, monkeypatch, case
+    ):
+        """A batch body that raises: the drain surfaces the batch's error,
+        leaves no active stream, and every frame the drain persisted (the
+        drain-scoped reference/corpus state, or the batch-scoped frames)
+        is released.  Persistent-RDD ids are compared as sets: cleanup of
+        unrelated localCheckpoint RDDs can shrink the map meanwhile."""
+        from pyspark.sql import functions as F
+
+        from astro_spark.functions import dedup, sampling
+        from astro_spark.streaming import (
+            containment_screen_stream,
+            drift_screen_stream,
+            minhash_screen_stream,
+            signature_screen_stream,
+        )
+
+        msg = f"injected batch failure ({case})"
+
+        def boom(*args, **kwargs):
+            raise RuntimeError(msg)
+
+        docs = spark.createDataFrame(
+            [(i, f"doc {i} shares words with its twin {i % 3}", 40 + 50 * i) for i in range(6)],
+            "doc_id long, text string, n_chars long",
+        )
+        src = str(tmp_path / "in")
+        docs.coalesce(1).write.parquet(src)
+        if case == "drift_ref":
+            monkeypatch.setattr(sampling, "distribution_drift", boom)
+            run = lambda: drift_screen_stream(spark, src, docs)  # noqa: E731
+        elif case == "minhash_corpus":
+            monkeypatch.setattr(dedup, "minhash_incremental_pairs", boom)
+            run = lambda: minhash_screen_stream(spark, src, corpus_df=docs)  # noqa: E731
+        elif case == "containment_corpus":
+            monkeypatch.setattr(dedup, "containment_incremental_pairs", boom)
+            run = lambda: containment_screen_stream(spark, src, corpus_df=docs)  # noqa: E731
+        else:
+            idx = str(tmp_path / "sig_idx")
+            docs.select(F.col("doc_id").alias("id"), F.col("n_chars").alias("sig")) \
+                .write.parquet(idx)
+
+            def materialize_then_fail(sigs, *args, **kwargs):
+                sigs.count()  # the batch's persisted signatures are built
+                raise RuntimeError(msg)
+
+            monkeypatch.setattr(dedup, "hash_hamming_incremental_pairs", materialize_then_fail)
+            run = lambda: signature_screen_stream(  # noqa: E731
+                spark, src,
+                lambda b: b.select(F.col("doc_id").alias("id"), F.col("n_chars").alias("sig")),
+                idx,
+            )
+
+        def persistent_ids():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+        before = persistent_ids()
+        with pytest.raises(Exception, match="injected batch failure") as err:
+            run()
+        assert msg in str(err.value)
+        assert spark.streams.active == []
+        assert persistent_ids() - before == set()
+
+    @pytest.mark.parametrize("fail", [False, True])
+    def test_drain_without_checkpoint_dir_leaves_none_behind(
+        self, spark, tmp_path, monkeypatch, fail
+    ):
+        import tempfile as _tempfile
+
+        from astro_spark.functions import sketches
+        from astro_spark.streaming import kmv_stream
+
+        src = str(tmp_path / "in")
+        spark.createDataFrame([("alpha beta gamma",), ("delta epsilon",)], "text string") \
+            .repartition(2).write.parquet(src)
+        tmp_root = tmp_path / "tmp"
+        tmp_root.mkdir()
+        monkeypatch.setattr(_tempfile, "tempdir", str(tmp_root))
+        if fail:
+            def boom(*args, **kwargs):
+                raise RuntimeError("injected batch failure")
+
+            monkeypatch.setattr(sketches, "shingle_fingerprints", boom)
+            with pytest.raises(Exception, match="injected batch failure"):
+                kmv_stream(spark, src, max_files_per_trigger=1)
+        else:
+            assert kmv_stream(spark, src, max_files_per_trigger=1).collect()[0].k_used > 0
+        assert list(tmp_root.iterdir()) == []
+        assert spark.streams.active == []
