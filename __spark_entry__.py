@@ -5500,13 +5500,13 @@ def _op_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a crash during a copy-on-write data write), vacuum it away, prove
     idempotence and that live data survives untouched."""
     from astro_spark.operators.catalog import vacuum_table
-    from astro_spark.operators.merge import _parquet_location
+    from astro_spark.operators.cow import parquet_location
 
     _views(spark, sf_dir)
     tname = f"op_vacuum_{uuid.uuid4().hex[:8]}"
     read_table(spark, sf_dir, "nation").write.format("parquet").saveAsTable(tname)
     t = a.Table(tname, temp=False)
-    loc = _parquet_location(spark, tname).removeprefix("file:")
+    loc = parquet_location(spark, tname).removeprefix("file:")
     stage = os.path.join(loc, ".cow_stage_deadbeef")
     os.makedirs(stage, exist_ok=True)
     with open(os.path.join(stage, "part-junk.parquet"), "wb") as f:
@@ -5729,17 +5729,14 @@ def _op_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     old generation still present) rolls forward to the decided state —
     the write-ahead-manifest redo pass."""
     from astro_spark.operators.catalog import recover_table
-    from astro_spark.operators.merge import (
-        _parquet_location,
-        _write_cow_manifest,
-    )
+    from astro_spark.operators.cow import parquet_location, write_manifest
 
     _views(spark, sf_dir)
     tname = f"op_recover_{uuid.uuid4().hex[:8]}"
     nation = read_table(spark, sf_dir, "nation")
     nation.write.format("parquet").saveAsTable(tname)
     t = a.Table(tname, temp=False)
-    loc = _parquet_location(spark, tname)
+    loc = parquet_location(spark, tname)
     jvm = spark._jvm
     HPath = jvm.org.apache.hadoop.fs.Path
     root = HPath(loc)
@@ -5756,7 +5753,7 @@ def _op_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition(2).write.mode("overwrite").parquet(
         loc.rstrip("/") + "/" + stage_name
     )
-    _write_cow_manifest(fs, HPath, root, gen, stage_name, old_files)
+    write_manifest(fs, HPath, root, gen, old_files)
     staged = HPath(root, stage_name)
     first = next(
         st.getPath()

@@ -17,12 +17,14 @@ driver-side by contract and bounded by the caller's limit.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..sources.writers import _hadoop_fs
 from ..table import Table, validate_identifier
+from . import cow
 
 
 def table_exists(spark: SparkSession, table: Table | str) -> bool:
@@ -209,130 +211,43 @@ def vacuum_table(spark: SparkSession, table: Table | str) -> int:
     returns the count.  Safe while readers run: live data files are
     never touched, and a stage dir whose commit manifest still exists
     is SKIPPED — that commit reached its decision point and belongs to
-    ``recover_table`` (run recovery first, then vacuum).
+    ``recover_table`` (run recovery first, then vacuum).  The protocol
+    lives in ``operators/cow.py``.
     """
-    from ..table import Table as _Table
-    from .merge import _parquet_location
-
-    t = table if isinstance(table, _Table) else _Table(str(table), temp=False)
-    location = _parquet_location(spark, t.qualified_name)
+    t = table if isinstance(table, Table) else Table(str(table), temp=False)
+    location = cow.parquet_location(spark, t.qualified_name)
     if location is None:
         return 0
-    _HPath, root, fs = _hadoop_fs(spark, location)
-    protected = set()
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith(".cow_manifest_") and name.endswith(".json"):
-            import json
-
-            try:
-                man = json.loads(_read_small_file(spark, fs, st.getPath()))
-                protected.add(man.get("stage", ""))
-            except Exception:  # unreadable manifest: leave its stage alone
-                protected.add(".cow_stage_" + name[len(".cow_manifest_"):-len(".json")])
-    n = 0
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and name.startswith(".cow_stage_")
-            and name not in protected
-        ):
-            fs.delete(st.getPath(), True)
-            n += 1
-    return n
-
-
-def _read_small_file(spark: SparkSession, fs, path) -> str:
-    """Read a small FS file (a commit manifest) through the Hadoop
-    FileSystem API — works on any table filesystem (local/HDFS/object
-    store), not just local paths."""
-    stream = fs.open(path)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
+    return cow.vacuum(spark, location)
 
 
 def recover_table(spark: SparkSession, table: Table | str) -> int:
     """Roll interrupted copy-on-write commits FORWARD to completion.
 
-    Every COW commit (merge/DELETE/UPDATE/CDC/compact on parquet
-    targets) persists a ``.cow_manifest_<gen>.json`` — the staged dir
-    plus the exact old-file set to retire — before its rename/delete
-    window, and deletes it as the commit's final act
-    (``operators/merge.py:_write_cow_manifest``).  A manifest found on
-    disk therefore marks a commit that was DECIDED but interrupted:
-    this routine renames any part-files still in the stage dir to
-    their committed names (partition subdirs preserved), deletes the
-    manifest's old files that remain, removes the stage dir, then the
-    manifest.  Each step is idempotent, so recovery itself may crash
-    and re-run.  Returns the number of commits completed.  Transient
-    duplicates readers could see mid-crash disappear the moment
-    recovery finishes — the parquet-table analog of a write-ahead-log
-    redo pass.
+    Every COW commit (merge/DELETE/UPDATE/CDC on parquet targets)
+    persists a write-ahead manifest — the exact old-file set to retire
+    — before its rename/delete window, and deletes it as the commit's
+    final act (``operators/cow.py``).  A manifest found on disk
+    therefore marks a commit that was DECIDED but interrupted: this
+    replays the commit's own roll-forward — renames any part-files
+    still in the stage dir to their committed names (partition subdirs
+    preserved), deletes the old files that remain, removes the stage
+    dir, then the manifest.  Each step is idempotent, so recovery
+    itself may crash and re-run.  A truncated manifest (a crash before
+    the decision point) is deleted so new commits can proceed.  Returns
+    the number of commits completed.  Transient duplicates readers
+    could see mid-crash disappear the moment recovery finishes — the
+    parquet-table analog of a write-ahead-log redo pass.
     """
-    import json
-
-    from ..table import Table as _Table
-    from .merge import _parquet_location
-
-    t = table if isinstance(table, _Table) else _Table(str(table), temp=False)
-    location = _parquet_location(spark, t.qualified_name)
+    t = table if isinstance(table, Table) else Table(str(table), temp=False)
+    location = cow.parquet_location(spark, t.qualified_name)
     if location is None:
         return 0
-    HPath, root, fs = _hadoop_fs(spark, location)
-    manifests = [
-        st.getPath()
-        for st in fs.listStatus(root)
-        if st.getPath().getName().startswith(".cow_manifest_")
-        and st.getPath().getName().endswith(".json")
-    ]
-    n = 0
-    for man_path in manifests:
-        # Read OUTSIDE the corrupt-manifest handler: a transient IO error
-        # (object-store hiccup, permission blip) must propagate — a complete
-        # manifest marks a DECIDED commit that must roll forward, and
-        # deleting it on a read failure would silently roll the commit back
-        # and lose the update when vacuum later reaps the stage (ADVICE r8).
-        raw = _read_small_file(spark, fs, man_path)
-        try:
-            man = json.loads(raw)
-            gen, stage_name = man["gen"], man["stage"]
-        except (ValueError, KeyError, TypeError):
-            # truncated/corrupt manifest = the crash hit MID-manifest-write,
-            # i.e. BEFORE the commit's decision point (the manifest write IS
-            # the decision).  The commit never happened: delete the manifest
-            # so the single-writer guard unwedges, and leave the inert stage
-            # dir for vacuum_table (ADVICE r7).  json.JSONDecodeError is a
-            # ValueError subclass.
-            fs.delete(man_path, False)
-            continue
-        staged = HPath(root, stage_name)
-        if fs.exists(staged):
-            stage_uri = staged.toUri().getPath()
-            it = fs.listFiles(staged, True)
-            while it.hasNext():
-                p = it.next().getPath()
-                if not p.getName().startswith("part-"):
-                    continue
-                rel = p.toUri().getPath()[len(stage_uri):].lstrip("/")
-                rel_dir = rel.rsplit("/", 1)[0] if "/" in rel else ""
-                out_dir = HPath(root, rel_dir) if rel_dir else root
-                fs.mkdirs(out_dir)
-                fs.rename(p, HPath(out_dir, f"cow-{gen}-{p.getName()}"))
-        for f in man["old_files"]:
-            fs.delete(HPath(f), False)
-        if fs.exists(staged):
-            fs.delete(staged, True)
-        fs.delete(man_path, False)
-        n += 1
+    n = cow.recover(spark, location)
     if n:
         try:
             spark.catalog.refreshTable(t.qualified_name)
-        except Exception:
+        except AnalysisException:
             pass
     return n
 

@@ -31,20 +31,20 @@ Semantics:
   resurrect a newer tombstone's key.
 
 Physical story: a batch carrying BOTH upserts and tombstones commits
-through ``_apply_fused`` on unpartitioned parquet targets — one
-semi-join discovers the files touched by any change key and ONE
-copy-on-write pass rewrites them with deletes anti-joined out and
-upserts merged in, so overlapping files are never rewritten twice.
-Otherwise upserts commit through ``merge``'s scale machinery
-(partition-scoped dynamic overwrite / file-scoped copy-on-write —
-O(touched files), not table size), and deletes: a small SINGLE-column
-key set pushes down as an ``isin`` literal (parquet min/max + bloom
-pruning at the scan); anything else — multi-column keys or any number
-of tombstones past the cap — deletes through
-``delete_rows_by_keys``'s semi-join-driven file-scoped copy-on-write,
-so delete cost is O(touched files) at ANY tombstone count (never a
-full-table swap, never a 10k-term OR expression tree).  Re-applying
-the same change set is a no-op (upsert and delete are both
+through ``merge``'s file-scoped copy-on-write upsert with the
+tombstones as its deletes (``operators/cow.py``) — one semi-join
+discovers the files touched by any change key and ONE commit rewrites
+them with deletes anti-joined out and upserts merged in, so overlapping
+files are never rewritten twice.  Otherwise upserts commit through
+``merge``'s scale machinery (partition-scoped dynamic overwrite /
+file-scoped copy-on-write — O(touched files), not table size), and
+deletes: a small SINGLE-column key set pushes down as an ``isin``
+literal (parquet min/max + bloom pruning at the scan); anything else —
+multi-column keys or any number of tombstones past the cap — deletes
+through ``delete_rows_by_keys``'s semi-join-driven file-scoped
+copy-on-write, so delete cost is O(touched files) at ANY tombstone
+count (never a full-table swap, never a 10k-term OR expression tree).
+Re-applying the same change set is a no-op (upsert and delete are both
 idempotent; with ``track_seq`` the replay is filtered out entirely) —
 pinned in tests.
 """
@@ -57,20 +57,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..table import Table
+from . import cow
 from .dml import delete_rows, delete_rows_by_keys
-from .merge import (
-    KEY_PUSHDOWN_CAP,
-    MAX_TOUCHED_FILES,
-    _align,
-    _cow_commit_partitioned,
-    _cow_stage_partitioned,
-    _cow_swap_files,
-    _no_partition_moves,
-    _parquet_location,
-    _partition_columns,
-    _upsert,
-    merge,
-)
+from .merge import _partition_columns, _upsert_file_scoped, merge
 
 #: single-column tombstone key sets up to this size delete via a
 #: pushed-down ``isin`` literal (row-group pruning at the scan); larger
@@ -122,85 +111,88 @@ def apply_changes(
         )
 
     persisted = None
-    if seq_col is not None:
-        # ONE pass validates the feed AND counts the applicable changes
-        # (r15, VERDICT r14 #4 — the former separate pre-validation agg
-        # and latest-stats agg cost two driver-synchronized jobs plus
-        # two plan analyses per call, and a streaming drain pays that
-        # per micro-batch).  The annotated frame carries the per-key
-        # latest rank and (when a sidecar exists) the already-applied
-        # seq; validation counts read ALL rows, apply counts read the
-        # keep-predicate rows, in the same aggregate.  The sidecar join
-        # keys match the window partitioning, so it rides the window's
-        # exchange rather than adding one.
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col(seq_col).desc(), F.col(op_col).desc()
-        )
-        ann = changes.withColumn("__rn", F.row_number().over(w))
-        keep = F.col("__rn") == 1
-        helper_cols = ["__rn"]
-        if sidecar_exists:
-            applied = spark.table(applied_sidecar.qualified_name).select(
-                *key_cols, F.col("__seq").alias("__applied_seq")
-            )
-            ann = ann.join(applied, on=key_cols, how="left")
-            keep = keep & (
-                F.col("__applied_seq").isNull()
-                | (F.col(seq_col) > F.col("__applied_seq"))
-            )
-            helper_cols.append("__applied_seq")
-        ann = ann.persist()
-        persisted = ann
-        stats = ann.agg(
-            F.sum(bad_op.cast("long")).alias("n_bad"),
-            F.sum((keep & (F.col(op_col) != "D")).cast("long")).alias("n_up"),
-            F.sum((keep & (F.col(op_col) == "D")).cast("long")).alias("n_del"),
-        ).collect()[0]
-        if stats["n_bad"]:
-            ann.unpersist()
-            raise ValueError(
-                f"apply_changes: {stats['n_bad']} change row(s) carry a "
-                f"NULL or unknown {op_col!r} value (must be one of "
-                f"{_VALID_OPS}) — refusing to apply a corrupted change feed"
-            )
-        latest = ann.where(keep).drop(*helper_cols)
-        n_up = int(stats["n_up"] or 0)
-        n_del = int(stats["n_del"] or 0)
-    else:
-        # no seq: validate with ONE map-side-combined aggregate over the
-        # raw changes — corrupt ops are a global any(); duplicate keys
-        # show as count(*) != count_distinct(keys).  struct-wrap the
-        # keys: count_distinct over bare columns SKIPS rows where any
-        # key is NULL, so a NULL-keyed row would falsely trip the
-        # duplicate-key guard — a non-null struct with null fields
-        # counts each NULL tuple once (ADVICE r7).  No persist: a
-        # streaming drain's single-op micro-batches stay two-job cheap.
-        pre = changes.agg(
-            F.sum(bad_op.cast("long")).alias("n_bad"),
-            F.count(F.lit(1)).alias("n_all"),
-            F.sum((F.col(op_col) != "D").cast("long")).alias("n_up_all"),
-            F.sum((F.col(op_col) == "D").cast("long")).alias("n_del_all"),
-            F.count_distinct(
-                F.struct(*[F.col(k) for k in key_cols])
-            ).alias("n_keys"),
-        ).collect()[0]
-        if pre["n_bad"]:
-            raise ValueError(
-                f"apply_changes: {pre['n_bad']} change row(s) carry a NULL "
-                f"or unknown {op_col!r} value (must be one of {_VALID_OPS}) "
-                "— refusing to apply a corrupted change feed"
-            )
-        if (pre["n_all"] or 0) != (pre["n_keys"] or 0):
-            raise ValueError(
-                "apply_changes: multiple changes share a key but no "
-                "seq_col was given — ordering would be arbitrary"
-            )
-        latest = changes  # one change per key, just proven
-        n_up = int(pre["n_up_all"] or 0)
-        n_del = int(pre["n_del_all"] or 0)
-
     try:
+        if seq_col is not None:
+            # ONE pass validates the feed AND counts the applicable changes
+            # (r15, VERDICT r14 #4 — the former separate pre-validation agg
+            # and latest-stats agg cost two driver-synchronized jobs plus
+            # two plan analyses per call, and a streaming drain pays that
+            # per micro-batch).  The annotated frame carries the per-key
+            # latest rank and (when a sidecar exists) the already-applied
+            # seq; validation counts read ALL rows, apply counts read the
+            # keep-predicate rows, in the same aggregate.  The sidecar join
+            # keys match the window partitioning, so it rides the window's
+            # exchange rather than adding one.
+            w = Window.partitionBy(*key_cols).orderBy(
+                F.col(seq_col).desc(), F.col(op_col).desc()
+            )
+            ann = changes.withColumn("__rn", F.row_number().over(w))
+            keep = F.col("__rn") == 1
+            helper_cols = ["__rn"]
+            if sidecar_exists:
+                applied = spark.table(applied_sidecar.qualified_name).select(
+                    *key_cols, F.col("__seq").alias("__applied_seq")
+                )
+                ann = ann.join(applied, on=key_cols, how="left")
+                keep = keep & (
+                    F.col("__applied_seq").isNull()
+                    | (F.col(seq_col) > F.col("__applied_seq"))
+                )
+                helper_cols.append("__applied_seq")
+            ann = ann.persist()
+            persisted = ann
+            stats = ann.agg(
+                F.sum(bad_op.cast("long")).alias("n_bad"),
+                F.sum((keep & (F.col(op_col) != "D")).cast("long")).alias("n_up"),
+                F.sum((keep & (F.col(op_col) == "D")).cast("long")).alias("n_del"),
+            ).collect()[0]
+            if stats["n_bad"]:
+                raise ValueError(
+                    f"apply_changes: {stats['n_bad']} change row(s) carry a "
+                    f"NULL or unknown {op_col!r} value (must be one of "
+                    f"{_VALID_OPS}) — refusing to apply a corrupted change feed"
+                )
+            latest = ann.where(keep).drop(*helper_cols)
+            n_up = int(stats["n_up"] or 0)
+            n_del = int(stats["n_del"] or 0)
+        else:
+            # no seq: validate with ONE map-side-combined aggregate over the
+            # raw changes — corrupt ops are a global any(); duplicate keys
+            # show as count(*) != count_distinct(keys).  struct-wrap the
+            # keys: count_distinct over bare columns SKIPS rows where any
+            # key is NULL, so a NULL-keyed row would falsely trip the
+            # duplicate-key guard — a non-null struct with null fields
+            # counts each NULL tuple once (ADVICE r7).  No persist: a
+            # streaming drain's single-op micro-batches stay two-job cheap.
+            pre = changes.agg(
+                F.sum(bad_op.cast("long")).alias("n_bad"),
+                F.count(F.lit(1)).alias("n_all"),
+                F.sum((F.col(op_col) != "D").cast("long")).alias("n_up_all"),
+                F.sum((F.col(op_col) == "D").cast("long")).alias("n_del_all"),
+                F.count_distinct(
+                    F.struct(*[F.col(k) for k in key_cols])
+                ).alias("n_keys"),
+            ).collect()[0]
+            if pre["n_bad"]:
+                raise ValueError(
+                    f"apply_changes: {pre['n_bad']} change row(s) carry a NULL "
+                    f"or unknown {op_col!r} value (must be one of {_VALID_OPS}) "
+                    "— refusing to apply a corrupted change feed"
+                )
+            if (pre["n_all"] or 0) != (pre["n_keys"] or 0):
+                raise ValueError(
+                    "apply_changes: multiple changes share a key but no "
+                    "seq_col was given — ordering would be arbitrary"
+                )
+            latest = changes  # one change per key, just proven
+            n_up = int(pre["n_up_all"] or 0)
+            n_del = int(pre["n_del_all"] or 0)
 
+        upserts = latest.where(F.col(op_col) != "D").select(*data_cols)
+        # no .distinct(): latest carries exactly one change per key
+        # (rank-1 window on the seq path, uniqueness proven on the
+        # no-seq path), so the projection is already duplicate-free
+        tombstones = latest.where(F.col(op_col) == "D").select(*key_cols)
         fused = False
         if n_up and n_del:
             # both sides present: ONE fused copy-on-write commit applies
@@ -208,13 +200,19 @@ def apply_changes(
             # key set are discovered with a single semi-join and
             # rewritten once, instead of merge-then-delete rewriting
             # overlapping files twice (per-batch cost halves on a
-            # high-frequency CDC drain)
-            fused = _apply_fused(
-                spark, target_table, latest, key_cols, op_col, data_cols
+            # high-frequency CDC drain).  The two key sets are disjoint
+            # (one change per key), so one pass equals merge-then-delete.
+            fused = _upsert_file_scoped(
+                spark,
+                target_table,
+                _partition_columns(spark, target_table),
+                upserts,
+                key_cols,
+                latest.select(*key_cols),
+                deletes=tombstones,
             )
 
         if n_up and not fused:
-            upserts = latest.where(F.col(op_col) != "D").select(*data_cols)
             src = Table(f"_tmp_cdc_up_{uuid.uuid4().hex[:8]}")
             upserts.createOrReplaceTempView(src.name)
             try:
@@ -223,10 +221,6 @@ def apply_changes(
                 spark.catalog.dropTempView(src.name)
 
         if n_del and not fused:
-            # no .distinct(): latest carries exactly one change per key
-            # (rank-1 window on the seq path, uniqueness proven on the
-            # no-seq path), so the projection is already duplicate-free
-            tombstones = latest.where(F.col(op_col) == "D").select(*key_cols)
             if len(key_cols) == 1 and n_del <= delete_pushdown_cap:
                 keys = tombstones.collect()
                 delete_rows(
@@ -277,112 +271,6 @@ def apply_changes(
             persisted.unpersist()
 
 
-def _apply_fused(
-    spark: SparkSession,
-    target_table: Table,
-    latest: DataFrame,
-    key_cols: list[str],
-    op_col: str,
-    data_cols: list[str],
-) -> bool:
-    """One-commit upsert+delete: rewrite the files touched by ANY change
-    key with tombstoned rows anti-joined out and upserts merged in
-    (new keys ride along as inserts in the same staged write).
-
-    Upsert keys and delete keys are disjoint by construction (``latest``
-    keeps exactly one change per key), so applying both in one pass is
-    order-independent and equals merge-then-delete — pinned by the
-    mixed-op tests.  Works on unpartitioned parquet targets AND on
-    partitioned ones when no matched upsert would move a row between
-    partitions (``_no_partition_moves`` — deletes never move rows, so
-    only the upsert side gates): untouched files keep their paths,
-    new-key inserts append through ``insertInto`` so new partitions
-    register.  Returns False to fall back to the two-step path when
-    ineligible, including a touched set over ``MAX_TOUCHED_FILES``.
-    """
-    name = target_table.qualified_name
-    location = _parquet_location(spark, name)
-    if location is None:
-        return False
-    part_cols = _partition_columns(spark, target_table)
-    tgt = spark.table(name)
-    tbl_cols = tgt.columns
-    try:
-        tagged = tgt.select(
-            *tbl_cols, F.col("_metadata.file_path").alias("__file")
-        )
-    except Exception:  # pragma: no cover - source without file metadata
-        return False
-
-    upserts = latest.where(F.col(op_col) != "D").select(*data_cols)
-    if part_cols and not _no_partition_moves(
-        tgt, upserts, key_cols, part_cols
-    ):
-        return False
-
-    # no .distinct(): latest is one-row-per-key by construction
-    all_keys = latest.select(*key_cols)
-    # small combined key set: sargable per-column isin SUPERSET so
-    # parquet min/max stats prune the discovery scan (exactness comes
-    # from the semi-join, never the filter)
-    key_rows = all_keys.limit(KEY_PUSHDOWN_CAP + 1).collect()
-    discovery = tagged
-    if len(key_rows) <= KEY_PUSHDOWN_CAP:
-        for i, k in enumerate(key_cols):
-            vals = list({r[i] for r in key_rows if r[i] is not None})
-            if vals:
-                discovery = discovery.where(F.col(k).isin(vals))
-    files = [
-        r[0]
-        for r in discovery.join(all_keys, on=key_cols, how="left_semi")
-        .select("__file")
-        .distinct()
-        .limit(MAX_TOUCHED_FILES + 1)
-        .collect()
-    ]
-    if len(files) > MAX_TOUCHED_FILES:
-        return False
-
-    if files:
-        touched = tagged.where(F.col("__file").isin(files)).drop("__file")
-    else:
-        touched = tgt.where(F.lit(False))
-    del_keys = latest.where(F.col(op_col) == "D").select(*key_cols)
-    kept = touched.join(del_keys, on=key_cols, how="left_anti")
-
-    if not part_cols:
-        # flat: new keys ride along as inserts in the single staged write
-        result = _align(
-            _upsert(kept, upserts, key_cols).select(*tbl_cols), tgt
-        )
-        _cow_swap_files(spark, name, location, files, result)
-        return True
-
-    # partitioned: matched upserts rewrite in place inside their
-    # partition dirs; new keys append via insertInto (registers new
-    # partitions).  The insert append runs between stage and commit,
-    # reading only the old generation — a crash before the commit
-    # leaves inserts applied and the stage inert (no manifest yet);
-    # re-applying the batch is idempotent.
-    touched_keys = touched.select(*key_cols).distinct()
-    matched_src = upserts.join(touched_keys, on=key_cols, how="left_semi")
-    inserts = upserts.join(touched_keys, on=key_cols, how="left_anti")
-    rewrite = _align(
-        _upsert(kept, matched_src, key_cols).select(*tbl_cols), tgt
-    )
-    staged = None
-    if files:
-        staged = _cow_stage_partitioned(spark, location, part_cols, rewrite)
-    if inserts.limit(1).count() > 0:
-        _align(inserts, tgt).select(*tbl_cols).write.mode("append").insertInto(
-            name
-        )
-    if staged is not None:
-        _cow_commit_partitioned(spark, location, files, staged)
-    spark.catalog.refreshTable(name)
-    return True
-
-
 def expire_applied_seq(
     spark: SparkSession,
     target_table: Table,
@@ -407,7 +295,7 @@ def expire_applied_seq(
     Returns the number of sidecar entries dropped.  Costs one scan of
     the sidecar + a null-safe liveness join against target KEYS only,
     never target data columns.  The rewrite reuses the copy-on-write
-    manifest commit (``merge.py:_cow_swap_files``): the kept rows stage
+    manifest commit (``operators/cow.py``): the kept rows stage
     inside the sidecar's own location, the manifest is persisted before
     the rename/delete window, and ``recover_table`` rolls any
     interrupted rewrite forward — a crash can never lose the sidecar
@@ -444,12 +332,10 @@ def expire_applied_seq(
     if n == 0:
         return 0
     kept = marked.where(~dead_expired).drop("__live")
-    location = _parquet_location(spark, sidecar.qualified_name)
+    location = cow.parquet_location(spark, sidecar.qualified_name)
     if location is not None:
         old_files = list(spark.table(sidecar.qualified_name).inputFiles())
-        _cow_swap_files(
-            spark, sidecar.qualified_name, location, old_files, kept
-        )
+        cow.commit(spark, sidecar.qualified_name, location, old_files, kept)
         return n
     # temp-view sidecar: no filesystem location to COW-commit into —
     # stage through a temp dir (Spark cannot overwrite a table it is

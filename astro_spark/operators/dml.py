@@ -6,17 +6,17 @@ parquet has no row-level ops, so these are emulated.
 
 Physical strategy (mirrors the merge operator's ladder):
 
-1. **File-scoped copy-on-write** (parquet tables, partitioned or not):
-   find the data files containing ≥1 row matching the condition
-   (``_metadata.file_path`` scan — parquet row-group stats and
-   partition pruning cut the discovery), rewrite ONLY those files in
-   place (inside their partition directories when partitioned), move
-   the new generation in, delete the old.  A selective DELETE on
-   100 TB rewrites the matching files, not the table.  Untouched files
-   keep their paths (pinned by ``test_delete_file_scoped`` /
-   ``test_partitioned_dml_file_scoped``).  DELETE never moves rows
-   between partitions; UPDATE takes this path only when ``set_map``
-   touches no partition column (otherwise rows could move).
+1. **File-scoped copy-on-write** (parquet tables, partitioned or not;
+   ``operators/cow.py``): find the data files containing ≥1 row matching
+   the condition (parquet row-group stats and partition pruning cut the
+   discovery scan), rewrite ONLY those files in place (inside their
+   partition directories when partitioned), swap the new generation
+   in for the old.  A selective DELETE on 100 TB rewrites the matching
+   files, not the table.  Untouched files keep their paths (pinned by
+   ``test_delete_file_scoped`` / ``test_partitioned_dml_file_scoped``).
+   DELETE never moves rows between partitions; UPDATE takes this path
+   only when ``set_map`` touches no partition column (otherwise rows
+   could move).
 2. **Staged swap** (non-parquet providers, a touched-file set over the
    cap, or an UPDATE rewriting a partition column): full rewrite
    through a staging table + rename — readers never observe a
@@ -34,51 +34,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..table import Table
-from .merge import (
-    MAX_TOUCHED_FILES,
-    _cow_commit_partitioned,
-    _cow_stage_partitioned,
-    _cow_swap_files,
-    _parquet_location,
-    _partition_columns,
-    _swap_table,
-)
+from . import cow
+from .merge import _partition_columns, _swap_table
 
 
 def _as_table(table: Table | str) -> Table:
     return table if isinstance(table, Table) else Table(str(table), temp=False)
-
-
-def _touched_files(
-    spark: SparkSession, t: Table, cond: Column
-) -> tuple[str | None, list[str] | None, DataFrame | None]:
-    """(location, touched file list, metadata-tagged frame) for a
-    file-scoped rewrite, or (None, None, None) when ineligible:
-    non-parquet provider, no file metadata, or a touched set over
-    ``MAX_TOUCHED_FILES``.  Partitioned tables are eligible — the
-    caller decides whether rows can move partitions."""
-    name = t.qualified_name
-    location = _parquet_location(spark, name)
-    if location is None:
-        return None, None, None
-    df = spark.table(name)
-    try:
-        tagged = df.select(
-            *df.columns, F.col("_metadata.file_path").alias("__file")
-        )
-    except Exception:  # pragma: no cover - source without file metadata
-        return None, None, None
-    files = [
-        r[0]
-        for r in tagged.where(cond)
-        .select("__file")
-        .distinct()
-        .limit(MAX_TOUCHED_FILES + 1)
-        .collect()
-    ]
-    if len(files) > MAX_TOUCHED_FILES:
-        return None, None, None
-    return location, files, tagged
 
 
 def delete_rows(
@@ -96,31 +57,12 @@ def delete_rows(
         return 0
     # DELETE never moves a row between partitions → file-scoped COW is
     # safe on partitioned and unpartitioned tables alike
-    location, files, tagged = _touched_files(spark, t, cond)
-    if files is not None:
-        keep = (
-            tagged.where(F.col("__file").isin(files)).where(~cond).drop("__file")
-        )
-        _commit_cow(spark, t, location, files, keep)
+    c = cow.open_table(spark, t.qualified_name)
+    if c is not None and c.find(where=cond):
+        c.commit(c.rows().where(~cond), _partition_columns(spark, t))
         return n
     _swap_table(spark, df.where(~cond), t)
     return n
-
-
-def _commit_cow(
-    spark: SparkSession,
-    t: Table,
-    location: str,
-    files: list[str],
-    result: DataFrame,
-) -> None:
-    part_cols = _partition_columns(spark, t)
-    if part_cols:
-        staged = _cow_stage_partitioned(spark, location, part_cols, result)
-        _cow_commit_partitioned(spark, location, files, staged)
-        spark.catalog.refreshTable(t.qualified_name)
-    else:
-        _cow_swap_files(spark, t.qualified_name, location, files, result)
 
 
 def delete_rows_by_keys(
@@ -151,34 +93,17 @@ def delete_rows_by_keys(
     t = _as_table(table)
     df = spark.table(t.qualified_name)
     keys = keys_df.select(*key_cols).distinct()
-    location = _parquet_location(spark, t.qualified_name)
-    if location is not None:
-        try:
-            tagged = df.select(
-                *df.columns, F.col("_metadata.file_path").alias("__file")
-            )
-        except Exception:  # pragma: no cover - source without file metadata
-            tagged = None
-        if tagged is not None:
-            scan = tagged.where(scan_filter) if scan_filter is not None else tagged
-            hit = scan.join(keys, on=key_cols, how="left_semi")
-            files = [
-                r[0]
-                for r in hit.select("__file")
-                .distinct()
-                .limit(MAX_TOUCHED_FILES + 1)
-                .collect()
-            ]
-            if not files:
-                return 0
-            if len(files) <= MAX_TOUCHED_FILES:
-                touched = tagged.where(F.col("__file").isin(files))
-                n = touched.join(keys, on=key_cols, how="left_semi").count()
-                keep = touched.join(keys, on=key_cols, how="left_anti").drop(
-                    "__file"
-                )
-                _commit_cow(spark, t, location, files, keep)
-                return n
+    c = cow.open_table(spark, t.qualified_name)
+    if c is not None and c.find(where=scan_filter, keys=keys):
+        if not c.files:
+            return 0
+        touched = c.rows()
+        n = touched.join(keys, on=key_cols, how="left_semi").count()
+        c.commit(
+            touched.join(keys, on=key_cols, how="left_anti"),
+            _partition_columns(spark, t),
+        )
+        return n
     # non-parquet provider / no file metadata / touched set over the cap:
     # staged swap (readers never observe a half-applied delete)
     n = df.join(keys, on=key_cols, how="left_semi").count()
@@ -223,12 +148,11 @@ def update_rows(
 
     # UPDATE can move rows between partitions only when the set_map
     # touches a partition column — COW is safe otherwise
-    part_cols = set(_partition_columns(spark, t))
-    if not (part_cols & set(set_map)):
-        location, files, tagged = _touched_files(spark, t, cond)
-        if files is not None:
-            touched = tagged.where(F.col("__file").isin(files)).drop("__file")
-            _commit_cow(spark, t, location, files, _apply(touched))
+    part_cols = _partition_columns(spark, t)
+    if not (set(part_cols) & set(set_map)):
+        c = cow.open_table(spark, t.qualified_name)
+        if c is not None and c.find(where=cond):
+            c.commit(_apply(c.rows()), part_cols)
             return n
     _swap_table(spark, _apply(df), t)
     return n

@@ -22,20 +22,18 @@ semantics:
    O(|touched partitions|).  When the partition columns are a subset of
    the conflict keys, matched rows cannot change partition and the
    touched set comes from the source alone (no target scan at all).
-3. **File-scoped copy-on-write** (``update`` on an unpartitioned parquet
-   target): find the data files that contain at least one matched key
-   (column-pruned key scan + ``_metadata.file_path``, AQE broadcasts the
-   distinct source keys), run the upsert plan over ONLY the rows of those
-   files, stage the rewritten slice, move the new files into the table
-   directory, then delete the old generation.  Cost O(|touched files| +
-   one key-column scan) — at 100 TB a 1-row update rewrites one file,
-   not the table.  Untouched files keep their original paths.
-3b. **File-scoped copy-on-write, partitioned** (``update`` on a
-   partitioned target when no matched row changes a partition value —
-   the source carries no partition columns, or re-asserts the same
-   values, checked by one column-pruned join): the touched files
-   rewrite in place inside their partition directories and new keys
-   append through ``insertInto``.
+3. **File-scoped copy-on-write** (``update`` on a parquet target when
+   no matched row changes a partition value — always true unpartitioned;
+   partitioned, the source carries no partition columns or re-asserts
+   the same values, checked by one column-pruned join): find the data
+   files that contain at least one matched key, run the upsert plan over
+   ONLY the rows of those files, stage the rewritten slice and swap it
+   in for the old files — the protocol ``operators/cow.py`` owns.  Cost
+   O(|touched files| + one key-column scan) — at 100 TB a 1-row update
+   rewrites one file, not the table.  Untouched files keep their
+   original paths; on a partitioned target new keys append through
+   ``insertInto``.  ``apply_changes`` commits mixed upsert/tombstone
+   batches through the same function.
 4. **Staged full swap** (last resort: non-parquet provider, touched-file
    set over the cap, or a matched row that genuinely changes a
    partition value): write the full merged result to a uniquely-named
@@ -62,16 +60,10 @@ columns) — the majority-dialect behavior.
 
 Crash-safety: strategy 1 is a single atomic-enough append job; strategy 2
 commits through Spark's dynamic-overwrite protocol per partition;
-strategy 3 stages the new generation inside a listing-invisible
-``.cow_stage_*`` dir in the table location (same filesystem — no
-cross-FS copy), makes it visible with metadata-only renames, THEN
-deletes the old generation — a crash during the data write leaves the
-table untouched; the rename/delete window is covered by a
-write-ahead ``.cow_manifest_<gen>.json`` (stage dir + old-file set,
-written at the decision point, deleted as the commit's final act), so
-a crash inside the window leaves at worst transient duplicates that
-``recover_table`` (``operators/catalog.py``) rolls forward — redo, not
-rollback — never data loss;
+strategy 3 stages the new generation invisibly inside the table
+location and records a write-ahead manifest before swapping files, so a
+crash leaves at worst transient duplicates that ``recover_table`` rolls
+forward — never data loss (``operators/cow.py``);
 strategy 4 has a non-atomic DROP→RENAME window — a crash between the two
 statements leaves the merged data intact in the uniquely-named staging
 table (``<target>__astro_merge_<uuid>``) for manual recovery, and the
@@ -84,6 +76,8 @@ from __future__ import annotations
 
 import operator
 import re
+import shutil
+import tempfile
 import uuid
 from functools import reduce
 
@@ -93,6 +87,7 @@ from pyspark.sql.window import Window
 
 from ..exceptions import MergeConflictError, NonExistentTableError
 from ..table import Table
+from . import cow
 from .append import normalize_columns
 
 
@@ -229,16 +224,11 @@ def _merge_impl(
             spark, target, source, keys, target_table, part_cols
         ):
             return target_table
-    if not part_cols:
-        if _upsert_file_scoped(spark, source, keys, target_table):
-            return target_table
-    elif _no_partition_moves(target, source, keys, part_cols):
-        # matched rows keep (or re-assert) their target partition values
-        # → file-scoped COW inside the existing partition directories
-        if _upsert_file_scoped_partitioned(
-            spark, source, keys, target_table, part_cols
-        ):
-            return target_table
+    if _upsert_file_scoped(
+        spark, target_table, part_cols, source, keys,
+        source.select(*keys).distinct(),
+    ):
+        return target_table
     result = _upsert(target, source, keys)
     _swap_table(spark, result, target_table)
     return target_table
@@ -529,370 +519,108 @@ def _upsert_partition_scoped(
     tbl_cols = spark.table(name).columns
     # Spark rejects overwriting a table the plan reads → stage the merged
     # touched-partition slice through a temp parquet dir (O(touched) extra
-    # IO, still nowhere near a full rewrite)
-    staged = _stage_roundtrip(spark, result.select(*tbl_cols))
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # IO, still nowhere near a full rewrite), removed once the overwrite
+    # and the out-partition read are done
+    stage_dir = tempfile.mkdtemp(prefix="astro_merge_stage_")
     try:
-        staged.write.mode("overwrite").insertInto(name)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        out = result.select(*tbl_cols)
+        out.write.mode("overwrite").parquet(stage_dir)
+        staged = spark.read.schema(out.schema).parquet(stage_dir)
 
-    if not stable:
-        # dynamic overwrite only replaces partitions present in the output;
-        # a touched partition whose rows ALL moved elsewhere must be dropped
-        out_parts = {tuple(r) for r in staged.select(*part_cols).distinct().collect()}
-        for vals in sorted(touched - out_parts):
-            spec = ", ".join(
-                f"{c}={_sql_literal(v)}" for c, v in zip(part_cols, vals)
-            )
-            spark.sql(f"ALTER TABLE {name} DROP IF EXISTS PARTITION ({spec})")
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            staged.write.mode("overwrite").insertInto(name)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+        if not stable:
+            # dynamic overwrite only replaces partitions present in the
+            # output; a touched partition whose rows ALL moved elsewhere
+            # must be dropped
+            out_parts = {
+                tuple(r) for r in staged.select(*part_cols).distinct().collect()
+            }
+            for vals in sorted(touched - out_parts):
+                spec = ", ".join(
+                    f"{c}={_sql_literal(v)}" for c, v in zip(part_cols, vals)
+                )
+                spark.sql(f"ALTER TABLE {name} DROP IF EXISTS PARTITION ({spec})")
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
     spark.catalog.refreshTable(name)
     return True
-
-
-# Above this many key-overlapping files the IN-list filter on
-# _metadata.file_path stops being a sane plan — fall back to the swap.
-MAX_TOUCHED_FILES = 10_000
-
-# When the distinct source key set fits under this cap, it is collected
-# and pushed into the touched-file discovery scan as per-column IN
-# predicates, so parquet row-group min/max stats prune the scan itself —
-# a 1-row update reads ~1 row group of the key column, not the whole
-# table's key column.  (Per-column IN is a superset filter for
-# multi-column keys; the semi-join after it stays exact.)
-KEY_PUSHDOWN_CAP = 1_000
-
-
-def _table_detail(spark: SparkSession, name: str) -> dict:
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
-    return {r.col_name: r.data_type for r in rows}
 
 
 def _upsert_file_scoped(
     spark: SparkSession,
+    target_table: Table,
+    part_cols: list[str],
     source: DataFrame,
     keys: list[str],
-    target_table: Table,
+    change_keys: DataFrame,
+    deletes: DataFrame | None = None,
 ) -> bool:
-    """update strategy 3: copy-on-write at parquet-file granularity.
+    """update strategy 3: copy-on-write at parquet-file granularity
+    (``operators/cow.py``), optionally applying tombstones in the same
+    commit (``apply_changes``' mixed batches).
 
-    The touched set = data files containing ≥1 row whose key appears in
-    the source, found with a column-pruned scan of the keys plus the
-    ``_metadata.file_path`` hidden column and a left-semi join against
-    the distinct source keys (AQE broadcasts the small side).  Only the
-    rows of those files enter the upsert plan; the rewritten slice is
-    staged to a temp dir and its part-files are moved into the table
-    directory BEFORE the old generation is deleted (transient-duplicate
-    window, never data loss).  Unmatched source rows ride along in the
-    same staged write (they are inserts).  Untouched files keep their
-    original paths — the property ``test_merge_update_file_scoped`` pins.
-    Repeated small merges accumulate small ``cow-*`` files; run
-    ``compact_table`` periodically (the same maintenance Delta's
-    OPTIMIZE does).
+    The touched set = data files holding a row whose key appears in
+    ``change_keys`` (the source keys, plus the tombstone keys when
+    ``deletes`` is given), found by ``CowTable.find`` with key pushdown
+    and a semi-join.  Only the rows of those files enter the upsert
+    plan, with ``deletes`` anti-joined out first.  On an unpartitioned
+    table, unmatched source rows ride along in the same staged write
+    (they are inserts).  On a partitioned table the rewrite stays inside
+    the existing partition directories, so it is taken only when no
+    matched row changes a partition value (``_no_partition_moves``;
+    tombstones never move rows); inserts append through ``insertInto``
+    between stage and commit, which registers any new partition.
+    Untouched files keep their original paths — the property
+    ``test_merge_update_file_scoped`` pins.  Repeated small merges
+    accumulate small ``cow-*`` files; run ``compact_table``
+    periodically (the same maintenance Delta's OPTIMIZE does).
 
     Reference semantics: Delta ``MERGE INTO``
     (``databases/databricks/delta.py:357-442``) — Delta's own physical
     plan is exactly this copy-on-write.  Returns False (caller falls
-    back to the staged swap) for non-parquet providers or a touched set
+    back) for non-parquet providers, a partition move, or a touched set
     over ``MAX_TOUCHED_FILES``.
     """
     name = target_table.qualified_name
-    location = _parquet_location(spark, name)
-    if location is None:
+    t = cow.open_table(spark, name)
+    if t is None:
+        return False
+    tgt = t.frame
+    if part_cols and not _no_partition_moves(tgt, source, keys, part_cols):
+        return False
+    if not t.find(keys=change_keys, pushdown=True):
         return False
 
-    tgt = spark.table(name)
-    tbl_cols = tgt.columns
-    try:
-        tagged = tgt.select(
-            *tbl_cols, F.col("_metadata.file_path").alias("__file")
-        )
-    except Exception:  # pragma: no cover - source without file metadata
-        return False
-
-    src_keys = source.select(*keys).distinct()
-    key_rows = src_keys.limit(KEY_PUSHDOWN_CAP + 1).collect()
-    discovery = tagged
-    if len(key_rows) <= KEY_PUSHDOWN_CAP:
-        # small key set: push literal IN filters down to the scan so
-        # row-group stats prune files before any row is read.  Rows with
-        # a NULL key can never semi-join-match (null-unsafe equality),
-        # so excluding them from the IN list is safe.
-        for i, k in enumerate(keys):
-            vals = list({r[i] for r in key_rows if r[i] is not None})
-            if vals:
-                discovery = discovery.where(F.col(k).isin(vals))
-    touched_files_df = (
-        discovery.join(src_keys, on=keys, how="left_semi")
-        .select("__file")
-        .distinct()
-    )
-    files = [r[0] for r in touched_files_df.limit(MAX_TOUCHED_FILES + 1).collect()]
-    if len(files) > MAX_TOUCHED_FILES:
-        return False
-
-    if files:
-        touched_target = tagged.where(F.col("__file").isin(files)).drop("__file")
+    touched = t.rows()
+    if deletes is not None:
+        kept = touched.join(deletes, on=keys, how="left_anti")
     else:
-        touched_target = tgt.where(F.lit(False))
-    result = _align(_upsert(touched_target, source, keys).select(*tbl_cols), tgt)
-    _cow_swap_files(spark, name, location, files, result)
-    return True
-
-
-def _upsert_file_scoped_partitioned(
-    spark: SparkSession,
-    source: DataFrame,
-    keys: list[str],
-    target_table: Table,
-    part_cols: list[str],
-) -> bool:
-    """update strategy 3b: copy-on-write on a PARTITIONED target when no
-    matched row changes partition (checked by ``_no_partition_moves`` —
-    the source lacks the partition columns, or re-asserts the same
-    values; the cases strategy 2 cannot handle).
-
-    Every rewritten row lands back in a partition directory that
-    already exists and is registered: the staged rewrite is written
-    ``partitionBy(part_cols)`` into a hidden stage dir and its files
-    move into the matching partition directories.  Inserts (source keys
-    with no match) go through a normal ``insertInto`` append — with
-    their source partition values when present, NULL otherwise — which
-    registers any new partition.  Cost O(touched files + |inserts|) —
-    the path that previously rewrote the whole table via the staged
-    swap.
-
-    Crash semantics: the stage write and the insert append both read the
-    old generation, so they run BEFORE any old file is deleted; a crash
-    between the insert append and the rename/delete loop leaves inserts
-    applied but updates not (re-running the merge completes them), and
-    a crash inside the loop mirrors strategy 3's transient-duplicate
-    window.
-    """
-    name = target_table.qualified_name
-    location = _parquet_location(spark, name)
-    if location is None:
-        return False
-
-    tgt = spark.table(name)
+        kept = touched
     tbl_cols = tgt.columns
-    try:
-        tagged = tgt.select(
-            *tbl_cols, F.col("_metadata.file_path").alias("__file")
-        )
-    except Exception:  # pragma: no cover - source without file metadata
-        return False
-
-    src_keys = source.select(*keys).distinct()
-    key_rows = src_keys.limit(KEY_PUSHDOWN_CAP + 1).collect()
-    discovery = tagged
-    if len(key_rows) <= KEY_PUSHDOWN_CAP:
-        for i, k in enumerate(keys):
-            vals = list({r[i] for r in key_rows if r[i] is not None})
-            if vals:
-                discovery = discovery.where(F.col(k).isin(vals))
-    files = [
-        r[0]
-        for r in discovery.join(src_keys, on=keys, how="left_semi")
-        .select("__file")
-        .distinct()
-        .limit(MAX_TOUCHED_FILES + 1)
-        .collect()
-    ]
-    if len(files) > MAX_TOUCHED_FILES:
-        return False
-
-    touched = (
-        tagged.where(F.col("__file").isin(files)).drop("__file")
-        if files
-        else tgt.where(F.lit(False))
+    if not part_cols:
+        t.commit(_align(_upsert(kept, source, keys).select(*tbl_cols), tgt))
+        return True
+    # matched rows rewrite in place; new keys append via insertInto.  The
+    # stage write and the append both read the old generation, so both
+    # run before any old file is deleted — a crash before the manifest
+    # leaves the inserts applied and the stage inert; re-running the
+    # merge (or re-applying the batch) completes it.
+    touched_keys = touched.select(*keys).distinct()
+    matched = source.join(touched_keys, on=keys, how="left_semi")
+    inserts = source.join(touched_keys, on=keys, how="left_anti")
+    rewrite = _align(_upsert(kept, matched, keys).select(*tbl_cols), tgt)
+    t.commit(
+        rewrite if t.files else None,
+        part_cols,
+        inserts=_align(inserts, tgt).select(*tbl_cols),
     )
-    # split the source: matches rewrite in place, inserts append
-    matched_src = source.join(
-        touched.select(*keys).distinct(), on=keys, how="left_semi"
-    )
-    inserts = source.join(
-        touched.select(*keys).distinct(), on=keys, how="left_anti"
-    )
-    rewrite = _align(_upsert(touched, matched_src, keys).select(*tbl_cols), tgt)
-
-    if files:
-        # The stage write AND the insert append both read the OLD
-        # generation, so the stage completes before any old file is
-        # deleted; the insert append runs between stage and commit.
-        staged = _cow_stage_partitioned(spark, location, part_cols, rewrite)
-    if inserts.limit(1).count() > 0:
-        aligned = _align(inserts, tgt)
-        aligned.select(*spark.table(name).columns).write.mode("append").insertInto(
-            name
-        )
-    if files:
-        _cow_commit_partitioned(spark, location, files, staged)
-    spark.catalog.refreshTable(name)
     return True
-
-
-def _cow_stage_partitioned(
-    spark: SparkSession, location: str, part_cols: list[str], result: DataFrame
-) -> str:
-    """Write ``result`` partitioned into a hidden ``.cow_stage_<hex>``
-    dir inside the table location (listing-invisible, same filesystem);
-    partitionBy routes each row to its partition's subdirectory.
-    Returns the stage dir name for ``_cow_commit_partitioned``."""
-    stage_name = f".cow_stage_{uuid.uuid4().hex[:8]}"
-    result.write.mode("overwrite").partitionBy(*part_cols).parquet(
-        location.rstrip("/") + "/" + stage_name
-    )
-    return stage_name
-
-
-def _cow_commit_partitioned(
-    spark: SparkSession, location: str, old_files: list[str], stage_name: str
-) -> None:
-    """Metadata-rename every staged part-file into its matching
-    partition directory (created if missing), then delete the old
-    generation and the stage dir.  Same crash window as the flat COW
-    commit: only the rename/delete loop."""
-    gen = stage_name.rsplit("_", 1)[-1]
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    dst_dir = HPath(location)
-    fs = dst_dir.getFileSystem(hconf)
-    staged_path = HPath(dst_dir, stage_name)
-    _write_cow_manifest(fs, HPath, dst_dir, gen, stage_name, old_files)
-    stage_uri = staged_path.toUri().getPath()
-    it = fs.listFiles(staged_path, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        if not p.getName().startswith("part-"):
-            continue
-        rel = p.toUri().getPath()[len(stage_uri):].lstrip("/")
-        rel_dir = rel.rsplit("/", 1)[0] if "/" in rel else ""
-        out_dir = HPath(dst_dir, rel_dir) if rel_dir else dst_dir
-        fs.mkdirs(out_dir)
-        fs.rename(p, HPath(out_dir, f"cow-{gen}-{p.getName()}"))
-    for f in sorted(old_files):
-        fs.delete(HPath(f), False)
-    fs.delete(staged_path, True)
-    _delete_cow_manifest(fs, HPath, dst_dir, gen)
-
-
-def _parquet_location(spark: SparkSession, name: str) -> str | None:
-    """Table location when the table is a plain-parquet file source
-    (the only provider the copy-on-write commit understands), else None."""
-    detail = _table_detail(spark, name)
-    if detail.get("Provider", "").lower() != "parquet":
-        return None
-    return detail.get("Location") or None
-
-
-def _write_cow_manifest(
-    fs, HPath, dst_dir, gen: str, stage_name: str, old_files: list[str]
-) -> None:
-    """Persist the commit intent BEFORE the rename/delete window: the
-    staged dir plus the exact old-file set to retire.  Once the
-    manifest is durable the commit is decided — ``recover_table``
-    (``operators/catalog.py``) rolls any interrupted rename/delete
-    forward to completion, so a crash inside the window no longer
-    leaves transient duplicates for a human to clean up.  The manifest
-    is deleted as the commit's final act; its absence + an orphan
-    ``.cow_stage_*`` dir means the crash happened BEFORE the decision
-    point and the stage is inert (reclaimed by ``vacuum_table``).
-
-    The manifest doubles as a single-writer guard: a live manifest from
-    ANOTHER commit means the table holds an undecided redo — committing
-    on top of it would race its old-file deletes — so this raises
-    ``RuntimeError`` directing the operator to ``recover_table`` first
-    (fail-fast beats the silent concurrent-COW race documented on
-    ``_cow_swap_files``)."""
-    import json
-
-    for st in fs.listStatus(dst_dir):
-        name = st.getPath().getName()
-        if name.startswith(".cow_manifest_") and name.endswith(".json"):
-            raise RuntimeError(
-                f"copy-on-write commit blocked: pending commit manifest "
-                f"{name} exists in the table location — an earlier commit "
-                "was interrupted (or another writer is mid-commit). Run "
-                "astro_spark.recover_table(spark, table) to roll it "
-                "forward, then retry."
-            )
-    man = HPath(dst_dir, f".cow_manifest_{gen}.json")
-    out = fs.create(man, True)
-    out.write(
-        bytearray(
-            json.dumps(
-                {
-                    "gen": gen,
-                    "stage": stage_name,
-                    "old_files": sorted(old_files),
-                }
-            ).encode("utf-8")
-        )
-    )
-    out.close()
-
-
-def _delete_cow_manifest(fs, HPath, dst_dir, gen: str) -> None:
-    fs.delete(HPath(dst_dir, f".cow_manifest_{gen}.json"), False)
-
-
-def _cow_swap_files(
-    spark: SparkSession,
-    name: str,
-    location: str,
-    old_files: list[str],
-    result: DataFrame,
-) -> None:
-    """Copy-on-write commit, shared by merge-update, DELETE, and UPDATE
-    on unpartitioned parquet tables.
-
-    Protocol: (1) write ``result`` into a hidden ``.cow_stage_<hex>/``
-    subdirectory of the table location — Spark/Hadoop listings skip
-    dot-prefixed paths, so the data write is invisible to readers, it
-    lands on the SAME filesystem as the table (no cross-FS copy on
-    s3/hdfs), and a crash during it leaves the table untouched; (2)
-    rename each staged part-file into the table directory (metadata-only
-    ops, one per file); (3) delete ``old_files`` and the stage dir.  The
-    non-atomic window is only the rename/delete loop, and it is covered
-    by a write-ahead manifest (``_write_cow_manifest``) persisted at the
-    decision point and deleted as the final act: a crash inside the
-    window shows transient duplicates of the matched rows — never data
-    loss — until ``recover_table`` replays the manifest forward (an
-    orphaned ``.cow_stage_*`` dir WITHOUT a manifest is a pre-decision
-    crash, inert, reclaimed by ``vacuum_table``).  CONCURRENT
-    writers on the same table need external coordination — two COW
-    commits that delete overlapping old files race (the same limitation
-    every non-transactional parquet table has; Delta/Iceberg solve it
-    with the commit log).  True single-statement atomicity needs a
-    transactional log (Delta/Iceberg)."""
-    gen = uuid.uuid4().hex[:8]
-    stage_name = f".cow_stage_{gen}"
-    result.write.mode("overwrite").parquet(
-        location.rstrip("/") + "/" + stage_name
-    )
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    dst_dir = HPath(location)
-    fs = dst_dir.getFileSystem(hconf)
-    staged_path = HPath(dst_dir, stage_name)
-    _write_cow_manifest(fs, HPath, dst_dir, gen, stage_name, old_files)
-    for st in fs.listStatus(staged_path):
-        pname = st.getPath().getName()
-        if not pname.startswith("part-"):
-            continue
-        fs.rename(st.getPath(), HPath(dst_dir, f"cow-{gen}-{pname}"))
-    for f in sorted(old_files):
-        fs.delete(HPath(f), False)
-    fs.delete(staged_path, True)
-    _delete_cow_manifest(fs, HPath, dst_dir, gen)
-    spark.catalog.refreshTable(name)
 
 
 def _partition_predicate(part_cols: list[str], rows) -> F.Column:
@@ -920,14 +648,6 @@ def _sql_literal(v) -> str:
     if isinstance(v, (_dt.date, _dt.datetime)):
         return f"'{v}'"
     return str(v)
-
-
-def _stage_roundtrip(spark: SparkSession, df: DataFrame) -> DataFrame:
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="astro_merge_stage_")
-    df.write.mode("overwrite").parquet(d)
-    return spark.read.schema(df.schema).parquet(d)
 
 
 def _upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:

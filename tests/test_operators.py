@@ -374,6 +374,29 @@ class TestAppendMerge:
         assert spark.table("mp_tgt").count() == 7
         assert sorted(os.listdir(b_dir)) == before
 
+    def test_partition_scoped_merge_leaves_no_temp_dir(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The partition-scoped update stages its slice through a temp
+        dir; the dir is removed once the overwrite is done."""
+        import tempfile
+        import uuid
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        tgt = a.Table(f"mp_tmp_{uuid.uuid4().hex[:8]}", temp=False)
+        src = a.Table(f"mp_tmp_src_{uuid.uuid4().hex[:8]}")
+        spark.createDataFrame(
+            [(1, "a", 10), (2, "b", 20)], "id long, p string, v long"
+        ).write.partitionBy("p").format("parquet").saveAsTable(tgt.name)
+        spark.createDataFrame(
+            [(2, "b", 21), (3, "c", 30)], "id long, p string, v long"
+        ).createOrReplaceTempView(src.name)
+        a.merge(spark, src, tgt, ["id"], if_conflicts="update")
+        got = {(r.id, r.p, r.v) for r in spark.table(tgt.name).collect()}
+        assert got == {(1, "a", 10), (2, "b", 21), (3, "c", 30)}
+        assert list(tmp_path.glob("astro_merge_stage_*")) == []
+        spark.sql(f"DROP TABLE {tgt.name}")
+
     def test_merge_update_file_scoped(self, spark, sf_dir):
         """update on an unpartitioned target rewrites ONLY the files whose
         rows match a source key (copy-on-write); untouched files keep
@@ -1740,6 +1763,29 @@ class TestApplyChanges:
         got = {(r.k, r.v) for r in spark.table(t.name).collect()}
         assert got == {(2, "b1"), (3, "c"), (4, "d")}
 
+    def test_failing_stats_job_leaves_no_cached_frame(self, spark):
+        """A change feed whose data column fails to compute raises from
+        the first job over the persisted feed; the persisted frame must
+        not outlive the call."""
+        from pyspark.errors import PythonException
+
+        from astro_spark.operators.cdc import apply_changes
+
+        t = self._target(spark, [(1, "a")])
+
+        @F.udf("string")
+        def boom(v):
+            raise ValueError("bad row")
+
+        changes = spark.createDataFrame(
+            [(1, "a1", "U", 1)], "k long, v string, op string, seq long"
+        ).withColumn("v", boom("v"))
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
+        with pytest.raises(PythonException, match="bad row"):
+            apply_changes(spark, t, changes, ["k"], seq_col="seq")
+        assert cache.isEmpty()
+
     def test_reapply_is_idempotent(self, spark):
         from astro_spark.operators.cdc import apply_changes
 
@@ -1820,10 +1866,7 @@ class TestApplyChanges:
             apply_changes,
             expire_applied_seq,
         )
-        from astro_spark.operators.merge import (
-            _parquet_location,
-            _write_cow_manifest,
-        )
+        from astro_spark.operators.cow import parquet_location, write_manifest
         from astro_spark.sources.writers import _hadoop_fs
 
         t = self._target(spark, [(1, "a")])
@@ -1833,13 +1876,13 @@ class TestApplyChanges:
         )
         apply_changes(spark, t, changes, ["k"], seq_col="seq", track_seq=True)
         side = _seq_sidecar(t)
-        loc = _parquet_location(spark, side.qualified_name)
+        loc = parquet_location(spark, side.qualified_name)
         HPath, root, fs = _hadoop_fs(spark, loc)
         # simulate an interrupted rewrite: stage + manifest left behind
         spark.createDataFrame([(1, 10)], "k long, __seq long").coalesce(
             1
         ).write.mode("overwrite").parquet(f"{loc.rstrip('/')}/.cow_stage_g1")
-        _write_cow_manifest(fs, HPath, root, "g1", ".cow_stage_g1", [])
+        write_manifest(fs, HPath, root, "g1", [])
         with pytest.raises(RuntimeError, match="pending commit manifest"):
             expire_applied_seq(spark, t, ["k"], 15)
         assert a.recover_table(spark, side) == 1
@@ -2113,7 +2156,7 @@ class TestCowRecovery:
     before the rename/delete window lets recover_table roll an
     interrupted commit forward (redo, never undo)."""
 
-    def _make_table(self, spark, rows, n_files=2):
+    def _make_table(self, spark, rows, n_files=2, part_cols=()):
         import uuid
 
         import astro_spark as a
@@ -2123,6 +2166,7 @@ class TestCowRecovery:
         save_dataframe_as_table(
             spark.createDataFrame(rows, "k long, v string").repartition(n_files),
             tgt,
+            partition_by=list(part_cols) or None,
         )
         return tgt
 
@@ -2131,61 +2175,80 @@ class TestCowRecovery:
 
         return _hadoop_fs(spark, location)
 
-    def test_recover_completes_interrupted_commit(self, spark):
+    @pytest.mark.parametrize("layout", ["flat", "partitioned"])
+    def test_recover_completes_interrupted_commit(self, spark, layout):
         """Simulate a crash HALFWAY through the rename/delete window:
         stage written, manifest written, one staged file renamed, old
-        files untouched.  recover_table must finish the commit exactly."""
+        files untouched.  recover_table must finish the commit exactly
+        — on a partitioned table, inside the partition directories."""
         import astro_spark as a
-        from astro_spark.operators.merge import (
-            _parquet_location,
-            _write_cow_manifest,
-        )
+        from astro_spark.operators.cow import parquet_location, write_manifest
 
-        tgt = self._make_table(spark, [(1, "a"), (2, "b"), (3, "c")])
-        loc = _parquet_location(spark, tgt.qualified_name)
+        part_cols = ["v"] if layout == "partitioned" else []
+        tgt = self._make_table(
+            spark, [(1, "a"), (2, "b"), (3, "c")], part_cols=part_cols
+        )
+        loc = parquet_location(spark, tgt.qualified_name)
         HPath, root, fs = self._fs(spark, loc)
-        old_files = [
-            st.getPath().toString()
-            for st in fs.listStatus(root)
-            if st.getPath().getName().endswith(".parquet")
-        ]
-        # the decided new generation: entirely different rows
+
+        def data_files():
+            it = fs.listFiles(root, True)
+            paths = [it.next().getPath() for _ in iter(it.hasNext, False)]
+            return [
+                p for p in paths
+                if p.getName().endswith(".parquet")
+                and ".cow_stage_" not in p.toString()
+            ]
+
+        old_files = [p.toString() for p in data_files()]
+        # the decided new generation: entirely different rows (kept in
+        # existing partitions when partitioned — a COW rewrite never
+        # creates one)
+        new = {(10, "x"), (20, "y")} if not part_cols else {(10, "a"), (20, "c")}
         result = spark.createDataFrame(
-            [(10, "x"), (20, "y")], "k long, v string"
+            sorted(new), "k long, v string"
         ).repartition(2)
         gen = "testgen1"
         stage_name = f".cow_stage_{gen}"
-        result.write.mode("overwrite").parquet(f"{loc.rstrip('/')}/{stage_name}")
-        _write_cow_manifest(fs, HPath, root, gen, stage_name, old_files)
+        result.write.mode("overwrite").partitionBy(*part_cols).parquet(
+            f"{loc.rstrip('/')}/{stage_name}"
+        )
+        write_manifest(fs, HPath, root, gen, old_files)
         # crash simulation: rename only ONE staged part, delete nothing
         staged = HPath(root, stage_name)
+        it = fs.listFiles(staged, True)
         first = next(
-            st.getPath()
-            for st in fs.listStatus(staged)
-            if st.getPath().getName().startswith("part-")
+            p
+            for p in (it.next().getPath() for _ in iter(it.hasNext, False))
+            if p.getName().startswith("part-")
         )
-        fs.rename(first, HPath(root, f"cow-{gen}-{first.getName()}"))
+        out_dir = HPath(root, first.getParent().getName()) if part_cols else root
+        fs.rename(first, HPath(out_dir, f"cow-{gen}-{first.getName()}"))
 
         assert a.recover_table(spark, tgt) == 1
         got = {(r.k, r.v) for r in spark.table(tgt.name).collect()}
-        assert got == {(10, "x"), (20, "y")}
+        assert got == new
         # old generation gone, stage gone, manifest gone
         names = [st.getPath().getName() for st in fs.listStatus(root)]
         assert not any(n.startswith(".cow_stage_") for n in names)
         assert not any(n.startswith(".cow_manifest_") for n in names)
+        if part_cols:
+            # exactly the new generation, inside the partition dirs
+            placed = {
+                (p.getParent().getName(), p.getName().startswith(f"cow-{gen}-part-"))
+                for p in data_files()
+            }
+            assert placed == {("v=a", True), ("v=c", True)}
         assert a.recover_table(spark, tgt) == 0  # idempotent
 
     def test_recover_replays_fully_renamed_commit(self, spark):
         """Crash AFTER all renames but before any old-file delete:
         recovery only retires the old generation (no duplicate rows)."""
         import astro_spark as a
-        from astro_spark.operators.merge import (
-            _parquet_location,
-            _write_cow_manifest,
-        )
+        from astro_spark.operators.cow import parquet_location, write_manifest
 
         tgt = self._make_table(spark, [(1, "a"), (2, "b")])
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = parquet_location(spark, tgt.qualified_name)
         HPath, root, fs = self._fs(spark, loc)
         old_files = [
             st.getPath().toString()
@@ -2198,7 +2261,7 @@ class TestCowRecovery:
         result.coalesce(1).write.mode("overwrite").parquet(
             f"{loc.rstrip('/')}/{stage_name}"
         )
-        _write_cow_manifest(fs, HPath, root, gen, stage_name, old_files)
+        write_manifest(fs, HPath, root, gen, old_files)
         staged = HPath(root, stage_name)
         for st in fs.listStatus(staged):
             if st.getPath().getName().startswith("part-"):
@@ -2214,13 +2277,10 @@ class TestCowRecovery:
         """An orphan stage WITHOUT a manifest is inert (vacuumed); a
         stage WITH one belongs to recovery and must survive vacuum."""
         import astro_spark as a
-        from astro_spark.operators.merge import (
-            _parquet_location,
-            _write_cow_manifest,
-        )
+        from astro_spark.operators.cow import parquet_location, write_manifest
 
         tgt = self._make_table(spark, [(1, "a")], n_files=1)
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = parquet_location(spark, tgt.qualified_name)
         HPath, root, fs = self._fs(spark, loc)
         spark.createDataFrame([(5, "e")], "k long, v string").coalesce(
             1
@@ -2228,7 +2288,7 @@ class TestCowRecovery:
         spark.createDataFrame([(6, "f")], "k long, v string").coalesce(
             1
         ).write.mode("overwrite").parquet(f"{loc.rstrip('/')}/.cow_stage_alive")
-        _write_cow_manifest(fs, HPath, root, "alive", ".cow_stage_alive", [])
+        write_manifest(fs, HPath, root, "alive", [])
         assert a.vacuum_table(spark, tgt) == 1  # only the inert stage
         names = [st.getPath().getName() for st in fs.listStatus(root)]
         assert ".cow_stage_alive" in names and ".cow_stage_inert" not in names
@@ -2243,7 +2303,8 @@ class TestCowRecovery:
         import uuid
 
         import astro_spark as a
-        from astro_spark.operators.merge import _parquet_location, merge
+        from astro_spark.operators.cow import parquet_location
+        from astro_spark.operators.merge import merge
 
         tgt = self._make_table(spark, [(1, "a"), (2, "b"), (3, "c")])
         src = a.Table(f"cowrec_src_{uuid.uuid4().hex[:8]}")
@@ -2253,7 +2314,7 @@ class TestCowRecovery:
         merge(spark, src, tgt, ["k"], if_conflicts="update")
         got = {(r.k, r.v) for r in spark.table(tgt.name).collect()}
         assert got == {(1, "a"), (2, "b2"), (3, "c"), (4, "d")}
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = parquet_location(spark, tgt.qualified_name)
         HPath, root, fs = self._fs(spark, loc)
         names = [st.getPath().getName() for st in fs.listStatus(root)]
         assert not any(n.startswith(".cow_stage_") for n in names)
@@ -2268,19 +2329,16 @@ class TestCowRecovery:
         import pytest
 
         import astro_spark as a
-        from astro_spark.operators.merge import (
-            _parquet_location,
-            _write_cow_manifest,
-            merge,
-        )
+        from astro_spark.operators.cow import parquet_location, write_manifest
+        from astro_spark.operators.merge import merge
 
         tgt = self._make_table(spark, [(1, "a"), (2, "b")])
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = parquet_location(spark, tgt.qualified_name)
         HPath, root, fs = self._fs(spark, loc)
         spark.createDataFrame([(9, "q")], "k long, v string").coalesce(
             1
         ).write.mode("overwrite").parquet(f"{loc.rstrip('/')}/.cow_stage_pend")
-        _write_cow_manifest(fs, HPath, root, "pend", ".cow_stage_pend", [])
+        write_manifest(fs, HPath, root, "pend", [])
 
         src = a.Table(f"cowrec_src_{uuid.uuid4().hex[:8]}")
         spark.createDataFrame(
@@ -2301,10 +2359,11 @@ class TestCowRecovery:
         import uuid
 
         import astro_spark as a
-        from astro_spark.operators.merge import _parquet_location, merge
+        from astro_spark.operators.cow import parquet_location
+        from astro_spark.operators.merge import merge
 
         tgt = self._make_table(spark, [(1, "a"), (2, "b")])
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = parquet_location(spark, tgt.qualified_name)
         HPath, root, fs = self._fs(spark, loc)
         spark.createDataFrame([(9, "q")], "k long, v string").coalesce(
             1

@@ -1490,7 +1490,7 @@ class TestCdcAutoCompact:
 
         import astro_spark as a
         from astro_spark.operators.load_file import save_dataframe_as_table
-        from astro_spark.operators.merge import _parquet_location
+        from astro_spark.operators.cow import parquet_location
         from astro_spark.streaming import load_file_stream_merge
 
         base = spark.range(0, 300).select(
@@ -1518,7 +1518,7 @@ class TestCdcAutoCompact:
             )
 
         def _data_files():
-            loc = _parquet_location(spark, tgt.qualified_name).removeprefix(
+            loc = parquet_location(spark, tgt.qualified_name).removeprefix(
                 "file:"
             )
             return [
