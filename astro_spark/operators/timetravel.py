@@ -38,14 +38,16 @@ published as a complete temp file moved into place with ``link(2)``
 (local/NFS roots) or ``FileSystem.rename`` (other Hadoop filesystems) —
 an atomic put-if-absent that refuses an existing version (object stores
 without atomic rename need an external lock; same caveat Delta's S3
-single-writer LogStore documents).  Two writers racing to commit
-version N: one wins, the loser gets ``ConcurrentWriteError`` and retries
-against the new state (``tt_append`` auto-retries — its file list is
-state-independent; delete/update/merge/OPTIMIZE-WHERE rebase with
-file-level conflict resolution via ``_publish_cow`` — Delta's
+single-writer LogStore documents).  Every commit here goes through
+``TableLog.commit``, whose kind decides what a lost race means:
+appends (``tt_append``, ``tt_commit_files``) re-validate against the
+new head and retry — their file list is state-independent;
+delete/update/merge/OPTIMIZE-WHERE are copy-on-write rewrites that
+rebase with file-level conflict resolution — Delta's
 WriteSerializable: writers on disjoint partitions both land,
-same-partition rewrites conflict; ``tt_overwrite``/``tt_restore``
-surface the conflict, because what they mean to replace has changed).
+same-partition rewrites conflict; create/overwrite/OPTIMIZE/RESTORE/
+clone/convert and metadata-only commits surface the conflict, because
+what they meant to replace (or to create) has changed.
 
 Scale: a manifest is O(files-in-version) JSON read once per query
 plan — the same cost profile as Delta's checkpointed log.  Reads pass
@@ -56,7 +58,6 @@ predicate pushdown and column pruning all apply unchanged.
 from __future__ import annotations
 
 import json
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,13 +68,6 @@ from ..sources.tt_log import (
     _PART_PREFIX,
     TableLog,
     _abs,
-    _carry_constraints,
-    _carry_generated,
-    _carry_header,
-    _carry_partition,
-    _carry_props,
-    _carry_stats_cols,
-    _copy_body,
     _generated_cols_of,
     _is_external,
     _keep_file,
@@ -104,117 +98,6 @@ def _open(spark: SparkSession, root: str) -> TableLog:
     """The log of a root or registered name; callers use ``log.root``
     (local roots made absolute) for every Spark path too."""
     return TableLog(_named_root(spark, root), spark)
-
-
-def _tt_meta_of(m: dict) -> tuple:
-    """The table-metadata fields a rebased commit would silently
-    clobber if an interleaved commit changed them — read through the
-    NORMALIZED accessors (a v0 manifest stores stats_cols only
-    implicitly in its inline stats; later commits materialize the
-    header — a representation change, not a conflict) and compared as
-    canonical JSON so dict ordering never fakes one either."""
-    return (
-        json.dumps(m.get("schema"), sort_keys=True),
-        json.dumps(m.get("constraints") or {}, sort_keys=True),
-        json.dumps(sorted(_stats_cols_of(m))),
-        json.dumps(_partition_cols_of(m)),
-        json.dumps(_generated_cols_of(m) or {}, sort_keys=True),
-        json.dumps(m.get("properties") or {}, sort_keys=True),
-    )
-
-
-def _cow_extra(manifest: dict) -> dict:
-    """Schema + carried metadata for a copy-on-write commit, from the
-    snapshot the transaction read."""
-    return {
-        **(
-            {"schema": manifest["schema"]}
-            if manifest.get("schema") is not None
-            else {}
-        ),
-        **_carry_header(manifest),
-    }
-
-
-def _header_copy(manifest: dict) -> dict:
-    """A version's table header verbatim — what RESTORE and CLONE
-    reinstate alongside its file list."""
-    return {
-        k: manifest[k]
-        for k in (
-            "schema", "constraints", "stats_cols", "partition_cols",
-            "generated_cols", "properties",
-        )
-        if manifest.get(k) is not None
-    }
-
-
-def _publish_cow(
-    log: TableLog,
-    head_v: int,
-    manifest: dict,
-    added: list[str],
-    removed: list[str],
-    added_stats: dict,
-    op: str,
-    extra: dict,
-    max_retries: int = 10,
-) -> int:
-    """Commit a copy-on-write rewrite (delete/update/merge/OPTIMIZE
-    WHERE) with Delta's WriteSerializable conflict resolution
-    (reference semantics: the Databricks backend's MERGEs are
-    serializable, ``databases/databricks/delta.py:357-442`` — Delta's
-    default isolation resolves conflicts at FILE granularity).
-
-    A lost publish race does NOT automatically fail: the
-    transaction REBASES onto the new head and retries, succeeding iff
-
-    - no interleaved commit removed/rewrote any of THIS transaction's
-      target files (``removed``) — since partitioned tables write
-      partition-pure files, two writers scoped to disjoint partitions
-      always pass this check (partition-level conflict resolution falls
-      out of the file-level rule), while two writers rewriting the same
-      partition conflict and the loser raises; and
-    - no interleaved commit changed table metadata (schema,
-      constraints, layout, generated columns, properties).
-
-    Interleaved APPENDs always survive alongside this commit (their
-    files carry over through the rebased ``body_delta``) — allowed
-    under WriteSerializable: the rewrite operates on its snapshot, the
-    append's rows were never in scope."""
-    base_meta = _tt_meta_of(manifest)
-    root = log.root
-    for _ in range(max_retries):
-        new_manifest = {
-            **log.body_delta(manifest, added, removed, added_stats),
-            "op": op,
-            "ts": time.time(),
-            **extra,
-        }
-        try:
-            log.publish_manifest(head_v + 1, new_manifest)
-            return head_v + 1
-        except ConcurrentWriteError:
-            head_v, manifest = log.head()
-            if _tt_meta_of(manifest) != base_meta:
-                raise ConcurrentWriteError(
-                    f"{op} on {root}: a concurrent commit changed table "
-                    "metadata (schema/constraints/layout/properties) — "
-                    "re-run against the new snapshot"
-                )
-            live, _s = log.resolve(manifest)
-            live_set = set(live)
-            gone = [f for f in removed if f not in live_set]
-            if gone:
-                raise ConcurrentWriteError(
-                    f"{op} on {root}: a concurrent commit rewrote "
-                    f"{len(gone)} of this transaction's target files "
-                    f"(e.g. {gone[0]!r}) — overlapping partition/file "
-                    "conflict; re-run against the new snapshot"
-                )
-    raise ConcurrentWriteError(
-        f"{op} on {root} lost {max_retries} commit races"
-    )
 
 
 def _write_data_files(
@@ -457,13 +340,9 @@ def tt_create(
         raise AstroSparkError(f"versioned table already exists at {root}")
     partition_by = list(partition_by or [])
     header = {
-        **({"stats_cols": list(stats_cols)} if stats_cols else {}),
-        **({"partition_cols": partition_by} if partition_by else {}),
-        **(
-            {"generated_cols": dict(generated_cols)}
-            if generated_cols
-            else {}
-        ),
+        "stats_cols": list(stats_cols or []),
+        "partition_cols": partition_by,
+        "generated_cols": dict(generated_cols or {}),
     }
     df = _apply_generated(df, header)
     _check_generated(df, header, "create")
@@ -476,15 +355,8 @@ def tt_create(
     stats = _new_file_stats(
         spark, root, files, header, df
     ) if (stats_cols or partition_by) else {}
-    manifest = {
-        **log.body_full(files, stats),
-        "op": "create",
-        "ts": time.time(),
-        "schema": _schema_json(df),
-        **header,
-    }
-    log.publish_manifest(0, manifest)
-    return 0
+    header["schema"] = _schema_json(df)
+    return log.commit("create", "create", files=files, stats=stats, header=header)
 
 
 def _check_constraints(df: DataFrame, manifest: dict, what: str) -> None:
@@ -513,40 +385,33 @@ def tt_add_constraint(
     every later append/merge/overwrite must satisfy it or fails before
     publishing."""
     log = _open(spark, root)
-    root = log.root
-    head_v, manifest = log.head()
-    if name in (manifest.get("constraints") or {}):
+    base = log.head()
+    cons = base[1].get("constraints") or {}
+    if name in cons:
         raise AstroSparkError(f"constraint {name!r} already exists")
-    trial = {**manifest, "constraints": {name: expr}}
-    _check_constraints(_read_files(spark, root, manifest), trial, "existing data")
-    new_manifest = {
-        **manifest,
-        "op": f"add_constraint({name})",
-        "ts": time.time(),
-        "constraints": {**(manifest.get("constraints") or {}), name: expr},
-    }
-    log.publish_manifest(head_v + 1, new_manifest)
-    return head_v + 1
+    files, _stats = log.resolve(base[1])
+    _check_constraints(
+        _read_files(spark, log.root, files, base[1]),
+        {"constraints": {name: expr}},
+        "existing data",
+    )
+    return log.commit(
+        "copy", f"add_constraint({name})", base,
+        header={"constraints": {**cons, name: expr}},
+    )
 
 
 def tt_drop_constraint(spark: SparkSession, root: str, name: str) -> int:
     """Delta ``ALTER TABLE ... DROP CONSTRAINT``: metadata-only commit."""
     log = _open(spark, root)
-    head_v, manifest = log.head()
-    cons = dict(manifest.get("constraints") or {})
+    base = log.head()
+    cons = dict(base[1].get("constraints") or {})
     if name not in cons:
         raise AstroSparkError(f"constraint {name!r} does not exist")
     del cons[name]
-    new_manifest = {
-        **manifest,
-        "op": f"drop_constraint({name})",
-        "ts": time.time(),
-    }
-    new_manifest.pop("constraints", None)
-    if cons:
-        new_manifest["constraints"] = cons
-    log.publish_manifest(head_v + 1, new_manifest)
-    return head_v + 1
+    return log.commit(
+        "copy", f"drop_constraint({name})", base, header={"constraints": cons}
+    )
 
 
 def tt_add_columns(
@@ -564,7 +429,8 @@ def tt_add_columns(
     if not columns:
         raise ValueError("tt_add_columns: no columns given")
     log = _open(spark, root)
-    head_v, manifest = log.head()
+    base = log.head()
+    manifest = base[1]
     if manifest.get("schema") is None:
         raise AstroSparkError(
             "tt_add_columns: pre-schema-log table — commit a write "
@@ -582,16 +448,14 @@ def tt_add_columns(
         new_fields.append(
             StructField(name, _parse_datatype_string(type_str), True)
         )
-    new_manifest = {
-        **manifest,
-        "op": f"add_columns({','.join(n for n, _t in columns)})",
-        "ts": time.time(),
-        "schema": json.dumps(
-            StructType(prev.fields + new_fields).jsonValue()
-        ),
-    }
-    log.publish_manifest(head_v + 1, new_manifest)
-    return head_v + 1
+    return log.commit(
+        "copy",
+        f"add_columns({','.join(n for n, _t in columns)})",
+        base,
+        header={
+            "schema": json.dumps(StructType(prev.fields + new_fields).jsonValue())
+        },
+    )
 
 
 def tt_set_properties(
@@ -604,17 +468,12 @@ def tt_set_properties(
     if not props:
         raise ValueError("tt_set_properties: empty property map")
     log = _open(spark, root)
-    head_v, manifest = log.head()
-    merged = {**(manifest.get("properties") or {})}
+    base = log.head()
+    merged = {**(base[1].get("properties") or {})}
     merged.update({str(k): str(v) for k, v in props.items()})
-    new_manifest = {
-        **manifest,
-        "op": "set_properties",
-        "ts": time.time(),
-        "properties": merged,
-    }
-    log.publish_manifest(head_v + 1, new_manifest)
-    return head_v + 1
+    return log.commit(
+        "copy", "set_properties", base, header={"properties": merged}
+    )
 
 
 def tt_unset_properties(
@@ -624,22 +483,15 @@ def tt_unset_properties(
     commit dropping the keys (missing keys are ignored, Delta's IF
     EXISTS behavior)."""
     log = _open(spark, root)
-    head_v, manifest = log.head()
+    base = log.head()
     props = {
         k: v
-        for k, v in (manifest.get("properties") or {}).items()
+        for k, v in (base[1].get("properties") or {}).items()
         if k not in set(keys)
     }
-    new_manifest = {
-        **manifest,
-        "op": "unset_properties",
-        "ts": time.time(),
-    }
-    new_manifest.pop("properties", None)
-    if props:
-        new_manifest["properties"] = props
-    log.publish_manifest(head_v + 1, new_manifest)
-    return head_v + 1
+    return log.commit(
+        "copy", "unset_properties", base, header={"properties": props}
+    )
 
 
 def tt_properties(spark: SparkSession, root: str) -> dict[str, str]:
@@ -762,65 +614,25 @@ def tt_append(
     spark: SparkSession,
     df: DataFrame,
     root: str,
-    max_retries: int = 10,
     merge_schema: bool = False,
 ) -> int:
     """Commit a new version = previous files + df's files.  Append's
     intent is state-independent, so a lost race is retried against the
-    fresh head (data files are written ONCE; only the manifest race
-    re-runs).  ``merge_schema=True`` evolves the table schema with the
-    df's new columns (old files read the new columns as NULL); without
-    it, new columns are rejected — Delta's mergeSchema contract."""
+    fresh head (data files are written ONCE; only the validation and
+    the manifest race re-run).  ``merge_schema=True`` evolves the table
+    schema with the df's new columns (old files read the new columns as
+    NULL); without it, new columns are rejected — Delta's mergeSchema
+    contract."""
     log = _open(spark, root)
-    root = log.root
-    versions = log.versions()
-    if not versions:
-        raise AstroSparkError(f"no versioned table at {root}")
-    # partition columns are immutable table metadata (no ALTER): one
-    # head read decides the write layout, the retry loop re-reads only
-    # the racing file-list state
-    head_m = log.manifest(versions[-1])
-    pcols = _partition_cols_of(head_m)
+    # partition and generated columns are immutable table metadata (no
+    # ALTER): one head read decides the write layout, the commit
+    # re-reads only the racing state
+    _v, head_m = log.head()
     df = _apply_generated(df, head_m)
-    new_files = _write_data_files(spark, df, log, partition_cols=pcols)
-    for _ in range(max_retries):
-        versions = log.versions()
-        if not versions:
-            raise AstroSparkError(f"no versioned table at {root}")
-        head = versions[-1]
-        prev = log.manifest(head)
-        evolved = _evolved_schema(prev.get("schema"), df, merge_schema)
-        # validate the ACTUAL written rows (the tt_merge pattern), not the
-        # caller's lazy df: a nondeterministic df (rand() sampling,
-        # unordered limit) must never publish rows the check didn't see.
-        # Reading the still-invisible files through the evolved schema
-        # also means columns df omits are checked as the NULLs they will
-        # read back as.
-        written = _read_files(
-            spark, root, {"files": new_files, "schema": evolved}
-        )
-        _check_constraints(written, prev, "append")
-        _check_generated(written, prev, "append")
-        # stats only for columns the new files actually carry — a df
-        # legitimately missing table columns (they read back as NULL)
-        # must not crash the stats scan; absent per-file stats are
-        # already treated as "keep" by the skip_by reader
-        new_stats = _new_file_stats(spark, root, new_files, prev, df)
-        manifest = {
-            **log.body_delta(prev, new_files, [], new_stats),
-            "op": "append",
-            "ts": time.time(),
-            "schema": evolved,
-            **_carry_header(prev),
-        }
-        try:
-            log.publish_manifest(head + 1, manifest)
-            return head + 1
-        except ConcurrentWriteError:
-            continue
-    raise ConcurrentWriteError(
-        f"append to {root} lost {max_retries} commit races"
+    files = _write_data_files(
+        spark, df, log, partition_cols=_partition_cols_of(head_m)
     )
+    return _commit_append(spark, log, df, files, merge_schema)
 
 
 def tt_commit_files(
@@ -828,76 +640,69 @@ def tt_commit_files(
     root: str,
     new_files: list[str],
     mode: str = "append",
-    max_retries: int = 10,
 ) -> int:
     """Publish ALREADY-WRITTEN data files (root-relative paths under
     ``files/``) as a commit — the log-transaction half used by the
     ``versioned_parquet`` Data Source writer, whose executors wrote the
-    parquet through Arrow.  Semantics match ``tt_append`` /
-    ``tt_overwrite`` exactly (schema checked against the log, CHECK
+    parquet through Arrow.  The commit paths are ``tt_append``'s and
+    ``tt_overwrite``'s (schema checked against the log, CHECK
     constraints validated on the read-back of the still-invisible
     files, skipping stats recorded, append retries lost races); on an
     absent table the commit CREATES version 0 with the files' footer
-    schema."""
+    schema, and like every create it raises if another writer created
+    the table first."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"tt_commit_files: invalid mode {mode!r}")
     log = _open(spark, root)
-    root = log.root
     if not new_files:
         raise ValueError("tt_commit_files: no files to commit")
-    df = spark.read.parquet(*[_abs(root, f) for f in new_files])
-    versions = log.versions()
-    if not versions:
-        manifest = {
-            **log.body_full(sorted(new_files), {}),
-            "op": "create",
-            "ts": time.time(),
-            "schema": _schema_json(df),
-        }
-        log.publish_manifest(0, manifest)
-        return 0
-    if mode == "overwrite":
-        prev = log.manifest(versions[-1])
-        _require_generated_present(df, prev, "tt_commit_files")
-        _check_constraints(df, prev, "overwrite")
-        _check_generated(df, prev, "overwrite")
-        stats = _new_file_stats(spark, root, sorted(new_files), prev, df)
-        manifest = {
-            **log.body_full(sorted(new_files), stats),
-            "op": "overwrite",
-            "ts": time.time(),
-            "schema": _schema_json(df),
-            **_carry_header(prev),
-        }
-        log.publish_manifest(versions[-1] + 1, manifest)
-        return versions[-1] + 1
-    for _ in range(max_retries):
-        versions = log.versions()
-        head = versions[-1]
-        prev = log.manifest(head)
-        _require_generated_present(df, prev, "tt_commit_files")
-        evolved = _evolved_schema(prev.get("schema"), df, False)
-        committed = _read_files(
-            spark, root, {"files": sorted(new_files), "schema": evolved}
+    files = sorted(new_files)
+    # the footer read IS the read-back: the files are what they are
+    df = spark.read.parquet(*[_abs(log.root, f) for f in files])
+    if not log.versions():
+        return log.commit(
+            "create", "create", files=files, header={"schema": _schema_json(df)}
         )
-        _check_constraints(committed, prev, "append")
-        _check_generated(committed, prev, "append")
-        new_stats = _new_file_stats(spark, root, sorted(new_files), prev, df)
-        manifest = {
-            **log.body_delta(prev, sorted(new_files), [], new_stats),
-            "op": "append",
-            "ts": time.time(),
-            "schema": evolved,
-            **_carry_header(prev),
-        }
-        try:
-            log.publish_manifest(head + 1, manifest)
-            return head + 1
-        except ConcurrentWriteError:
-            continue
-    raise ConcurrentWriteError(
-        f"commit to {root} lost {max_retries} commit races"
-    )
+    if mode == "overwrite":
+        base = log.head()
+        return _commit_replace(
+            spark, log, base, df, files, _schema_json(df),
+            _partition_cols_of(base[1]),
+        )
+    return _commit_append(spark, log, df, files, merge_schema=False)
+
+
+def _commit_append(
+    spark: SparkSession,
+    log: TableLog,
+    df: DataFrame,
+    files: list[str],
+    merge_schema: bool,
+) -> int:
+    """The staged-append commit of ``tt_append`` (files written from
+    ``df``) and ``tt_commit_files`` (files given, ``df`` their footer
+    read).  Every attempt validates against the head it lands on: the
+    schema evolves from that head's, and the ACTUAL written rows (the
+    tt_merge pattern), not the caller's lazy df, are checked — a
+    nondeterministic df (rand() sampling, unordered limit) must never
+    publish rows the check didn't see.  Reading the still-invisible
+    files through the evolved schema also means columns df omits are
+    checked as the NULLs they will read back as."""
+
+    def attempt(prev: dict) -> tuple[dict, dict]:
+        _require_generated_present(df, prev, "tt_commit_files")
+        evolved = _evolved_schema(prev.get("schema"), df, merge_schema)
+        written = _read_file_lists(spark, log.root, files, evolved, [])
+        _check_constraints(written, prev, "append")
+        _check_generated(written, prev, "append")
+        # stats only for columns the new files actually carry — a df
+        # legitimately missing table columns (they read back as NULL)
+        # must not crash the stats scan; absent per-file stats are
+        # already treated as "keep" by the skip_by reader
+        stats = _new_file_stats(spark, log.root, files, prev, df)
+        return stats, {"schema": evolved}
+
+    return log.commit("append", "append", files=files, attempt=attempt)
 
 
 def tt_overwrite(
@@ -912,11 +717,8 @@ def tt_overwrite(
     table's existing partition layout; a list (possibly empty) replaces
     it — Delta's ``CREATE OR REPLACE ... PARTITIONED BY`` re-layout."""
     log = _open(spark, root)
-    root = log.root
-    versions = log.versions()
-    if not versions:
-        raise AstroSparkError(f"no versioned table at {root}")
-    prev = log.manifest(versions[-1])
+    base = log.head()
+    prev = base[1]
     pcols = (
         _partition_cols_of(prev) if partition_by is None else list(partition_by)
     )
@@ -925,28 +727,35 @@ def tt_overwrite(
     # validate the ACTUAL written rows (tt_merge pattern) — the files are
     # still invisible, so a rejected overwrite leaves garbage, never a
     # bad version, even for a nondeterministic df
-    written = _read_files(
-        spark, root, {"files": files, "schema": _schema_json(df)}
-    )
+    schema = _schema_json(df)  # overwrite replaces the schema too
+    written = _read_file_lists(spark, log.root, files, schema, [])
+    return _commit_replace(spark, log, base, written, files, schema, pcols)
+
+
+def _commit_replace(
+    spark: SparkSession,
+    log: TableLog,
+    base: tuple[int, dict],
+    written: DataFrame,
+    files: list[str],
+    schema: str,
+    pcols: list[str],
+) -> int:
+    """The replace commit of ``tt_overwrite`` and
+    ``tt_commit_files(mode="overwrite")``: check the read-back of the
+    still-invisible ``files`` against the table's CHECK constraints and
+    GENERATED columns, then publish them as the whole snapshot with
+    ``schema`` and partition layout ``pcols``, the rest of the header
+    carried."""
+    prev = base[1]
+    _require_generated_present(written, prev, "tt_commit_files")
     _check_constraints(written, prev, "overwrite")
     _check_generated(written, prev, "overwrite")
-    header = {
-        **_carry_stats_cols(prev),
-        **({"partition_cols": pcols} if pcols else {}),
-        **_carry_generated(prev),
-    }
-    stats = _new_file_stats(spark, root, files, header, df)
-    manifest = {
-        **log.body_full(files, stats),
-        "op": "overwrite",
-        "ts": time.time(),
-        "schema": _schema_json(df),  # overwrite replaces the schema too
-        **_carry_constraints(prev),
-        **header,
-        **_carry_props(prev),
-    }
-    log.publish_manifest(versions[-1] + 1, manifest)
-    return versions[-1] + 1
+    header = {"schema": schema, "partition_cols": pcols}
+    stats = _new_file_stats(spark, log.root, files, {**prev, **header}, written)
+    return log.commit(
+        "replace", "overwrite", base, files=files, stats=stats, header=header
+    )
 
 
 def _skip_bounds_from_predicate(where: str) -> dict:
@@ -1131,11 +940,7 @@ def tt_read(
     if skip_by:
         files = [f for f in files if _keep_file(stats, f, skip_by)]
 
-    def _finish(df: DataFrame) -> DataFrame:
-        return df.where(where) if where is not None else df
-
-    schema_json = manifest.get("schema")
-    if not files and schema_json is None:
+    if not files and manifest.get("schema") is None:
         raise AstroSparkError(
             f"version {version} of {root} has no data files "
             "(empty-write commit) — no schema to serve"
@@ -1143,12 +948,9 @@ def tt_read(
     # the LOG owns the schema (Delta's model): files written before a
     # column existed read it as NULL — no footer merging, no ambiguity;
     # adopted Hive files additionally materialize partition columns
-    # from their paths (_read_file_lists)
-    return _finish(
-        _read_file_lists(
-            spark, root, files, schema_json, _partition_cols_of(manifest)
-        )
-    )
+    # from their paths (_read_files)
+    df = _read_files(spark, root, files, manifest)
+    return df.where(where) if where is not None else df
 
 
 def tt_restore(spark: SparkSession, root: str, version: int) -> int:
@@ -1156,21 +958,15 @@ def tt_restore(spark: SparkSession, root: str, version: int) -> int:
     given version's (Delta ``RESTORE TABLE ... TO VERSION AS OF``) —
     history is preserved, nothing is deleted."""
     log = _open(spark, root)
-    root = log.root
     versions = log.versions()
     if version not in versions:
-        raise AstroSparkError(f"version {version} not found in {root}")
-    src = log.manifest(version)
-    # the file-list body copies verbatim — checkpoint refs are immutable,
-    # so restoring a checkpointed version shares its base by reference
-    manifest = {
-        **_copy_body(src),
-        "op": f"restore(v{version})",
-        "ts": time.time(),
-        **_header_copy(src),  # the version's schema, checks and layout too
-    }
-    log.publish_manifest(versions[-1] + 1, manifest)
-    return versions[-1] + 1
+        raise AstroSparkError(f"version {version} not found in {log.root}")
+    # the version's body and header (schema, checks, layout) copy
+    # verbatim — checkpoint refs are immutable, so restoring a
+    # checkpointed version shares its base by reference
+    return log.commit(
+        "copy", f"restore(v{version})", (versions[-1], log.manifest(version))
+    )
 
 
 def tt_restore_to_ts(spark: SparkSession, root: str, as_of_ts: float) -> int:
@@ -1275,15 +1071,10 @@ def tt_convert(
     else:
         df = spark.read.parquet(*abs_files)
     stats = _partition_path_stats(files, pcols) if pcols else {}
-    manifest = {
-        **log.body_full(files, stats),
-        "op": "convert",
-        "ts": time.time(),
-        "schema": _schema_json(df),
-        **({"partition_cols": pcols} if pcols else {}),
-    }
-    log.publish_manifest(0, manifest)
-    return 0
+    return log.commit(
+        "create", "convert", files=files, stats=stats,
+        header={"schema": _schema_json(df), "partition_cols": pcols},
+    )
 
 
 def tt_detail(spark: SparkSession, root: str) -> DataFrame:
@@ -1523,23 +1314,14 @@ def _read_file_lists(
     return out
 
 
-def _read_files(spark: SparkSession, root: str, manifest: dict) -> DataFrame:
-    """Read a manifest's (resolved) file list through its stored schema
-    (files written before a column existed read it as NULL).  Accepts
-    both real manifests (inline or checkpointed) and synthetic
-    ``{"files": [...]}`` dicts internal callers build (synthetic dicts
-    for PARTITIONED tables must carry ``partition_cols`` so adopted
-    files materialize their path values)."""
-    if "base" in manifest:
-        files, _stats = TableLog(root, spark).resolve(manifest)
-    else:
-        files = manifest.get("files") or []
+def _read_files(
+    spark: SparkSession, root: str, files: list[str], manifest: dict
+) -> DataFrame:
+    """Read ``files`` through ``manifest``'s stored schema (files
+    written before a column existed read it as NULL) and partition
+    layout (adopted Hive files materialize their path values)."""
     return _read_file_lists(
-        spark,
-        root,
-        files,
-        manifest.get("schema"),
-        _partition_cols_of(manifest),
+        spark, root, files, manifest.get("schema"), _partition_cols_of(manifest)
     )
 
 
@@ -1562,6 +1344,49 @@ def _touched_relative(
     ]
 
 
+def _rewrite(
+    spark: SparkSession,
+    log: TableLog,
+    op: str,
+    flag,
+    rewrite,
+    checks=(),
+    inserts: bool = False,
+) -> int:
+    """The copy-on-write path of DELETE/UPDATE/MERGE: find the head's
+    files holding the rows ``flag(full, manifest)`` selects (it returns
+    their DISTINCT ``input_file_name()``, captured in the scan stage),
+    write ``rewrite(touched, manifest)`` — the replacement rows of those
+    files — under the table's partition layout, run each of ``checks``
+    on the read-back of the still-invisible files, and publish a
+    rebasing ``rewrite`` commit (untouched files carry over by
+    reference).  Without a touched file nothing commits, unless the op
+    ``inserts`` rows of its own (MERGE rewrites an empty frame)."""
+    root = log.root
+    base = log.head()
+    head_v, manifest = base
+    files, _stats = log.resolve(manifest)
+    full = _read_files(spark, root, files, manifest)
+    touched = _touched_relative(spark, root, files, flag(full, manifest))
+    if not touched and not inserts:
+        return head_v  # nothing matched: no new version
+    out = rewrite(
+        _read_files(spark, root, touched, manifest) if touched else full.limit(0),
+        manifest,
+    )
+    new_files = _write_data_files(
+        spark, out, log, partition_cols=_partition_cols_of(manifest)
+    )
+    if checks:
+        written = _read_files(spark, root, new_files, manifest)
+        for check in checks:
+            check(written, manifest, op)
+    stats = _new_file_stats(spark, root, new_files, manifest, out)
+    return log.commit(
+        "rewrite", op, base, files=new_files, removed=touched, stats=stats
+    )
+
+
 def tt_delete_where(spark: SparkSession, root: str, predicate: str) -> int:
     """Delta ``DELETE FROM ... WHERE`` on the versioned log: rewrite
     ONLY the files containing matching rows (minus those rows), commit
@@ -1571,34 +1396,12 @@ def tt_delete_where(spark: SparkSession, root: str, predicate: str) -> int:
     to find them."""
     from pyspark.sql import functions as F
 
-    log = _open(spark, root)
-    root = log.root
-    head_v, manifest = log.head()
-    files, _stats = log.resolve(manifest)
-    full = _read_files(spark, root, manifest)
-    flagged = (
-        full.where(predicate)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-    )
-    touched = _touched_relative(spark, root, files, flagged)
-    if not touched:
-        return head_v  # nothing matched: no new version
-    pcols = _partition_cols_of(manifest)
-    kept = _read_files(
-        spark,
-        root,
-        {
-            "files": touched,
-            "schema": manifest.get("schema"),
-            **({"partition_cols": pcols} if pcols else {}),
-        },
-    ).where(f"NOT ({predicate})")
-    new_files = _write_data_files(spark, kept, log, partition_cols=pcols)
-    new_stats = _new_file_stats(spark, root, new_files, manifest, kept)
-    return _publish_cow(
-        log, head_v, manifest,
-        new_files, touched, new_stats, "delete", _cow_extra(manifest),
+    def flag(full: DataFrame, _m: dict) -> DataFrame:
+        return full.where(predicate).select(F.input_file_name().alias("f")).distinct()
+
+    return _rewrite(
+        spark, _open(spark, root), "delete", flag,
+        lambda touched, _m: touched.where(f"NOT ({predicate})"),
     )
 
 
@@ -1618,71 +1421,44 @@ def tt_update_where(
     publishes."""
     from pyspark.sql import functions as F
 
-    log = _open(spark, root)
-    root = log.root
-    head_v, manifest = log.head()
-    files, _stats = log.resolve(manifest)
-    full = _read_files(spark, root, manifest)
-    for c in set_map:
-        if c not in full.columns:
-            raise AstroSparkError(f"tt_update_where: unknown column {c!r}")
     cond = F.expr(predicate) if predicate is not None else F.lit(True)
-    flagged = (
-        full.where(cond)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-    )
-    touched = _touched_relative(spark, root, files, flagged)
-    if not touched:
-        return head_v  # nothing matched: no new version
-    # partition-column SET works too: values are physical data here, so
-    # the rewrite simply re-lays the touched rows under their new
-    # partition dirs — no path-only state to migrate
-    pcols = _partition_cols_of(manifest)
-    touched_df = _read_files(
-        spark,
-        root,
-        {
-            "files": touched,
-            "schema": manifest.get("schema"),
-            **({"partition_cols": pcols} if pcols else {}),
-        },
-    )
-    # Cast each assignment back to the EXISTING column type (Delta's
-    # store-assignment policy): a widening expression (``SET r = r / 2``
-    # on a long column) would otherwise make when/otherwise coerce the
-    # whole column to double, publishing files whose physical type
-    # contradicts the log-owned schema — unreadable until tt_restore.
-    rewritten = touched_df.select(
-        *[
-            F.when(
-                cond,
-                F.expr(set_map[c]).cast(touched_df.schema[c].dataType),
-            )
-            .otherwise(F.col(c))
-            .alias(c)
-            if c in set_map
-            else F.col(c)
-            for c in touched_df.columns
-        ]
-    )
-    # recompute generated columns over the rewritten rows (Delta does
-    # the same): a SET on a source column must move its generated
-    # partition value too
-    for g_name, g_expr in _generated_cols_of(manifest).items():
-        rewritten = rewritten.withColumn(g_name, F.expr(g_expr))
-    new_files = _write_data_files(spark, rewritten, log, partition_cols=pcols)
-    _check_constraints(
-        _read_files(
-            spark, root, {"files": new_files, "schema": manifest.get("schema")}
-        ),
-        manifest,
-        "update",
-    )
-    new_stats = _new_file_stats(spark, root, new_files, manifest, rewritten)
-    return _publish_cow(
-        log, head_v, manifest,
-        new_files, touched, new_stats, "update", _cow_extra(manifest),
+
+    def flag(full: DataFrame, _m: dict) -> DataFrame:
+        for c in set_map:
+            if c not in full.columns:
+                raise AstroSparkError(f"tt_update_where: unknown column {c!r}")
+        return full.where(cond).select(F.input_file_name().alias("f")).distinct()
+
+    def rewrite(touched: DataFrame, manifest: dict) -> DataFrame:
+        # partition-column SET works too: values are physical data here,
+        # so the rewrite simply re-lays the touched rows under their new
+        # partition dirs — no path-only state to migrate.  Each
+        # assignment casts back to the EXISTING column type (Delta's
+        # store-assignment policy): a widening expression (``SET r = r /
+        # 2`` on a long column) would otherwise make when/otherwise
+        # coerce the whole column to double, publishing files whose
+        # physical type contradicts the log-owned schema — unreadable
+        # until tt_restore.
+        out = touched.select(
+            *[
+                F.when(cond, F.expr(set_map[c]).cast(touched.schema[c].dataType))
+                .otherwise(F.col(c))
+                .alias(c)
+                if c in set_map
+                else F.col(c)
+                for c in touched.columns
+            ]
+        )
+        # recompute generated columns over the rewritten rows (Delta
+        # does the same): a SET on a source column must move its
+        # generated partition value too
+        for g_name, g_expr in _generated_cols_of(manifest).items():
+            out = out.withColumn(g_name, F.expr(g_expr))
+        return out
+
+    return _rewrite(
+        spark, _open(spark, root), "update", flag, rewrite,
+        checks=(_check_constraints,),
     )
 
 
@@ -1698,62 +1474,41 @@ def tt_merge(
     files.  Source rows are pre-deduped deterministically on the keys
     (the engine-wide merge convention — Delta errors on source dups).
     Old versions stay readable: MERGE + time travel on plain parquet,
-    the combination the Delta backend gets from its log."""
+    the combination the Delta backend gets from its log.  The rewrite's
+    ACTUAL rows (updates included) are checked against the CHECK
+    constraints and GENERATED columns before anything publishes."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from .merge import _upsert
 
-    log = _open(spark, root)
-    root = log.root
-    head_v, manifest = log.head()
-    files, _stats = log.resolve(manifest)
-    target = _read_files(spark, root, manifest)
-    source = _apply_generated(source, manifest)
-    source = source.select(*target.columns)  # align column order
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in source.columns])
-    source = (
-        source.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # input_file_name() must be captured IN the scan stage — after the
-    # join exchange it evaluates empty
-    tagged = target.select(*keys, F.input_file_name().alias("f"))
-    flagged = (
-        tagged.join(source.select(*keys).distinct(), on=keys, how="leftsemi")
-        .select("f")
-        .distinct()
-    )
-    touched = _touched_relative(spark, root, files, flagged)
-    pcols = _partition_cols_of(manifest)
-    base = (
-        _read_files(
-            spark,
-            root,
-            {
-                "files": touched,
-                "schema": manifest.get("schema"),
-                **({"partition_cols": pcols} if pcols else {}),
-            },
+    def flag(target: DataFrame, manifest: dict) -> DataFrame:
+        nonlocal source
+        source = _apply_generated(source, manifest)
+        source = source.select(*target.columns)  # align column order
+        w = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in source.columns])
+        source = (
+            source.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1)
+            .drop("__rn")
         )
-        if touched
-        else target.limit(0)
-    )
-    merged = _upsert(base, source, keys)
-    new_files = _write_data_files(spark, merged, log, partition_cols=pcols)
-    # validate the rewrite's ACTUAL rows (updates included) against the
-    # CHECK constraints before anything publishes — one read-back of
-    # the just-written files, which are still invisible
-    merged_back = _read_files(
-        spark, root, {"files": new_files, "schema": manifest.get("schema")}
-    )
-    _check_constraints(merged_back, manifest, "merge")
-    _check_generated(merged_back, manifest, "merge")
-    new_stats = _new_file_stats(spark, root, new_files, manifest, merged)
-    return _publish_cow(
-        log, head_v, manifest,
-        new_files, touched, new_stats, "merge", _cow_extra(manifest),
+        # input_file_name() must be captured IN the scan stage — after
+        # the join exchange it evaluates empty
+        tagged = target.select(*keys, F.input_file_name().alias("f"))
+        return (
+            tagged.join(source.select(*keys).distinct(), on=keys, how="leftsemi")
+            .select("f")
+            .distinct()
+        )
+
+    return _rewrite(
+        spark,
+        _open(spark, root),
+        "merge",
+        flag,
+        lambda touched, _m: _upsert(touched, source, keys),
+        checks=(_check_constraints, _check_generated),
+        inserts=True,
     )
 
 
@@ -1784,9 +1539,11 @@ def tt_optimize(
 
     log = _open(spark, root)
     root = log.root
-    head_v, manifest = log.head()
+    base = log.head()
+    head_v, manifest = base
     pcols = _partition_cols_of(manifest)
-    selected: list[str] | None = None
+    files, recorded = log.resolve(manifest)
+    scope = files
     if where is not None:
         if not pcols:
             raise AstroSparkError(
@@ -1800,13 +1557,12 @@ def tt_optimize(
                 f"conjunction over partition columns {pcols}, got "
                 f"{where!r}"
             )
-        files, stats = log.resolve(manifest)
         # a file is selected iff its RECORDED partition value provably
         # satisfies every bound (degenerate [v, v] stats — partition
         # values are always recorded, so no file is ambiguous)
-        selected = []
+        scope = []
         for f in files:
-            st = stats.get(f) or {}
+            st = recorded.get(f) or {}
             take = True
             for col, (lo, hi) in bounds.items():
                 rng = st.get(col)
@@ -1823,29 +1579,14 @@ def tt_optimize(
                     take = False
                     break
             if take:
-                selected.append(f)
-        if not selected:
+                scope.append(f)
+        if not scope:
             return head_v  # nothing in scope: no new version
-        df = _read_files(
-            spark,
-            root,
-            {
-                "files": selected,
-                "schema": manifest.get("schema"),
-                **({"partition_cols": pcols} if pcols else {}),
-            },
-        )
-    else:
-        df = _read_files(spark, root, manifest)
+    df = _read_files(spark, root, scope, manifest)
     if target_files is None:
-        n_scope = (
-            len(selected)
-            if selected is not None
-            else int(manifest.get("n_files", len(manifest.get("files") or [])))
-        )
         target_files = max(
             1,
-            min(n_scope, int(spark.conf.get("spark.sql.shuffle.partitions"))),
+            min(len(scope), int(spark.conf.get("spark.sql.shuffle.partitions"))),
         )
     if zorder_by:
         df = (
@@ -1865,31 +1606,15 @@ def tt_optimize(
     # zorder makes files cover COMPACT ranges — exactly when skipping
     # stats pay off; recompute them over the new layout
     stats = _new_file_stats(spark, root, new_files, manifest, df)
-    if selected is not None:
+    if where is not None:
         # partition-scoped: unselected files carry over by reference —
-        # an O(delta) commit exactly like DML's copy-on-write
-        return _publish_cow(
-            log, head_v, manifest,
-            new_files, selected, stats,
-            f"optimize(where={where})", _cow_extra(manifest),
+        # an O(delta) copy-on-write commit exactly like DML's
+        return log.commit(
+            "rewrite", f"optimize(where={where})", base,
+            files=new_files, removed=scope, stats=stats,
         )
-    new_manifest = {
-        **log.body_full(new_files, stats),
-        "op": (
-            f"optimize(zorder={','.join(zorder_by)})"
-            if zorder_by
-            else "optimize"
-        ),
-        "ts": time.time(),
-        **(
-            {"schema": manifest["schema"]}
-            if manifest.get("schema") is not None
-            else {}
-        ),
-        **_carry_header(manifest),  # rows identical; carry
-    }
-    log.publish_manifest(head_v + 1, new_manifest)
-    return head_v + 1
+    op = f"optimize(zorder={','.join(zorder_by)})" if zorder_by else "optimize"
+    return log.commit("replace", op, base, files=new_files, stats=stats)
 
 
 def tt_diff(
@@ -1968,14 +1693,11 @@ def tt_clone(
     dst = _open(spark, dst_root)
     if dst.versions():
         raise AstroSparkError(f"versioned table already exists at {dst.root}")
-    manifest = {
-        **dst.body_full(abs_files, abs_stats),
-        "op": f"clone({src_root}@v{version})",
-        "ts": time.time(),
-        **_header_copy(m),
-    }
-    dst.publish_manifest(0, manifest)
-    return 0
+    # the source version's header verbatim
+    return dst.commit(
+        "create", f"clone({src_root}@v{version})",
+        files=abs_files, stats=abs_stats, header=m,
+    )
 
 
 def tt_changes(
@@ -2018,21 +1740,12 @@ def tt_changes(
         added = [f for f in cur_files if f not in prev_set]
         removed = [f for f in prev_files if f not in cur_set]
         # read BOTH sides through the newer schema (the log owns it:
-        # pre-evolution files read new columns as NULL), so the
-        # multiset compare is well-typed across schema evolution
-        synth = {
-            "schema": cur_m.get("schema"),
-            **_carry_partition(cur_m),  # adopted files: path values
-        }
-        added_df = (
-            _read_files(spark, root, {"files": added, **synth})
-            if added
-            else None
-        )
+        # pre-evolution files read new columns as NULL; adopted files
+        # their path values), so the multiset compare is well-typed
+        # across schema evolution
+        added_df = _read_files(spark, root, added, cur_m) if added else None
         removed_df = (
-            _read_files(spark, root, {"files": removed, **synth})
-            if removed
-            else None
+            _read_files(spark, root, removed, cur_m) if removed else None
         )
         if added_df is None and removed_df is None:
             prev_files = cur_files
@@ -2055,7 +1768,7 @@ def tt_changes(
         )
         prev_files = cur_files
     if out is None:  # no versions in range, or only no-op commits
-        base = _read_files(spark, root, prev_m).limit(0)
+        base = _read_files(spark, root, log.resolve(prev_m)[0], prev_m).limit(0)
         return base.withColumn("_change_type", F.lit("")).withColumn(
             "_commit_version", F.lit(0).cast("long")
         ).limit(0)
@@ -2164,7 +1877,8 @@ def tt_vacuum(
     # compaction — on contended tables those full-snapshot files would
     # leak indefinitely) after a grace window that protects an
     # IN-FLIGHT commit's checkpoint (Delta's VACUUM retention serves
-    # the same purpose); tests may set
+    # the same purpose).  Manifest temps a killed publisher left behind
+    # age out through the same window.  Tests may set
     # spark.astro.tt.vacuumCkptGraceSec=0.
     try:
         grace_s = float(

@@ -58,14 +58,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..exceptions import ConcurrentWriteError
 from .tt_log import (
     _INLINE_MAX,
     TableLog,
     _abs,
     _arrow_fs,
     _ArrowCommitUnsupported,
-    _carry_header,
     _keep_file,
     _partition_cols_of,
     _partition_values,
@@ -397,13 +395,16 @@ class _TTWriteMessage(WriterCommitMessage):
 # runner process with no JVM gateway: `SparkSession.builder.getOrCreate()`
 # there boots an ENTIRE fresh local JVM (~7-9 s per stream start,
 # measured) just to publish one manifest.  So the commit is Spark-free:
-# the footer schema and the skipping stats come from Arrow here, the
-# manifest body and its atomic publish from ``tt_log`` — the code the
-# session path's ``timetravel.tt_commit_files`` publishes through too.
-# Conditions this path can't honor (non-local root; CHECK constraints
-# and GENERATED columns — Spark SQL expressions; schema drift; exotic
-# stats types) raise ``_ArrowCommitUnsupported`` BEFORE anything
-# publishes and fall back to the session path, so semantics never fork.
+# the footer schema and the skipping stats come from Arrow here; the
+# manifest, its atomic publish and what a lost race means come from
+# ``TableLog.commit`` — the one commit the session path's
+# ``timetravel.tt_commit_files`` publishes through too, so both paths
+# build the same manifest and resolve races (a lost create included)
+# the same way.  Conditions this path can't honor (non-local root;
+# CHECK constraints and GENERATED columns — Spark SQL expressions;
+# schema drift; exotic stats types) raise ``_ArrowCommitUnsupported``
+# BEFORE anything publishes and fall back to the session path, so
+# semantics never fork.
 
 
 def _files_schema_arrow(path: str, files: list[str]):
@@ -519,34 +520,25 @@ def _commit_files_arrow(
     new_files: list[str],
     mode: str,
     inline_max: int = _INLINE_MAX,
-    max_retries: int = 10,
 ) -> int:
-    """Spark-free ``timetravel.tt_commit_files``: same manifest fields,
-    same append-race retry — raises ``_ArrowCommitUnsupported`` (caller
-    falls back to the session path) for non-local roots, constrained
-    tables, schema drift, or exotic stats types.  Nothing publishes
-    before every check passes."""
-    import time as _time
-
+    """Spark-free ``timetravel.tt_commit_files``: the same
+    ``TableLog.commit`` kinds (create on an absent table, append with
+    its race retry, replace for overwrite) with the validation done in
+    Arrow — raises ``_ArrowCommitUnsupported`` (caller falls back to
+    the session path) for non-local roots, constrained tables, schema
+    drift, or exotic stats types.  Nothing publishes before every check
+    passes."""
     log = TableLog(root, inline_max=inline_max)
     path = log.fs.local_dir()
     files = sorted(new_files)
     file_schema = _files_schema_arrow(path, files)
     file_schema_json = json.dumps(file_schema.jsonValue())
     if not log.versions():
-        manifest = {
-            **log.body_full(files, {}),
-            "op": "create",
-            "ts": _time.time(),
-            "schema": file_schema_json,
-        }
-        try:
-            log.publish_manifest(0, manifest)
-            return 0
-        except ConcurrentWriteError:
-            pass  # lost the create: append below
-    for _ in range(max_retries):
-        head, prev = log.head()
+        return log.commit(
+            "create", "create", files=files, header={"schema": file_schema_json}
+        )
+
+    def attempt(prev: dict) -> tuple[dict, dict]:
         if prev.get("constraints"):
             raise _ArrowCommitUnsupported("table has CHECK constraints")
         if prev.get("generated_cols"):
@@ -567,26 +559,14 @@ def _commit_files_arrow(
             if c in present
         ]
         stats = _file_stats_arrow(path, files, cols) if cols else {}
-        body = (
-            log.body_full(files, stats)
-            if mode == "overwrite"
-            else log.body_delta(prev, files, [], stats)
-        )
-        manifest = {
-            **body,
-            "op": mode,
-            "ts": _time.time(),
-            "schema": schema,
-            **_carry_header(prev),
-        }
-        try:
-            log.publish_manifest(head + 1, manifest)
-            return head + 1
-        except ConcurrentWriteError:
-            if mode == "overwrite":
-                raise  # what the overwrite meant to replace has changed
-    raise ConcurrentWriteError(
-        f"commit to {root} lost {max_retries} commit races"
+        return stats, {"schema": schema}
+
+    if mode == "append":
+        return log.commit("append", "append", files=files, attempt=attempt)
+    base = log.head()
+    stats, header = attempt(base[1])
+    return log.commit(
+        "replace", "overwrite", base, files=files, stats=stats, header=header
     )
 
 
@@ -594,10 +574,11 @@ class _TTArrowWriter(DataSourceArrowWriter):
     """Executor half: each task writes its Arrow batches as ONE parquet
     file under the commit's ``files/<uuid>/`` dir (invisible until the
     driver publishes a manifest); driver half: ``commit`` runs the SAME
-    log transaction as ``tt_append``/``tt_overwrite``
-    (``tt_commit_files`` — schema check, CHECK constraints on the
-    read-back, skipping stats, append race retry), so
-    ``df.write.format('versioned_parquet')`` is an ACID commit.  A
+    log transaction as ``tt_append``/``tt_overwrite`` — Arrow-first
+    (``_commit_files_arrow``), else ``tt_commit_files`` on a session;
+    both publish through ``TableLog.commit`` (schema check, CHECK
+    constraints on the read-back, skipping stats, append race retry) —
+    so ``df.write.format('versioned_parquet')`` is an ACID commit.  A
     failed/aborted job leaves invisible garbage only (``tt_vacuum``
     reclaims it) — exactly the engine-native writers' guarantee."""
 
@@ -677,9 +658,9 @@ class _TTArrowWriter(DataSourceArrowWriter):
         files = self._all_files(messages)
         if not files:
             return  # all-empty write: no version (matches no-op DML)
-        # Arrow-first, exactly like the stream writer's commit: Spark 4
-        # runs the BATCH writer's commit in a detached Python runner
-        # with no JVM gateway too, where the former
+        # Arrow-first (the stream writer commits through here too):
+        # Spark 4 runs the BATCH writer's commit in a detached Python
+        # runner with no JVM gateway as well, where the former
         # ``SparkSession.builder.getOrCreate()`` booted a whole PRIVATE
         # local JVM (~10-20 s on first write, measured r14, plus a
         # second resident JVM for the rest of the process).  The
@@ -727,11 +708,11 @@ class _TTStreamWriter(DataSourceStreamWriter, _TTArrowWriter):
     Spark runs a Python streaming sink's ``commit`` in a detached
     runner process (no JVM gateway), where ``getOrCreate`` would boot a
     whole fresh local JVM per stream (~7-9 s measured).  The commit is
-    therefore Arrow-first (``_commit_files_arrow`` — identical manifest
-    semantics, pure pyarrow/os), falling back to the session path only
-    for what the Spark-free commit can't honor: non-local roots, tables
-    with CHECK constraints (Spark SQL expressions), schema drift, or
-    decimal stats."""
+    therefore the batch writer's: Arrow-first (``_commit_files_arrow``
+    — identical manifest semantics, pure pyarrow/os), falling back to
+    the session path only for what the Spark-free commit can't honor:
+    non-local roots, tables with CHECK constraints or GENERATED columns
+    (Spark SQL expressions), schema drift, or decimal stats."""
 
     def write(self, iterator):
         import uuid as _uuid
@@ -742,17 +723,7 @@ class _TTStreamWriter(DataSourceStreamWriter, _TTArrowWriter):
         return _TTArrowWriter.write(self, iterator)
 
     def commit(self, messages, batchId: int):
-        files = self._all_files(messages)
-        if not files:
-            return  # all-empty micro-batch: no version
-        try:
-            _commit_files_arrow(
-                self._root,
-                files,
-                mode="overwrite" if self._overwrite else "append",
-            )
-        except _ArrowCommitUnsupported:
-            _TTArrowWriter.commit(self, messages)
+        _TTArrowWriter.commit(self, messages)
 
     def abort(self, messages, batchId: int):
         _TTArrowWriter.abort(self, messages)

@@ -14,8 +14,11 @@ Layout::
 A version's manifest carries either the complete file list inline
 (``files`` + ``stats``) or, past the inline threshold, a checkpoint
 ``base`` plus ``add``/``remove`` deltas; every manifest carries
-``n_files`` and the table header (schema, constraints, stats/partition/
-generated columns, properties) that each commit carries forward.
+``n_files``, ``op``, ``ts`` and the table header (``_HEADER``: schema,
+constraints, stats/partition/generated columns, properties) that each
+commit carries forward.  ``TableLog.commit`` is the one place a
+manifest is built and published, and the one place a lost publish race
+is resolved, for every writer of the format.
 
 ``TableLog(root, spark=None)`` is the one place that picks the I/O,
 from the root's scheme:
@@ -54,6 +57,15 @@ _INLINE_MAX = 1000
 # link(2) errnos meaning "this mount has no hard links" — the only
 # failures that may take the O_EXCL fallback
 _NO_HARDLINKS = frozenset({errno.EPERM, errno.EOPNOTSUPP, errno.ENOTSUP})
+# the table header: every manifest field besides the file-list body,
+# ``op`` and ``ts`` — what each commit carries forward
+_HEADER = (
+    "schema", "constraints", "stats_cols", "partition_cols",
+    "generated_cols", "properties",
+)
+# publish races an append or a copy-on-write rewrite may lose in a row
+# before it gives up
+_MAX_RETRIES = 10
 
 
 class _ArrowCommitUnsupported(Exception):
@@ -140,7 +152,10 @@ class _LocalFS:
             return 0  # vacuumed/external path counts zero
 
     def mtime_ms(self, rel: str) -> float:
-        return os.stat(self._p(rel)).st_mtime * 1000.0
+        try:
+            return os.stat(self._p(rel)).st_mtime * 1000.0
+        except FileNotFoundError:
+            return self.now_ms()  # gone meanwhile: never counts as aged
 
     def now_ms(self) -> float:
         return time.time() * 1000.0
@@ -359,8 +374,8 @@ class TableLog:
     def publish_manifest(self, version: int, manifest: dict) -> None:
         """Atomic put-if-absent of the version manifest — the commit
         point.  Two writers racing for ``version``: one wins, the other
-        gets ``ConcurrentWriteError`` and retries against the new
-        head."""
+        gets ``ConcurrentWriteError`` (``commit`` decides what that
+        means for its kind)."""
         try:
             self.fs.publish(
                 f"{_LOG}/{_manifest_name(version)}",
@@ -481,6 +496,101 @@ class TableLog:
         stats.update(added_stats)
         return self.body_full(kept + added, stats)
 
+    def commit(
+        self,
+        kind: str,
+        op: str,
+        base: tuple[int, dict] | None = None,
+        *,
+        files: list[str] = (),
+        stats: dict | None = None,
+        removed: list[str] = (),
+        header: dict | None = None,
+        attempt=None,
+    ) -> int:
+        """Build and publish one commit's manifest and resolve its
+        publish race; returns the version it landed as.
+
+        ``base`` is the ``(version, manifest)`` the commit builds on —
+        it publishes as ``version + 1``.  The manifest is a file-list
+        body, ``op``, ``ts`` and the table header: ``base``'s header
+        with ``header``'s fields replacing it (only ``_HEADER`` keys are
+        read; an empty field is left out).  ``kind`` decides the body,
+        how the header carries and what a lost race means:
+
+        - ``create``: version 0 (no ``base``) of ``files``/``stats``,
+          header = ``header`` alone.  A lost race raises: the table
+          another writer created is not the one this commit meant.
+        - ``replace``: ``files``/``stats`` as the whole snapshot (an
+          overwrite or a full OPTIMIZE).  A lost race raises: what it
+          meant to replace has changed.
+        - ``copy``: ``base``'s body and header verbatim — metadata-only
+          commits (``base`` = the head) and RESTORE (the head's version
+          with the restored version's manifest).  A lost race raises.
+        - ``append``: the head's files plus ``files``.  Every attempt
+          reads the head and calls ``attempt(head manifest) -> (stats,
+          header)``, the caller's validation against that state; a lost
+          race re-runs it on the new head (append's intent does not
+          depend on the state it lands on).
+        - ``rewrite``: copy-on-write over ``base``, ``removed`` out and
+          ``files``/``stats`` in.  A lost race rebases onto the new head
+          (Delta's WriteSerializable, at file granularity — reference:
+          the Databricks backend's serializable MERGEs,
+          ``databases/databricks/delta.py:357-442``) iff no interleaved
+          commit removed any of ``removed`` (partition-pure files make
+          writers on disjoint partitions both land) and none changed
+          the table header; interleaved appends carry over through the
+          rebased ``body_delta``.
+
+        Data commits (replace/append/rewrite) carry the header
+        normalized (``stats_cols`` materialized from inline stats);
+        ``copy`` keeps it verbatim."""
+        version, prev = base if base is not None else (-1, {})
+        hdr = _table_header(prev, header or {}, carry=kind != "copy")
+        meta = _rebase_meta(prev) if kind == "rewrite" else None
+        for _ in range(_MAX_RETRIES):
+            if kind == "append":
+                version, prev = self.head()
+                stats, changes = attempt(prev)
+                hdr = _table_header(prev, changes)
+            if kind in ("create", "replace"):
+                body = self.body_full(list(files), stats or {})
+            elif kind == "copy":
+                body = _copy_body(prev)
+            else:
+                body = self.body_delta(
+                    prev, list(files), list(removed), stats or {}
+                )
+            try:
+                self.publish_manifest(
+                    version + 1, {**body, "op": op, "ts": time.time(), **hdr}
+                )
+                return version + 1
+            except ConcurrentWriteError:
+                if kind == "append":
+                    continue
+                if kind != "rewrite":
+                    raise
+            version, prev = self.head()
+            if _rebase_meta(prev) != meta:
+                raise ConcurrentWriteError(
+                    f"{op} on {self.root}: a concurrent commit changed table "
+                    "metadata (schema/constraints/layout/properties) — "
+                    "re-run against the new snapshot"
+                )
+            live = set(self.resolve(prev)[0])
+            gone = [f for f in removed if f not in live]
+            if gone:
+                raise ConcurrentWriteError(
+                    f"{op} on {self.root}: a concurrent commit rewrote "
+                    f"{len(gone)} of this transaction's target files "
+                    f"(e.g. {gone[0]!r}) — overlapping partition/file "
+                    "conflict; re-run against the new snapshot"
+                )
+        raise ConcurrentWriteError(
+            f"{op} on {self.root} lost {_MAX_RETRIES} commit races"
+        )
+
     def parquet_files(self, rel: str = "") -> list[str]:
         """Sorted root-relative paths of the parquet files under
         ``rel`` (the log directory excluded)."""
@@ -511,17 +621,24 @@ class TableLog:
         written by a commit that lost its race, or an abandoned tail
         compaction — only once older than ``grace_s`` on the
         filesystem's clock, since an in-flight commit's checkpoint is
-        an orphan until its manifest publishes."""
+        an orphan until its manifest publishes.  Manifest temps
+        (``.v*.json.tmp-*``, left by a publisher killed between its
+        temp write and the link) go after the same window, which keeps
+        an in-flight publisher's temp."""
         for v in versions:
             self.fs.delete(f"{_LOG}/{_manifest_name(v)}")
         now_ms = None
         for name, _is_dir in self.fs.list(_LOG):
             ref = f"{_LOG}/{name}"
-            if not (name.startswith("ckpt-") and name.endswith(".parquet")):
+            if name.startswith(".v") and ".json.tmp-" in name:
+                aged = True
+            elif name.startswith("ckpt-") and name.endswith(".parquet"):
+                if ref in live_refs:
+                    continue
+                aged = ref not in dead_refs
+            else:
                 continue
-            if ref in live_refs:
-                continue
-            if ref not in dead_refs:
+            if aged:
                 if now_ms is None:
                     now_ms = self.fs.now_ms()
                 if now_ms - self.fs.mtime_ms(ref) < grace_s * 1000.0:
@@ -557,46 +674,40 @@ def _generated_cols_of(manifest: dict) -> dict:
     return dict(manifest.get("generated_cols") or {})
 
 
-def _carry_constraints(manifest: dict) -> dict:
-    c = manifest.get("constraints")
-    return {"constraints": c} if c else {}
+def _table_header(manifest: dict, changes: dict, carry: bool = True) -> dict:
+    """The ``_HEADER`` fields a commit publishes: ``manifest``'s, with
+    ``changes``' header fields replacing them; empty fields are left
+    out.  ``carry`` (data commits) normalizes — ``stats_cols`` is
+    materialized from inline stats on manifests that predate the
+    header; without it (copies) the fields are taken verbatim."""
+    out = {}
+    for k in _HEADER:
+        if k in changes:
+            v = changes[k]
+        elif carry and k == "stats_cols":
+            v = _stats_cols_of(manifest)
+        else:
+            v = manifest.get(k)
+        if v:
+            out[k] = v
+    return out
 
 
-def _carry_stats_cols(manifest: dict) -> dict:
-    cols = _stats_cols_of(manifest)
-    return {"stats_cols": cols} if cols else {}
-
-
-def _carry_partition(manifest: dict) -> dict:
-    p = manifest.get("partition_cols")
-    return {"partition_cols": list(p)} if p else {}
-
-
-def _carry_generated(manifest: dict) -> dict:
-    g = manifest.get("generated_cols")
-    return {"generated_cols": dict(g)} if g else {}
-
-
-def _carry_props(manifest: dict) -> dict:
-    p = manifest.get("properties")
-    return {"properties": p} if p else {}
-
-
-def _carry_header(manifest: dict) -> dict:
-    """The table header every data commit carries forward unchanged."""
-    return {
-        **_carry_constraints(manifest),
-        **_carry_stats_cols(manifest),
-        **_carry_partition(manifest),
-        **_carry_generated(manifest),
-        **_carry_props(manifest),
-    }
+def _rebase_meta(manifest: dict) -> str:
+    """The table header a rebased rewrite would silently clobber if an
+    interleaved commit changed it — normalized (a v0 manifest stores
+    stats_cols only implicitly in its inline stats; a representation
+    change, not a conflict) and compared as canonical JSON, so neither
+    column-set nor dict ordering fakes a conflict."""
+    h = _table_header(manifest, {})
+    h["stats_cols"] = sorted(h.get("stats_cols", ()))
+    return json.dumps(h, sort_keys=True)
 
 
 def _copy_body(manifest: dict) -> dict:
     """The file-list body fields of an existing manifest, verbatim —
     checkpoint refs are immutable, so RESTORE and metadata-only commits
-    may share them by reference."""
+    share them by reference."""
     return {
         k: manifest[k]
         for k in ("files", "stats", "base", "add", "remove", "add_stats", "n_files")

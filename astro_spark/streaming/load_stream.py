@@ -22,6 +22,7 @@ once semantics on top of the checkpoint).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from collections.abc import Callable
@@ -412,14 +413,17 @@ def compact_mv_partials(
     # the catalog level — a table rename would strand the partition
     # locations the catalog recorded for the staging name
     staging_dir = tempfile.mkdtemp(prefix="astro_mv_compact_")
-    folded.write.mode("overwrite").parquet(staging_dir)
-    staged = spark.read.parquet(staging_dir).select(*partials.columns)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     try:
-        staged.write.mode("overwrite").insertInto(phys)
+        folded.write.mode("overwrite").parquet(staging_dir)
+        staged = spark.read.parquet(staging_dir).select(*partials.columns)
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+        try:
+            staged.write.mode("overwrite").insertInto(phys)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        shutil.rmtree(staging_dir, ignore_errors=True)
     spark.catalog.refreshTable(phys)
     return n_parts
 

@@ -2624,6 +2624,27 @@ class TestTimeTravel:
             ) == 1
         assert not [n for n in _os.listdir(f"{root}/_log") if n.startswith(".")]
 
+    def test_vacuum_sweeps_stale_manifest_temps(self, spark, tmp_path):
+        """A publisher killed between its temp write and link(2) leaves
+        a hidden _log/.v*.json.tmp-* file.  Vacuum removes it once it is
+        older than the grace window (which keeps an in-flight
+        publisher's temp): kept under the default grace, removed with
+        grace 0."""
+        root = self._seed(spark, tmp_path)
+        stale = f"{root}/_log/.v00000001.json.tmp-{'0' * 32}"
+        with open(stale, "w") as fh:
+            fh.write('{"files": [], "op": "killed"')
+        a.tt_vacuum(spark, root)
+        assert os.path.exists(stale)
+        spark.conf.set("spark.astro.tt.vacuumCkptGraceSec", "0")
+        try:
+            a.tt_vacuum(spark, root)
+        finally:
+            spark.conf.unset("spark.astro.tt.vacuumCkptGraceSec")
+        assert not os.path.exists(stale)
+        assert TableLog(root).versions() == [0]
+        assert a.tt_read(spark, root).count() == 2
+
     def test_relative_root_resolves_against_cwd(
         self, spark, tmp_path, monkeypatch
     ):
@@ -5223,10 +5244,10 @@ class TestRound14AdviceFixes:
 
 class TestConcurrentWriters:
     """Round-14: Delta-style WriteSerializable conflict resolution for
-    copy-on-write commits (_publish_cow).  The interleaved commit is
-    INJECTED at the loser's publish point (monkeypatched publish), so
-    every schedule is deterministic — the threaded linearizability
-    property lives in test_properties.py."""
+    copy-on-write commits (TableLog.commit, kind "rewrite").  The
+    interleaved commit is INJECTED at the loser's publish point
+    (monkeypatched publish), so every schedule is deterministic — the
+    threaded linearizability property lives in test_properties.py."""
 
     def _seed(self, spark, tmp_path, name="ct"):
         root = str(tmp_path / name)
@@ -5339,6 +5360,131 @@ class TestConcurrentWriters:
         got = a.tt_read(spark, root)
         assert got.where("p = 2").count() == 0  # delete survived
         assert {r.v for r in got.where("k IN (0, 3)").collect()} == {9}
+
+    def test_lost_create_ends_alike_on_both_commit_paths(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A commit of given files to an absent root creates version 0;
+        when a rival's v0 lands first, the session path
+        (tt_commit_files) and the Spark-free path (_commit_files_arrow)
+        both raise ConcurrentWriteError and leave the rival's table
+        untouched — one rule, because both go through the same create
+        commit."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from astro_spark.operators.timetravel import (
+            ConcurrentWriteError,
+            tt_commit_files,
+        )
+        from astro_spark.sources.tt_datasource import _commit_files_arrow
+
+        schema = (
+            '{"type":"struct","fields":[{"name":"k","type":"long",'
+            '"nullable":true,"metadata":{}}]}'
+        )
+        orig = TableLog.publish_manifest
+
+        def racing(log, version, manifest):
+            if version == 0 and manifest.get("op") != "rival":
+                orig(log, 0, {"files": [], "n_files": 0, "op": "rival",
+                              "ts": 0.0, "schema": schema})
+            return orig(log, version, manifest)
+
+        monkeypatch.setattr(TableLog, "publish_manifest", racing)
+        paths = {
+            "session": lambda root, files: tt_commit_files(spark, root, files),
+            "arrow": lambda root, files: _commit_files_arrow(
+                root, files, "append"
+            ),
+        }
+        ends = {}
+        for name, commit in paths.items():
+            root = str(tmp_path / name)
+            os.makedirs(f"{root}/files/c")
+            pq.write_table(
+                pa.table({"k": pa.array([1], pa.int64())}),
+                f"{root}/files/c/part-0.parquet",
+            )
+            try:
+                outcome = commit(root, ["files/c/part-0.parquet"])
+            except ConcurrentWriteError:
+                outcome = "ConcurrentWriteError"
+            log = TableLog(root)
+            ends[name] = (
+                outcome,
+                [log.manifest(v)["op"] for v in log.versions()],
+            )
+        assert ends["session"] == ends["arrow"]
+        assert ends["arrow"] == ("ConcurrentWriteError", ["rival"])
+
+    @pytest.mark.parametrize(
+        "kind", ["replace", "append", "rewrite-disjoint", "rewrite-same"]
+    )
+    def test_threads_racing_for_one_version(self, tmp_path, kind):
+        """8 threads behind a barrier each commit on the same head
+        version through TableLog.commit (manifests only — the commit
+        never opens a data file).  Exactly one wins the version; the
+        other 7 follow their kind's policy: a replace (or a rewrite of
+        the same file) raises ConcurrentWriteError, an append or a
+        rewrite of a disjoint file rebases and lands later.  The log
+        holds one manifest per landed commit."""
+        import sys
+        import threading
+
+        from astro_spark.exceptions import ConcurrentWriteError
+
+        n = 8
+        log = TableLog(str(tmp_path / "race"))
+        seed = [f"files/seed/part-{i}.parquet" for i in range(n)]
+        log.commit("create", "create", files=seed, header={"schema": "{}"})
+        base = log.head()
+        barrier = threading.Barrier(n)
+        results: list[object] = [None] * n
+
+        def run(i: int) -> None:
+            files = [f"files/w{i}/part-0.parquet"]
+            barrier.wait(timeout=30)
+            try:
+                if kind == "replace":
+                    results[i] = log.commit("replace", f"w{i}", base, files=files)
+                elif kind == "append":
+                    results[i] = log.commit(
+                        "append", f"w{i}", files=files,
+                        attempt=lambda prev: ({}, {}),
+                    )
+                else:
+                    gone = seed[i] if kind == "rewrite-disjoint" else seed[0]
+                    results[i] = log.commit(
+                        "rewrite", f"w{i}", base, files=files, removed=[gone]
+                    )
+            except ConcurrentWriteError as exc:
+                results[i] = exc
+
+        threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        landed = sorted(r for r in results if isinstance(r, int))
+        lost = [r for r in results if isinstance(r, ConcurrentWriteError)]
+        assert len(landed) + len(lost) == n
+        if kind in ("replace", "rewrite-same"):
+            assert landed == [1] and len(lost) == n - 1
+        else:
+            assert landed == list(range(1, n + 1)) and not lost
+        assert log.versions() == [0] + landed
+        winners = {f"w{i}" for i, r in enumerate(results) if isinstance(r, int)}
+        assert {log.manifest(v)["op"] for v in landed} == winners
+        if kind in ("append", "rewrite-disjoint"):
+            head_files = set(log.resolve(log.head()[1])[0])
+            assert {f"files/w{i}/part-0.parquet" for i in range(n)} <= head_files
 
 
 class TestLineageFacets:

@@ -925,6 +925,40 @@ class TestVersionedParquetDataSource:
                 .option("timestampAsOf", str(mid)) \
                 .option("versionAsOf", "0").load().count()
 
+    def test_stream_commit_tries_the_arrow_commit_once(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """When the Spark-free commit refuses a micro-batch, the stream
+        writer falls back to the session commit straight away — the
+        Arrow commit (which reads every file footer) runs once, not a
+        second time inside the batch writer's commit."""
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        import astro_spark as a
+        from astro_spark.sources import tt_datasource as tds
+
+        root = str(tmp_path / "once")
+        a.tt_create(spark, spark.createDataFrame([(1,)], "k long"), root)
+        os.makedirs(f"{root}/files/s")
+        pq.write_table(
+            pa.table({"k": pa.array([2], pa.int64())}),
+            f"{root}/files/s/part-0.parquet",
+        )
+        calls = []
+
+        def refuse(*args, **kwargs):
+            calls.append(args)
+            raise tds._ArrowCommitUnsupported("refused")
+
+        monkeypatch.setattr(tds, "_commit_files_arrow", refuse)
+        writer = tds._TTStreamWriter(root, overwrite=False)
+        writer.commit([tds._TTWriteMessage(["files/s/part-0.parquet"])], 0)
+        assert len(calls) == 1
+        assert {r.k for r in a.tt_read(spark, root).collect()} == {1, 2}
+
     def test_arrow_commit_corrupt_footer_defers(self, spark, tmp_path):
         """ADVICE r12 #5: pyarrow-level failures (unreadable footer →
         ArrowInvalid/OSError) must surface as _ArrowCommitUnsupported so

@@ -1222,6 +1222,31 @@ class TestAggregateMvStream:
         )
         assert spark.table(phys).select("__batch_id").distinct().count() == 1
 
+    def test_compaction_leaves_no_temp_dir(self, spark, tmp_path, monkeypatch):
+        """The partial compaction stages its fold in a temp dir and
+        removes it once the INSERT OVERWRITE has landed."""
+        import tempfile
+        import uuid
+
+        from astro_spark.streaming import compact_mv_partials
+
+        tmp = tmp_path / "tmp"
+        tmp.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+        mv_name = f"mv_test_{uuid.uuid4().hex[:8]}"
+        phys = f"{mv_name}_partials"
+        spark.createDataFrame(
+            [("a", 1, 0), ("a", 2, 1), ("b", 3, 1)],
+            "event_type string, n long, __batch_id long",
+        ).write.partitionBy("__batch_id").format("parquet").saveAsTable(phys)
+        try:
+            assert compact_mv_partials(spark, mv_name, ["event_type"]) == 2
+            got = {r.event_type: r.n for r in spark.table(phys).collect()}
+            assert got == {"a": 3, "b": 3}
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {phys}")
+        assert not list(tmp.glob("astro_mv_compact_*"))
+
     def test_reused_mv_name_with_fresh_checkpoint_drops_stale_partials(
         self, spark, events_dir, tmp_path
     ):
