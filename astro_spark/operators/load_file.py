@@ -9,27 +9,74 @@ Reference: ``sql/operators/load_file.py:37-406`` + engine half at
 - explicit columns (schema) vs autodetect      (databases/base.py:396-444)
 - nested NDJSON flatten via normalize_config   (load_file.py:205-243)
 
-Dropped by design: the native-path-vs-pandas duality and its fallback
-allowlists (``base.py:523-542,591-637``) — Spark's executor-parallel read
-IS the native path for every store/format; permissive CSV parsing covers
-the "fallback" role.
+Native path (the reference's COPY branch, ``base.py:523-534,591-637``):
+a parquet input that is already what a rewrite would produce becomes
+the table's data files by byte copy — no read→``saveAsTable`` job, and
+the footer schema (``sources.readers.parquet_footers``) means no
+inference job either.  ``_copy_footers`` is the one predicate; every
+condition must hold, else the load takes the rewrite path unchanged:
 
-Scale notes: the write lands as parquet through ``saveAsTable`` with
+- the input is parquet on the local filesystem (staged downloads
+  included) and flat — one file, a glob, or a dir without subdirs, so
+  no partition discovery adds columns;
+- every data file has the same footer schema, and none lies under the
+  target's location (dropping the old table would delete the input);
+- the target is a permanent catalog ``Table`` (a temp view is lazy
+  anyway; a ``VersionedTable`` commits through its log) that is absent
+  or managed, with a local location;
+- ``if_exists="replace"`` (append aligns columns by name through a
+  write), ``columns_names_capitalization="original"`` (renames live in
+  the plan, not the files), and no ``schema``, layout option,
+  ``merge_schema`` or ``rescue_malformed`` — each asks for a rewrite;
+- no column Spark reads differently under a read-side setting that a
+  rewrite would bake in: INT96 (``int96AsTimestamp``, its rebase
+  mode), TIMESTAMP(NANOS) (``nanosAsLong``),
+  un-annotated BINARY under ``binaryAsString``, and DATE/TIMESTAMP
+  values before the calendar-rebase cutoffs in a file no Spark wrote
+  (``datetimeRebaseModeInRead``; the row-group min statistics must
+  prove every value is past it);
+- the layout is no worse than a rewrite's: each file at most
+  ``spark.sql.files.maxPartitionBytes`` (the rewrite would split it)
+  and at most ``defaultParallelism`` files (it would write fewer).
+
+The copy stages every byte in a hidden dir beside the table location
+before it drops the old table, so a copy failure leaves the old table
+intact; a later failure drops the new table and its location.  A crash
+mid-copy leaves only the hidden stage dir.  The copied files keep the
+source's encoding, so they may be larger than Spark's re-encoding.
+
+Scale notes: the rewrite lands as parquet through ``saveAsTable`` with
 partition-parallel tasks; pass ``partition_by`` to lay out big tables for
 partition pruning downstream (something the reference cannot express).
 """
 
 from __future__ import annotations
 
+import dataclasses
+import json
+import os
+import shutil
+import uuid
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..file import File
-from ..sources.readers import read_file
+from ..file import File, FileType
+from ..sources.locations import stage_if_needed
+from ..sources.readers import ParquetFooters, parquet_footers, read_file
 from ..table import Table
 from .cleanup import register_temp_table
 from .timetravel import VersionedTable
+
+# Spark rebases DATE/TIMESTAMP values from files no Spark wrote by
+# ``spark.sql.parquet.datetimeRebaseModeInRead`` — only values before
+# the Julian→Gregorian switch (dates) or 1900 (timestamps, covering
+# every zone's switch offsets) can read differently.
+_REBASE_MIN_DAYS = -141427  # 1582-10-15
+_REBASE_MIN_SECONDS = -2208988800  # 1900-01-01T00:00:00Z
+_UNITS_PER_SECOND = {"milliseconds": 10**3, "microseconds": 10**6}
 
 
 def load_file(
@@ -54,101 +101,278 @@ def load_file(
     if schema is None and output_table is not None and output_table.columns:
         schema = StructType(output_table.columns)
 
-    df = read_file(
-        spark,
-        input_file,
-        schema=schema,
-        columns_names_capitalization=columns_names_capitalization,
-        csv_options=csv_options,
-        merge_schema=merge_schema,
-        rescue_malformed=rescue_malformed,
+    staged = stage_if_needed(input_file.path)
+    source = (
+        input_file
+        if staged == input_file.path
+        else dataclasses.replace(input_file, path=staged)
     )
+    # a returned DataFrame or a temp view reads the staged download
+    # lazily; a written table no longer needs it
+    lazy = output_table is None or (
+        isinstance(output_table, Table) and output_table.temp
+    )
+    df = None
+    try:
+        footers = _copy_footers(
+            spark,
+            source,
+            output_table,
+            if_exists=if_exists,
+            columns_names_capitalization=columns_names_capitalization,
+            schema=schema,
+            layout=(partition_by, bucket_by, cluster_by, zorder_by, target_file_mb),
+            merge_schema=merge_schema,
+            rescue_malformed=rescue_malformed,
+        )
+        if footers is not None:
+            _copy_load(spark, footers, output_table)
+        else:
+            df = read_file(
+                spark,
+                source,
+                schema=schema,
+                columns_names_capitalization=columns_names_capitalization,
+                csv_options=csv_options,
+                merge_schema=merge_schema,
+                rescue_malformed=rescue_malformed,
+            )
+            if isinstance(output_table, VersionedTable):
+                _save_versioned(
+                    spark, df, output_table, if_exists, partition_by,
+                    bucket_by, cluster_by, zorder_by, target_file_mb,
+                )
+            elif output_table is not None:
+                save_dataframe_as_table(
+                    df,
+                    output_table,
+                    if_exists=if_exists,
+                    partition_by=partition_by,
+                    bucket_by=bucket_by,
+                    cluster_by=cluster_by,
+                    zorder_by=zorder_by,
+                    target_file_mb=target_file_mb,
+                )
+    finally:
+        if source is not input_file and not lazy:
+            os.remove(staged)
 
     from .. import lineage
 
-    if output_table is None:
-        if lineage.is_enabled(spark):
-            lineage.emit_load_file(spark, input_file, df, df)
-        return df
-
-    if isinstance(output_table, VersionedTable):
-        # the reference's CTAS USING DELTA shape: loading into a
-        # versioned root commits a version instead of replacing files.
-        # partition_by maps to the log's PARTITIONED BY (round 13) —
-        # one partition value per file, manifest-pruned reads; the
-        # other layout levers stay table-write-only (use
-        # tt_optimize(zorder_by=) for clustering after the load).
-        ignored = [
-            n
-            for n, v in (
-                ("bucket_by", bucket_by),
-                ("cluster_by", cluster_by),
-                ("zorder_by", zorder_by),
-                ("target_file_mb", target_file_mb),
-            )
-            if v
-        ]
-        if ignored:
-            raise ValueError(
-                f"load_file: {', '.join(ignored)} do not apply to a "
-                "VersionedTable target — the log addresses explicit file "
-                "lists, not a Hive layout; use tt_optimize(zorder_by=) "
-                "for clustering after the load"
-            )
-        from ..sources.tt_log import TableLog, _partition_cols_of
-        from .timetravel import save_dataframe_versioned
-
-        target = output_table
-        if partition_by:
-            if (
-                output_table.partition_by is not None
-                and list(output_table.partition_by) != list(partition_by)
-            ):
-                raise ValueError(
-                    "load_file: partition_by disagrees with the "
-                    "VersionedTable's own partition_by"
-                )
-            # an EXISTING table's layout lives in the head manifest
-            # (the append/overwrite paths read it from there, never
-            # from the handle) — a silent partition_by mismatch would
-            # otherwise commit files laid out by the OLD columns while
-            # the caller believes the new ones apply
-            log = TableLog(output_table.root, spark)
-            if log.versions():
-                _v, head = log.head()
-                actual = _partition_cols_of(head)
-                if list(partition_by) != actual:
-                    raise ValueError(
-                        f"load_file: partition_by={list(partition_by)} "
-                        "disagrees with the existing versioned table's "
-                        f"layout {actual} at {output_table.root} — "
-                        "repartitioning an existing table needs "
-                        "CREATE OR REPLACE ... PARTITIONED BY"
-                    )
-            # don't mutate the caller's handle: carry the layout on a
-            # copy (it only matters for the tt_create path)
-            import copy as _copy
-
-            target = _copy.copy(output_table)
-            target.partition_by = list(partition_by)
-        save_dataframe_versioned(spark, df, target, if_exists=if_exists)
-        if lineage.is_enabled(spark):
-            lineage.emit_load_file(spark, input_file, output_table, df)
-        return output_table
-
-    save_dataframe_as_table(
-        df,
-        output_table,
-        if_exists=if_exists,
-        partition_by=partition_by,
-        bucket_by=bucket_by,
-        cluster_by=cluster_by,
-        zorder_by=zorder_by,
-        target_file_mb=target_file_mb,
-    )
+    result = df if output_table is None else output_table
     if lineage.is_enabled(spark):
-        lineage.emit_load_file(spark, input_file, output_table, df)
-    return output_table
+        lineage.emit_load_file(spark, input_file, result, df)
+    return result
+
+
+def _save_versioned(
+    spark: SparkSession,
+    df: DataFrame,
+    output_table: VersionedTable,
+    if_exists: str,
+    partition_by: list[str] | None,
+    bucket_by: tuple[int, list[str]] | None,
+    cluster_by: list[str] | tuple[int, list[str]] | None,
+    zorder_by: list[str] | tuple[int, list[str]] | None,
+    target_file_mb: int | float | None,
+) -> None:
+    """Load into a versioned root: the reference's CTAS USING DELTA
+    shape — a commit of a version instead of replaced files.
+    partition_by maps to the log's PARTITIONED BY (one partition value
+    per file, manifest-pruned reads); the other layout levers stay
+    table-write-only (use tt_optimize(zorder_by=) for clustering after
+    the load)."""
+    ignored = [
+        n
+        for n, v in (
+            ("bucket_by", bucket_by),
+            ("cluster_by", cluster_by),
+            ("zorder_by", zorder_by),
+            ("target_file_mb", target_file_mb),
+        )
+        if v
+    ]
+    if ignored:
+        raise ValueError(
+            f"load_file: {', '.join(ignored)} do not apply to a "
+            "VersionedTable target — the log addresses explicit file "
+            "lists, not a Hive layout; use tt_optimize(zorder_by=) "
+            "for clustering after the load"
+        )
+    from ..sources.tt_log import TableLog, _partition_cols_of
+    from .timetravel import save_dataframe_versioned
+
+    target = output_table
+    if partition_by:
+        if (
+            output_table.partition_by is not None
+            and list(output_table.partition_by) != list(partition_by)
+        ):
+            raise ValueError(
+                "load_file: partition_by disagrees with the "
+                "VersionedTable's own partition_by"
+            )
+        # an EXISTING table's layout lives in the head manifest
+        # (the append/overwrite paths read it from there, never
+        # from the handle) — a silent partition_by mismatch would
+        # otherwise commit files laid out by the OLD columns while
+        # the caller believes the new ones apply
+        log = TableLog(output_table.root, spark)
+        if log.versions():
+            _v, head = log.head()
+            actual = _partition_cols_of(head)
+            if list(partition_by) != actual:
+                raise ValueError(
+                    f"load_file: partition_by={list(partition_by)} "
+                    "disagrees with the existing versioned table's "
+                    f"layout {actual} at {output_table.root} — "
+                    "repartitioning an existing table needs "
+                    "CREATE OR REPLACE ... PARTITIONED BY"
+                )
+        # don't mutate the caller's handle: carry the layout on a
+        # copy (it only matters for the tt_create path)
+        import copy as _copy
+
+        target = _copy.copy(output_table)
+        target.partition_by = list(partition_by)
+    save_dataframe_versioned(spark, df, target, if_exists=if_exists)
+
+
+def _copy_footers(
+    spark: SparkSession,
+    source: File,
+    table: Table | VersionedTable | None,
+    *,
+    if_exists: str,
+    columns_names_capitalization: str,
+    schema: StructType | None,
+    layout: tuple,
+    merge_schema: bool,
+    rescue_malformed: bool,
+) -> ParquetFooters | None:
+    """The copy-path predicate (module docstring): the input's footers
+    when ``load_file`` may build ``table`` from byte copies of its
+    files, else None.  The argument checks run before any listing."""
+    if (
+        not isinstance(table, Table)
+        or table.temp
+        or (source.filetype or FileType.PARQUET) != FileType.PARQUET
+        or if_exists != "replace"
+        or columns_names_capitalization != "original"
+        or schema is not None
+        or any(v is not None for v in layout)
+        or merge_schema
+        or rescue_malformed
+    ):
+        return None
+    footers = parquet_footers(spark, source.path)
+    if footers is None or not all(f.startswith("file:") for f in footers.files):
+        return None
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    if (
+        len(footers.files) > spark.sparkContext.defaultParallelism
+        or max(footers.sizes) > sql_conf.filesMaxPartitionBytes()
+    ):
+        return None
+    if spark.catalog.tableExists(table.qualified_name) and (
+        spark.catalog.getTable(table.qualified_name).tableType != "MANAGED"
+    ):
+        return None
+    location = _managed_location(spark, table)
+    if location is None:
+        return None
+    inside = os.path.realpath(location) + os.sep
+    if any(os.path.realpath(_local(f)).startswith(inside) for f in footers.files):
+        return None
+    binary_as_string = sql_conf.isParquetBinaryAsString()
+    if any(_setting_dependent(_local(f), binary_as_string) for f in footers.files):
+        return None
+    return footers
+
+
+def _setting_dependent(path: str, binary_as_string: bool) -> bool:
+    """Whether some column of the parquet file at ``path`` reads
+    differently under a read-side setting a rewrite would bake in."""
+    meta = pq.read_metadata(path)
+    spark_written = b"org.apache.spark.version" in (meta.metadata or {})
+    rebased = []  # (column index, lowest raw value that reads alike)
+    for i in range(meta.num_columns):
+        col = meta.schema.column(i)
+        logical = col.logical_type.type
+        if col.physical_type == "INT96":
+            return True
+        if logical == "TIMESTAMP":
+            unit = json.loads(col.logical_type.to_json())["timeUnit"]
+            if unit not in _UNITS_PER_SECOND:  # NANOS: nanosAsLong
+                return True
+            if not spark_written:
+                rebased.append((i, _REBASE_MIN_SECONDS * _UNITS_PER_SECOND[unit]))
+        elif logical == "DATE" and not spark_written:
+            rebased.append((i, _REBASE_MIN_DAYS))
+        elif col.physical_type == "BYTE_ARRAY" and logical == "NONE" and binary_as_string:
+            return True
+    for r in range(meta.num_row_groups):
+        group = meta.row_group(r)
+        for i, lowest in rebased:
+            stats = group.column(i).statistics
+            # no min/max is fine only for an all-null chunk
+            if stats is None or (
+                stats.min_raw < lowest if stats.has_min_max else stats.num_values > 0
+            ):
+                return True
+    return False
+
+
+def _local(uri: str) -> str:
+    """Local path of a ``file:`` URI as Hadoop prints it."""
+    path = uri[len("file:"):]
+    return path[2:] if path.startswith("//") else path
+
+
+def _default_location(spark: SparkSession, table: Table):
+    """The catalog's managed location of ``table`` (a ``java.net.URI``);
+    creates the table's database when it is missing."""
+    if table.metadata.schema:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {table.metadata.schema}")
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(table.qualified_name)
+    return state.catalog().defaultTablePath(ident)
+
+
+def _managed_location(spark: SparkSession, table: Table) -> str | None:
+    """``table``'s managed location as a local path, or None when the
+    warehouse is not on the local filesystem."""
+    uri = _default_location(spark, table)
+    return uri.getPath() if uri.getScheme() == "file" else None
+
+
+def _copy_load(spark: SparkSession, footers: ParquetFooters, table: Table) -> None:
+    """Replace ``table`` with a managed parquet table whose data files
+    are byte copies of ``footers.files``.  Copy into a hidden stage dir
+    beside the location, drop the old table, create the new one with
+    the footer schema, move the copies in, refresh."""
+    location = _managed_location(spark, table)
+    token = uuid.uuid4().hex
+    stage = os.path.join(os.path.dirname(location), f".astro_load_{token}")
+    names = [f"part-{i:05d}-{token}.parquet" for i in range(len(footers.files))]
+    os.makedirs(stage)
+    try:
+        for f, n in zip(footers.files, names):
+            shutil.copyfile(_local(f), os.path.join(stage, n))
+        name = table.qualified_name
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        try:
+            _delete_orphan_location(spark, table)
+            spark.catalog.createTable(name, source="parquet", schema=footers.schema)
+            for n in names:
+                os.replace(os.path.join(stage, n), os.path.join(location, n))
+            spark.catalog.refreshTable(name)
+        except BaseException:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            shutil.rmtree(location, ignore_errors=True)
+            raise
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def save_dataframe_as_table(
@@ -293,17 +517,7 @@ def _repartition_to_target(
 
 
 def _delete_orphan_location(spark: SparkSession, table: Table) -> None:
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    if not warehouse:
-        return
-    db = table.metadata.schema
-    location = (
-        f"{warehouse.rstrip('/')}/{db}.db/{table.name}"
-        if db
-        else f"{warehouse.rstrip('/')}/{table.name}"
-    )
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(location)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(_default_location(spark, table))
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(jpath):
         fs.delete(jpath, True)

@@ -75,6 +75,7 @@ from ..sources.tt_log import (
     _partition_values,
     _stats_cols_of,
 )
+from ..sources.readers import read_parquet
 from ..sources.writers import _hadoop_fs
 
 
@@ -178,7 +179,7 @@ def _file_stats(
 
     if not files or not stats_cols:
         return {}
-    df = spark.read.parquet(*[_abs(root, f) for f in files])
+    df = read_parquet(spark, [_abs(root, f) for f in files])
     for c in stats_cols:
         t = df.schema[c].dataType.simpleString()
         if t not in _STATS_TYPES and not t.startswith("decimal"):
@@ -658,7 +659,7 @@ def tt_commit_files(
         raise ValueError("tt_commit_files: no files to commit")
     files = sorted(new_files)
     # the footer read IS the read-back: the files are what they are
-    df = spark.read.parquet(*[_abs(log.root, f) for f in files])
+    df = read_parquet(spark, [_abs(log.root, f) for f in files])
     if not log.versions():
         return log.commit(
             "create", "create", files=files, header={"schema": _schema_json(df)}

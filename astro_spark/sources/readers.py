@@ -15,13 +15,22 @@ Scale notes:
   ``infer_sample_rows`` below: we infer on a LIMITed copy, then re-read the
   full input with the locked schema so inference cost is O(sample), not
   O(input).
+- Parquet schemas come from the footers, read on the driver
+  (``parquet_footers``): Spark's own inference reads the same footer
+  but through a one-task job, which dominates a small load.  Inputs
+  past ``spark.sql.sources.parallelPartitionDiscovery.threshold`` files
+  keep Spark's inference, which lists them with a job anyway.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
+from typing import NamedTuple
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 from ..file import File, FileType
 from ..plans.flatten import flatten_structs
@@ -58,10 +67,14 @@ def read_file(
     path = stage_if_needed(file.path)
 
     if ftype == FileType.PARQUET:
+        if schema is None and not merge_schema:
+            footers = parquet_footers(spark, path)
+            schema = footers.schema if footers else None
         # merge_schema: schema evolution across files (drifted columns
         # union into one schema, absent values read as NULL) — footer
         # reconciliation only, no data rewrite
-        df = spark.read.option("mergeSchema", str(merge_schema).lower()).parquet(path)
+        reader = spark.read.option("mergeSchema", str(merge_schema).lower())
+        df = (reader if schema is None else reader.schema(schema)).parquet(path)
     elif ftype == FileType.ORC:
         if schema is not None:
             df = spark.read.schema(schema).orc(path)
@@ -117,6 +130,105 @@ def read_file(
     elif columns_names_capitalization == "upper":
         df = df.toDF(*[c.upper() for c in df.columns])
     return df
+
+
+class ParquetFooters(NamedTuple):
+    """A flat parquet input whose data files all carry one schema."""
+
+    files: list[str]  # qualified data-file paths, sorted
+    sizes: list[int]  # their byte lengths
+    schema: StructType  # what ``spark.read.parquet`` infers for them
+
+
+def parquet_footers(
+    spark: SparkSession, paths: str | Sequence[str]
+) -> ParquetFooters | None:
+    """List a parquet input and read its footers on the driver.
+
+    The schema comes from Spark's own converter
+    (``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` built from the session's SQLConf),
+    so it is the schema ``spark.read.parquet`` would infer, without the
+    inference job.  Returns None — read through Spark's inference —
+    when the input is not flat (a subdirectory means partition
+    discovery), holds summary files, names a hidden file, has more
+    than ``spark.sql.sources.parallelPartitionDiscovery.threshold`` data
+    files, or its footers disagree; also on any JVM-side error, so a
+    missing or corrupt input raises Spark's usual error from the read.
+    """
+    try:
+        return _read_footers(spark, [paths] if isinstance(paths, str) else list(paths))
+    except Py4JError:
+        return None
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing filter (``InMemoryFileIndex.shouldFilterOutPathName``)."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _read_footers(spark: SparkSession, paths: list[str]) -> ParquetFooters | None:
+    jvm, jss = spark._jvm, spark._jsparkSession
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    HPath = jvm.org.apache.hadoop.fs.Path
+    hconf = jss.sessionState().newHadoopConf()
+    limit = jss.sessionState().conf().parallelPartitionDiscoveryThreshold()
+    files = []
+    for p in paths:
+        jpath = HPath(p)
+        fs = jpath.getFileSystem(hconf)
+        matches = fs.globStatus(jpath)
+        if not matches:
+            return None
+        for st in matches:
+            if _hidden(st.getPath().getName()):
+                return None
+            for child in fs.listStatus(st.getPath()) if st.isDirectory() else [st]:
+                name = child.getPath().getName()
+                if name.startswith(("_metadata", "_common_metadata")):
+                    return None
+                if _hidden(name):
+                    continue
+                if child.isDirectory():
+                    return None
+                files.append((child.getPath().toString(), child.getLen()))
+                if len(files) > limit:
+                    return None
+    if not files:
+        return None
+    files.sort()
+    converter = parquet.ParquetToSparkSchemaConverter(jss.sessionState().conf())
+    skip_row_groups = (
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    )
+    schema = None
+    for f, _size in files:
+        jf = HPath(f)
+        meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            hconf, jf, skip_row_groups
+        )
+        footer = jvm.org.apache.parquet.hadoop.Footer(jf, meta)
+        # file sources read every column as nullable
+        one = parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+        one = one.asNullable().json()
+        if schema is not None and one != schema:
+            return None
+        schema = one
+    return ParquetFooters(
+        [f for f, _ in files], [n for _, n in files], _parse_datatype_json_string(schema)
+    )
+
+
+def read_parquet(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the footer schema supplied when
+    ``parquet_footers`` applies, so building the DataFrame starts no job."""
+    footers = parquet_footers(spark, paths)
+    reader = spark.read if footers is None else spark.read.schema(footers.schema)
+    return reader.parquet(*([paths] if isinstance(paths, str) else paths))
 
 
 def _infer_csv_schema_capped(

@@ -59,6 +59,226 @@ class TestLoadFile:
         assert df.count() == 10
 
 
+def _type_matrix(nanos: bool = True):
+    """A pyarrow table with one column per parquet type family Spark
+    converts."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+
+    ts = [datetime.datetime(2024, 3, 1, 10, 0, 0, 123000), None]
+    cols = {
+        "i8": pa.array([-3, None], pa.int8()),
+        "u8": pa.array([250, 1], pa.uint8()),
+        "u32": pa.array([4_000_000_000, None], pa.uint32()),
+        "u64": pa.array([2**63 + 5, 1], pa.uint64()),
+        "f": pa.array([1.5, None], pa.float32()),
+        "dec": pa.array([decimal.Decimal("12.34"), None], pa.decimal128(9, 2)),
+        "s": pa.array(["a", None]),
+        "b": pa.array([b"\x00x", None], pa.binary()),
+        "d": pa.array([datetime.date(2024, 3, 1), None], pa.date32()),
+        "lst": pa.array([[1, 2], None], pa.list_(pa.int32())),
+        "st": pa.array([{"x": 1, "y": "q"}, None], pa.struct([("x", pa.int64()), ("y", pa.string())])),
+        "m": pa.array([[("k", 1)], None], pa.map_(pa.string(), pa.int32())),
+        "nul": pa.array([None, None], pa.null()),
+        "MixedCase": pa.array([1, 2], pa.int64()),
+    }
+    for unit in ("ms", "us") + (("ns",) if nanos else ()):
+        cols[f"ts_{unit}"] = pa.array(ts, pa.timestamp(unit))
+        cols[f"ts_{unit}_tz"] = pa.array(ts, pa.timestamp(unit, tz="UTC"))
+    return pa.table(cols)
+
+
+def _write_parquet(table, path) -> str:
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, str(path))
+    return str(path)
+
+
+def _fallback_inputs(spark, d) -> tuple[str, str, str]:
+    """Parquet inputs the copy path declines: a Hive-partitioned dir, a
+    glob over files with differing schemas, and a TIMESTAMP(NANOS) file
+    (one footer schema, but its column reads as longs only under
+    ``nanosAsLong``)."""
+    import pyarrow as pa
+
+    part = str(d / "part")
+    spark.range(6).selectExpr("id", "id % 2 AS k").write.partitionBy("k").parquet(part)
+    mixed = d / "mixed"
+    mixed.mkdir(parents=True)
+    _write_parquet(pa.table({"x": [1]}), mixed / "a.parquet")
+    _write_parquet(pa.table({"x": [2], "y": ["b"]}), mixed / "b.parquet")
+    nanos = _write_parquet(_type_matrix().select(["s", "ts_ns"]), d / "ns.parquet")
+    return part, str(mixed / "*.parquet"), nanos
+
+
+def _jobs_during(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` started: the status tracker's job-id
+    delta, read after the listener bus drained."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    fn()
+    bus.waitUntilEmpty()
+    return len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+
+def _spark_written(spark, table: str) -> bool:
+    """Whether the table's data files came from a Spark write (the
+    rewrite path) rather than byte copies of a pyarrow-written source."""
+    import pyarrow.parquet as pq
+
+    files = spark.table(table).inputFiles()
+    assert files
+    return all(
+        b"org.apache.spark.version" in (pq.read_metadata(f.removeprefix("file:")).metadata or {})
+        for f in files
+    )
+
+
+class TestNativeParquetLoad:
+    """load_file's native parquet path: footer schema + file-copy load."""
+
+    def test_footer_schema_matches_inference(self, spark, tmp_path):
+        from astro_spark.sources.readers import parquet_footers
+
+        src = _write_parquet(_type_matrix(), tmp_path / "matrix.parquet")
+        spark_dir = str(tmp_path / "spark_dir")
+        spark.range(40).selectExpr(
+            "id", "CAST(id AS DECIMAL(20, 3)) AS dec", "DATE '2024-01-01' + CAST(id AS INT) AS d",
+            "named_struct('a', id, 'B', CAST(id AS STRING)) AS st",
+        ).repartition(3).write.parquet(spark_dir)
+        for path in (src, spark_dir, str(tmp_path / "*.parquet")):
+            footers = parquet_footers(spark, path)
+            assert footers is not None, path
+            assert footers.schema == spark.read.parquet(path).schema, path
+        assert len(parquet_footers(spark, spark_dir).files) == 3
+        assert parquet_footers(spark, str(tmp_path / "absent.parquet")) is None
+        # partition discovery and disagreeing footers read through
+        # Spark's inference
+        part, mixed, _nanos = _fallback_inputs(spark, tmp_path / "fallback")
+        assert parquet_footers(spark, part) is None
+        assert parquet_footers(spark, mixed) is None
+
+    def test_parquet_honors_explicit_schema(self, spark, sf_dir):
+        from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+        schema = StructType(
+            [StructField("r_name", StringType()), StructField("r_regionkey", IntegerType())]
+        )
+        df = a.load_file(spark, f"{sf_dir}/region.parquet", schema=schema)
+        assert df.columns == ["r_name", "r_regionkey"]
+        assert df.schema == schema
+        t = a.Table("t_native_cols", columns=list(schema.fields))
+        a.load_file(spark, f"{sf_dir}/region.parquet", output_table=t)
+        assert spark.table(t.name).columns == ["r_name", "r_regionkey"]
+        assert t.row_count(spark) == 5
+
+    def test_copy_load_equals_source(self, spark, tmp_path):
+        single = _write_parquet(_type_matrix(nanos=False), tmp_path / "m.parquet")
+        multi = str(tmp_path / "multi")
+        spark.range(30).selectExpr("id", "CAST(id AS STRING) AS s").repartition(2).write.parquet(multi)
+        for i, src in enumerate((single, multi)):
+            name = f"t_native_copy_{i}"
+            a.load_file(spark, src, output_table=a.Table(name))
+            got, want = spark.table(name), spark.read.parquet(src)
+            assert got.schema == want.schema
+            assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+            assert len(got.inputFiles()) == (1 if i == 0 else 2)
+        assert not _spark_written(spark, "t_native_copy_0")
+        t = a.Table("t_native_copy_db", metadata=a.Metadata(schema="native_db"))
+        a.load_file(spark, single, output_table=t)
+        assert t.row_count(spark) == 2 and not _spark_written(spark, t.qualified_name)
+
+    def test_parquet_loads_start_no_job(self, spark, sf_dir):
+        src = f"{sf_dir}/nation.parquet"
+        t = a.Table("t_native_jobs")
+        a.load_file(spark, src, output_table=t)  # warm the catalog path
+        load_jobs = _jobs_during(spark, lambda: a.load_file(spark, src, output_table=t))
+        read_jobs = _jobs_during(spark, lambda: a.load_file(spark, src))
+        assert (load_jobs, read_jobs) == (0, 0)
+        assert t.row_count(spark) == 25
+
+    def test_fallbacks_match_rewrite(self, spark, sf_dir, tmp_path):
+        """Each input or option the copy path declines is loaded by the
+        read→saveAsTable rewrite, with its usual result."""
+        for i, src in enumerate(_fallback_inputs(spark, tmp_path)):
+            name = f"t_native_fb_{i}"
+            a.load_file(spark, src, output_table=a.Table(name))
+            got, want = spark.table(name), spark.read.parquet(src)
+            assert _spark_written(spark, name), src
+            assert sorted(got.columns) == sorted(want.columns)
+            assert sorted(map(repr, got.select(*want.columns).collect())) == sorted(
+                map(repr, want.collect())
+            )
+        region = f"{sf_dir}/region.parquet"
+        t = a.Table("t_native_fb_upper")
+        a.load_file(spark, region, output_table=t, columns_names_capitalization="upper")
+        assert spark.table(t.name).columns == ["R_REGIONKEY", "R_NAME"]
+        assert _spark_written(spark, t.name)
+        t = a.Table("t_native_fb_layout")
+        a.load_file(spark, region, output_table=t, partition_by=["r_regionkey"])
+        parts = [c.name for c in spark.catalog.listColumns(t.name) if c.isPartition]
+        assert parts == ["r_regionkey"] and t.row_count(spark) == 5
+        t = a.Table("t_native_fb_append")
+        a.load_file(spark, region, output_table=t)
+        a.load_file(spark, region, output_table=t, if_exists="append")
+        assert t.row_count(spark) == 10
+        assert len(spark.table(t.name).inputFiles()) == 2
+
+    def test_copy_failure_keeps_old_table(self, spark, sf_dir, monkeypatch):
+        import shutil
+
+        t = a.Table("t_native_fail")
+        a.load_file(spark, f"{sf_dir}/region.parquet", output_table=t)
+        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+        def boom(*args, **kwargs):
+            raise OSError("disk full")
+
+        with monkeypatch.context() as m:
+            m.setattr(shutil, "copyfile", boom)
+            with pytest.raises(OSError, match="disk full"):
+                a.load_file(spark, f"{sf_dir}/nation.parquet", output_table=t)
+        assert t.row_count(spark) == 5
+        assert not [n for n in os.listdir(warehouse) if n.startswith(".astro_load_")]
+        a.load_file(spark, f"{sf_dir}/nation.parquet", output_table=t)
+        assert t.row_count(spark) == 25
+
+    def test_failure_after_drop_leaves_no_table(self, spark, sf_dir, monkeypatch):
+        t = a.Table("t_native_fail_late")
+        a.load_file(spark, f"{sf_dir}/region.parquet", output_table=t)
+        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+        def boom(*args, **kwargs):
+            raise OSError("rename failed")
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", boom)
+            with pytest.raises(OSError, match="rename failed"):
+                a.load_file(spark, f"{sf_dir}/nation.parquet", output_table=t)
+        assert not spark.catalog.tableExists(t.name)
+        assert not os.path.exists(os.path.join(warehouse, t.name))
+        assert not [n for n in os.listdir(warehouse) if n.startswith(".astro_load_")]
+        a.load_file(spark, f"{sf_dir}/nation.parquet", output_table=t)
+        assert t.row_count(spark) == 25
+
+    def test_table_independent_of_source(self, spark, sf_dir, tmp_path):
+        import shutil
+
+        src = str(tmp_path / "n.parquet")
+        shutil.copyfile(f"{sf_dir}/nation.parquet", src)
+        t = a.Table("t_native_indep")
+        a.load_file(spark, src, output_table=t)
+        shutil.copyfile(f"{sf_dir}/region.parquet", src)
+        spark.catalog.refreshTable(t.name)
+        assert t.row_count(spark) == 25
+        assert "n_name" in spark.table(t.name).columns
+
+
 class TestTransform:
     def test_decorator(self, spark, nation_table):
         @a.transform

@@ -128,5 +128,8 @@ def test_oracle_dtype_parity(spark, sf_dir, duck):
         results = list(pool.map(check_or_name, names))
     bad = [line for r in results if isinstance(r, list) for line in r]
     for name in (r for r in results if isinstance(r, str)):
-        bad.extend(check(name))
+        try:
+            bad.extend(check(name))
+        except Exception as exc:
+            bad.append(f"{name}: {exc!r}")
     assert bad == [], "\n".join(bad)

@@ -3,6 +3,7 @@ stubs, QueryModifier."""
 
 from __future__ import annotations
 
+import contextlib
 import http.server
 import os
 import threading
@@ -164,18 +165,50 @@ class TestLocations:
         """Serve a CSV over localhost HTTP; load_file stages + reads it."""
         src = str(tmp_path / "n.csv")
         a.export_to_file(spark, read_table(spark, sf_dir, "nation"), src)
-        handler = lambda *args: http.server.SimpleHTTPRequestHandler(  # noqa: E731
-            *args, directory=str(tmp_path)
-        )
-        httpd = http.server.HTTPServer(("127.0.0.1", 0), handler)
-        port = httpd.server_address[1]
-        t = threading.Thread(target=httpd.serve_forever, daemon=True)
-        t.start()
-        try:
+        with _http_server(tmp_path) as port:
             df = a.load_file(spark, f"http://127.0.0.1:{port}/n.csv")
             assert df.count() == 25 and "n_nationkey" in df.columns
-        finally:
-            httpd.shutdown()
+
+    @pytest.mark.parametrize("fmt", ["parquet", "csv"])
+    def test_table_load_removes_staged_download(
+        self, spark, sf_dir, tmp_path, monkeypatch, fmt
+    ):
+        """A download staged for a table load is removed once the table
+        is written — parquet takes the copy path, CSV the rewrite; a
+        returned DataFrame still reads its staged file lazily."""
+        import tempfile
+
+        served, staging = tmp_path / "served", tmp_path / "staging"
+        served.mkdir()
+        staging.mkdir()
+        nation = read_table(spark, sf_dir, "nation")
+        a.export_to_file(spark, nation, str(served / f"n.{fmt}"))
+        monkeypatch.setattr(tempfile, "tempdir", str(staging))
+        t = a.Table(f"t_staged_{fmt}")
+        with _http_server(served) as port:
+            url = f"http://127.0.0.1:{port}/n.{fmt}"
+            a.load_file(spark, url, output_table=t)
+            assert t.row_count(spark) == 25
+            assert list(staging.glob("astro_stage_*")) == []
+            df = a.load_file(spark, url)
+            assert len(list(staging.glob("astro_stage_*"))) == 1
+            assert df.count() == 25
+
+
+@contextlib.contextmanager
+def _http_server(directory):
+    """Serve ``directory`` over localhost HTTP; yields the port."""
+    handler = lambda *args: http.server.SimpleHTTPRequestHandler(  # noqa: E731
+        *args, directory=str(directory)
+    )
+    httpd = http.server.HTTPServer(("127.0.0.1", 0), handler)
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
+    try:
+        yield httpd.server_address[1]
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
 
 
 class TestCappedInference:
